@@ -13,9 +13,14 @@ Layout (mirrors `s3://bucket/<env>/<service>/<ts>/`,
     <root>/<env>/<service>/<snapshot_ts>/_MANIFEST.json
 
 Scale notes:
-- Content hash = sum of per-row xxhash64 — computed distributed, one
-  aggregate per table, no data through the driver (the reference's
+- Fingerprint = (row count, sum of per-row xxhash64), observed with
+  `DataFrame.observe` on a job that already scans the rows: one scan,
+  one job, no shuffle and no data through the driver (the reference's
   "server-side execution" pattern, /root/reference/backup.sh:119-120).
+  The parquet write observes the written fingerprint; one noop-sink
+  scan of the read-back yields the stored one, and the two must agree
+  (A18: a lossy or empty write fails the snapshot). The source is only
+  fingerprinted when a base manifest needs the comparison.
 - Writes go through `df.write.parquet` so a 1000-executor cluster
   writes all partitions in parallel; `partition_cols` lets downstream
   reads prune (e.g. snapshot events by event_type).
@@ -28,9 +33,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datapipeline_scripts_spark import catalog
@@ -41,15 +47,31 @@ LOCK_NAME = "_LOCK"
 CHECKINS_NAME = "_CHECKINS.jsonl"
 
 
-def content_hash(df: DataFrame) -> int:
-    """Order-insensitive table hash: sum of per-row xxhash64 over all
-    columns (cast to string for type stability). Distributed partial
-    aggregation; constant driver memory."""
-    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
-    # accumulate in decimal(38,0): a plain long sum overflows (ANSI mode
-    # raises); reduce mod 2^64 at the end for a compact stable value
-    out = df.agg(F.sum(row_hash.cast("decimal(38,0)")).alias("h")).collect()[0]["h"]
-    return int(out) % (1 << 64) if out is not None else 0
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with its fingerprint riding whatever action runs it: the row
+    count and an order-insensitive content hash, the sum of per-row
+    xxhash64 over all columns in name order, cast to string for type
+    stability. The sum accumulates in decimal(38,0) because a plain
+    long sum overflows (ANSI mode raises)."""
+    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in sorted(df.columns)])
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n_rows"), F.sum(row_hash.cast("decimal(38,0)")).alias("h"))
+    return observed, obs
+
+
+def _fingerprint_of(obs: Observation) -> tuple[int, int]:
+    """(n_rows, content_hash) of a finished observed action; the hash is
+    reduced mod 2^64 for a compact stable value (0 for no rows)."""
+    m = obs.get
+    return m["n_rows"], int(m["h"]) % (1 << 64) if m["h"] is not None else 0
+
+
+def fingerprint(df: DataFrame) -> tuple[int, int]:
+    """(n_rows, content_hash) of `df` in one scan: one job, no shuffle,
+    constant driver memory."""
+    observed, obs = _observed(df)
+    observed.write.format("noop").mode("overwrite").save()
+    return _fingerprint_of(obs)
 
 
 class SnapshotLockError(RuntimeError):
@@ -123,13 +145,21 @@ def snapshot(
             base = json.load(fh)
     lock_path = _acquire_lock(snap_root, snapshot_ts)
     snap_dir = os.path.join(snap_root, snapshot_ts)
+    # a failed attempt must not leave a manifest-less snapshot behind for
+    # retries (each with a fresh timestamp) to pile up; a directory that
+    # predates this call is never ours to remove
+    created_dir = not os.path.exists(snap_dir)
+    manifest_written = False
     try:
 
         def _snap_table(name: str) -> tuple[str, dict]:
             df = catalog.load_table(spark, sf_dir, name)
-            src_hash = content_hash(df.select(sorted(df.columns)))
             base_entry = (base or {}).get("tables", {}).get(name)
-            if base_entry and base_entry["content_hash"] == src_hash and base_entry["schema"] == df.schema.json():
+            if (
+                base_entry
+                and base_entry["schema"] == df.schema.json()
+                and base_entry["content_hash"] == fingerprint(df)[1]
+            ):
                 # unchanged since the base snapshot: record a pointer,
                 # skip the write entirely (differential backup). If the
                 # base entry is itself a pointer (chained incrementals),
@@ -140,19 +170,17 @@ def snapshot(
                     "based_on": base_entry.get("based_on", base["snapshot_ts"]),
                 }
             target = os.path.join(snap_dir, name)
-            writer = df.write.mode("error")
+            observed, obs = _observed(df)
+            writer = observed.write.mode("error")
             for col in (partition_cols or {}).get(name, []):
                 writer = writer.partitionBy(col)
             writer.parquet(target)
+            written = _fingerprint_of(obs)
             restored = spark.read.parquet(target)
-            n = restored.count()
-            if n == 0 and df.limit(1).count() > 0:  # A18 non-empty validation
-                raise RuntimeError(f"snapshot of {name} is empty")
-            return name, {
-                "n_rows": n,
-                "content_hash": content_hash(restored.select(sorted(restored.columns))),
-                "schema": restored.schema.json(),
-            }
+            n, h = fingerprint(restored)
+            if (n, h) != written:  # A18: the artifact must hold what was written
+                raise RuntimeError(f"snapshot of {name}: read-back (rows, hash) {(n, h)} != written {written}")
+            return name, {"n_rows": n, "content_hash": h, "schema": restored.schema.json()}
 
         table_entries: dict[str, dict] = {}
         if max_workers > 1:
@@ -178,9 +206,12 @@ def snapshot(
         os.makedirs(snap_dir, exist_ok=True)
         with open(os.path.join(snap_dir, MANIFEST_NAME), "w") as fh:
             json.dump(manifest, fh, indent=2)
+        manifest_written = True
         check_in(snap_root, {"ok": True, "snapshot_ts": snapshot_ts, "n_tables": len(table_entries)})
         return snap_dir
     finally:
+        if created_dir and not manifest_written:
+            shutil.rmtree(snap_dir, ignore_errors=True)
         os.unlink(lock_path)  # A4 guaranteed cleanup
 
 

@@ -6,7 +6,11 @@ restoring into it with abort-on-first-error
 /root/reference/psql-backups.sh:222). Here: read the snapshot back,
 load it into a scratch warehouse directory, and assert row counts,
 schemas and content hashes against the manifest — then tear the scratch
-down in a `finally` (A4/A22).
+down in a `finally` (A4/A22). Each restored table costs one write and
+one fingerprint scan (`snapshot.fingerprint`: rows and content hash
+observed together on a noop sink); the snapshot itself already checked
+its write against its read-back, so a mismatch here means the artifact
+changed or the restore lost data.
 
 A19/A20 are made real: `include`/`exclude` restore only listed tables
 (`pg_restore -L list`), and `drop_line_pattern` filters rows whose text
@@ -22,10 +26,10 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_scripts_spark.pipeline.snapshot import MANIFEST_NAME, content_hash
+from datapipeline_scripts_spark.pipeline.snapshot import MANIFEST_NAME, fingerprint
 
 
 class RestoreVerifyError(RuntimeError):
@@ -55,7 +59,8 @@ def verify_snapshot(
     """Full restore round-trip: snapshot → scratch warehouse → manifest
     parity. `drop_line_pattern` maps table → (column, regex) rows to
     filter out during restore (counts are then checked as
-    original - dropped)."""
+    original - dropped, with the dropped count observed on the restore
+    write itself)."""
     manifest_path = os.path.join(snapshot_dir, MANIFEST_NAME)
     with open(manifest_path) as fh:
         manifest = json.load(fh)
@@ -73,30 +78,30 @@ def verify_snapshot(
             if "based_on" in expect:
                 data_dir = os.path.join(os.path.dirname(snapshot_dir.rstrip("/")), expect["based_on"])
             src = spark.read.parquet(os.path.join(data_dir, name))
-            dropped = 0
+            drop_obs = None
             if drop_line_pattern and name in drop_line_pattern:
                 col, pattern = drop_line_pattern[name]
                 # NULLs must be KEPT (and not counted as dropped): a bare
                 # ~rlike filters NULL rows out silently, which made the
                 # rows == expect - dropped check spuriously fail (ADVICE r01)
                 matches = F.col(col).isNotNull() & F.col(col).rlike(pattern)
-                dropped = src.filter(matches).count()
-                src = src.filter(~matches)
+                # the dropped count rides the restore write: no second scan
+                drop_obs = Observation()
+                src = src.observe(drop_obs, F.count_if(matches).alias("dropped")).filter(~matches)
             target = os.path.join(scratch_dir, name)
             src.write.mode("error").parquet(target)  # abort-on-first-error
+            dropped = drop_obs.get["dropped"] if drop_obs is not None else 0
             restored = spark.read.parquet(target)
-            n = restored.count()
+            n, h = fingerprint(restored)
             if n != expect["n_rows"] - dropped:
                 result.issues.append(f"{name}: rows {n} != manifest {expect['n_rows']} - dropped {dropped}")
                 continue
             if restored.schema.json() != expect["schema"]:
                 result.issues.append(f"{name}: schema drift")
                 continue
-            if dropped == 0:
-                h = content_hash(restored.select(sorted(restored.columns)))
-                if h != expect["content_hash"]:
-                    result.issues.append(f"{name}: content hash {h} != {expect['content_hash']}")
-                    continue
+            if dropped == 0 and h != expect["content_hash"]:
+                result.issues.append(f"{name}: content hash {h} != {expect['content_hash']}")
+                continue
             result.tables_ok.append(name)
     finally:
         if not keep_scratch:
