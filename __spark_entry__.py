@@ -31,39 +31,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver checks the first ~50 registry keys per round. The catalog
 # is ordered so that window always lands on the keys with the least
-# driver evidence: _PRIORITY core keys not yet proven, then other
-# unproven keys, then keys already green in some CORRECTNESS_r*.json
-# (parsed at import by _driver_proven_keys, so the rotation is
-# automatic round over round).
-_PRIORITY = [
-    # round-1 red rows, rewritten with property-encoded oracles
-    "approx_distinct", "approx_quantiles", "sample", "sample_stratified",
-    # core scans / filters / sorts
-    "scan_project", "filter_pred", "topk", "dedup_exact", "profile_table",
-    # windows
-    "window_rank", "window_running", "window_navigation",
-    "window_time_range", "window_distribution",
-    # set operations
-    "set_union", "set_intersect", "set_intersect_all", "set_except", "set_except_all",
-    # strings / raw SQL entry
-    "string_regex", "string_funcs", "sql_entrypoint",
-    # UDF surface
-    "udf_vectorized", "udf_grouped",
-    # TPC-H shapes
-    "tpch_q3_shape", "tpch_q4_shape", "tpch_q5_shape", "tpch_q6_shape",
-    "tpch_q7_shape", "tpch_q10_shape", "tpch_q12_shape", "tpch_q13_shape",
-    "tpch_q14_shape", "tpch_q16_shape", "tpch_q18_shape", "tpch_q19_shape",
-    # dedup family (oracle-checked members)
-    "dedup_exact_norm", "dedup_ngram_jaccard_capped", "dedup_clusters",
-    "dedup_levenshtein", "dedup_embedding",
-    # text analysis
-    "text_tokens", "text_term_freq", "text_tfidf",
-    # similarity search + flagship composites
-    "knn_brute", "embedding_pipeline",
-    # event-time + as-of
-    "events_tumbling", "events_session", "asof_join",
-    "curation_pipeline",
-]
+# driver evidence: keys never proven in a CORRECTNESS_r*.json first,
+# then proven keys, stalest evidence first (parsed at import by
+# _driver_proven_keys, so the rotation is automatic round over round).
 
 
 def _driver_proven_keys() -> dict[str, int]:
@@ -108,167 +78,12 @@ def _driver_proven_keys() -> dict[str, int]:
     return proven
 
 
-# Queries added in round 3: rotate these AFTER the round-1/2 catalog's
-# never-proven keys so the driver's 50-row window finishes proving the
-# older backlog first (VERDICT r02 item 1: cumulative >=146/190 of the
-# r2 catalog by r3); the new keys then fill the following rounds.
-_ADDED_R3 = {
-    "tpch_q1_shape", "tpch_q21_shape", "sql_udf", "sql_pipe", "udf_arrow",
-    "bitmap_distinct", "array_higher_order", "dedup_incremental",
-    "dedup_cross_source", "corpus_sample_weighted", "embedding_norm_audit",
-    "stats_corr_matrix", "corpus_pack_partitioned",
-    # containment/transpose/observe batch + graph-stats/history batch
-    "dedup_containment", "transpose_metrics", "observe_metrics",
-    "graph_triangle_count", "graph_degree_stats", "scd2_history",
-    "events_markov_transitions", "time_fill_forward", "stats_ks_test",
-    "textfile_roundtrip", "binaryfile_roundtrip", "stats_autocorr", "knn_pq",
-    "agg_multi_distinct", "join_dpp_partitioned", "sql_variables", "stats_pca_power",
-    "corpus_build_pipeline", "pysource_stream", "sql_scripting", "scd2_merge_incremental",
-    "graph_triangle_oriented", "time_seasonal_decompose",
-    "scd2_point_in_time", "time_ohlc_bars", "join_semi_reduction",
-    "feature_hashing", "events_rfm_segments", "orders_market_basket",
-    "sql_group_by_all", "multimodal_phash_dedup", "dedup_paragraphs", "hybrid_rrf_search", "events_stream_ohlc", "stats_cusum_drift", "scan_provenance", "time_period_over_period", "embedding_dim_stats", "orders_ltv_cohorts", "orders_duplicate_audit", "sketch_approx_topk",
-    "stats_anova", "events_survival_km", "orders_abc_pareto", "stats_bootstrap_ci",
-    "time_interpolate_linear", "stats_quantile_bins", "events_hhi_concentration",
-    "graph_jaccard_suppliers", "stats_theil_sen", "stats_mannwhitney",
-    "stats_outlier_iqr", "time_timezone_rollup",
-    "events_rolling_active_users", "events_ab_srm_check", "scd3_prev_value",
-    "text_keyphrase_rake", "orders_dow_seasonality", "orders_fulfillment_latency",
-    "agg_topn_other", "events_session_bounce",
-    "set_union_by_name", "time_m4_downsample", "events_type_affinity",
-    "experiment_analysis_pipeline", "time_business_day_latency",
-    "orders_revenue_waterfall", "text_ngram_novelty", "embedding_outlier_score",
-    "events_stream_late_drop", "events_stream_update_mode",
-    "events_burstiness", "quality_freshness_sla", "stats_power_analysis",
-    "quality_sequence_gaps", "orders_reorder_interval",
-    "sort_null_ordering", "events_dow_hour_matrix", "events_error_budget",
-    "incremental_topk_refresh", "dsl_query_compile", "dsl_query_join",
-    "events_ab_cuped", "supplier_scorecard", "events_growth_accounting",
-    "events_stream_join_expiry", "time_forecast_snaive_backtest",
-    "table_diff", "partition_skew_report", "text_sentence_stats", "dedup_prefix",
-    "stats_linreg_multi", "events_pattern_regex", "time_holt_linear",
-    "sample_deterministic_topk", "events_ab_did",
-    "orders_backlog_aging", "events_time_to_convert", "time_calendar_dim",
-    "graph_clustering_coeff", "quality_cross_field",
-    "stats_spearman", "orders_customer_migration",
-}
-
-
-# Round-8 additions (the five keys staged through the r6/r7 freeze in
-# sources/staged_r8.py, flipped live after CORRECTNESS_r07 closed the
-# gate 306/306). Kept in the deferral union so any future never-proven
-# backlog would still rotate first.
-_ADDED_R8 = {
-    "avro_roundtrip", "protobuf_roundtrip", "multimodal_real_png",
-    "jdbc_roundtrip", "avro_logical_roundtrip",
-}
-
-# Round-9 additions (the eight keys staged through the r8 freeze in
-# sources/staged_r9.py, flipped live after CORRECTNESS_r08 closed the
-# gate 311/311): real JPEG/GIF/TIFF/WAV/MJPEG-video decode plus the
-# WARC/WebDataset/jsonl.zst corpus-ingest roundtrips.
-_ADDED_R9 = {
-    "multimodal_real_jpeg", "multimodal_real_gif", "multimodal_real_tiff",
-    "multimodal_real_wav", "multimodal_real_video",
-    "warc_roundtrip", "webdataset_roundtrip", "jsonl_zst_roundtrip",
-}
-
-# Round-10 additions (the six keys staged through the r9 freeze in
-# sources/staged_r10.py, flipped live after CORRECTNESS_r09 closed the
-# gate 319/319): TFRecord ingest + tf.Example export roundtrips, the
-# shared-passage winnowing dedup, the .jsonl.zst / WebDataset export
-# sinks, and the exact integer image resize.
-_ADDED_R10 = {
-    "tfrecord_roundtrip", "tfexample_dataset_roundtrip",
-    "dedup_passage_winnow", "jsonl_export_roundtrip",
-    "webdataset_export_roundtrip", "multimodal_resize",
-}
-
-# Round-11 additions (the twenty-four keys staged through the r10
-# freeze in sources/staged_r11.py, flipped live after CORRECTNESS_r10
-# closed the gate 326/326): federated five-format ingest, audio
-# frames, scene cuts, 16-bit TIFF, perceptron train/eval, the
-# crawl-side surface (URL canonicalization, HTML extraction, robots,
-# frontier scheduling, the crawl flagship), survivorship, data-sized
-# bloom dedup, BPE train/compression, bigram held-out, token-budget
-# mixture, curriculum ordering, recall@k report, integer PCA
-# power/project, Arrow IPC roundtrip, pack offsets, char entropy.
-_ADDED_R11 = {
-    "federated_ingest_union", "multimodal_audio_frames",
-    "multimodal_scene_cuts", "multimodal_real_tiff16",
-    "quality_train_perceptron", "quality_eval_perceptron",
-    "web_url_canonical_dedup", "text_html_extract", "web_robots_filter",
-    "dedup_survivorship", "text_bpe_train", "text_bpe_compression",
-    "dedup_bloom_incremental", "crawl_frontier_schedule",
-    "corpus_token_budget_mixture", "knn_recall_report",
-    "embedding_pca_power", "embedding_pca_project",
-    "corpus_curriculum_order", "text_bigram_heldout", "crawl_pipeline",
-    "arrow_ipc_roundtrip", "corpus_pack_offsets", "text_char_entropy",
-}
-
-# Round-12 additions (the eighteen keys staged through the r11 freeze
-# in sources/staged_r12.py, flipped live after CORRECTNESS_r11 closed
-# the gate 350/350): quality-model inference/calibration/drift, the
-# incremental store triple (exact fp merge, MinHash probe, embedding
-# probe) + IVF append, code-vs-prose detection, the streaming quality
-# and dedup gates, ViT image tiles, host PageRank, Matryoshka prefix
-# recall, epoch upsampling, τ=0.5 temperature mixture, seqlen
-# histogram, retrieval chunk spans, and the crawl_increment_pipeline
-# incremental flagship.
-_ADDED_R12 = {
-    "quality_score_inference", "quality_score_calibration",
-    "dedup_store_merge", "text_code_detect", "knn_ivf_append",
-    "dedup_minhash_store_incremental", "embedding_prefix_recall",
-    "quality_margin_drift", "docs_stream_quality_gate",
-    "multimodal_image_tiles", "web_host_pagerank",
-    "corpus_epoch_upsample", "text_chunk_spans",
-    "docs_stream_dedup_gate", "crawl_increment_pipeline",
-    "dedup_embedding_store_incremental", "corpus_seqlen_histogram",
-    "corpus_mixture_temperature",
-}
-
-# Round-13 additions (the eleven keys staged through the r12 freeze
-# in sources/staged_r13.py, flipped live after CORRECTNESS_r12 closed
-# the gate 368/368): exact duplicate-span detection and its excise
-# accounting (Lee et al. 2107.06499, canonical-first-occurrence form),
-# span families rollup, DSIR importance weights + deterministic
-# resample (Xie et al. 2302.03169, integer-exact), the streaming DSIR
-# gate, MinHash band tuning (the LSH operating curve), IVF hot-list
-# rebalance, DSIR-vs-perceptron agreement, BPE fertility (apply side),
-# and the corpus_selection_pipeline composite flagship.
-_ADDED_R13 = {
-    "dedup_substring_spans", "dedup_substring_excise",
-    "corpus_dsir_weights", "corpus_dsir_resample",
-    "dedup_minhash_band_tuning", "knn_ivf_rebalance",
-    "quality_dsir_agreement", "corpus_selection_pipeline",
-    "dedup_substring_families", "docs_stream_dsir_gate",
-    "text_bpe_fertility",
-}
-
-_DEFERRED = (
-    _ADDED_R3 | _ADDED_R8 | _ADDED_R9 | _ADDED_R10 | _ADDED_R11 | _ADDED_R12
-    | _ADDED_R13
-)
-
-
 def _ordered_keys() -> list[str]:
-    specs = all_queries()
+    """Unproven keys first (round 0), then proven keys by the round of
+    their latest green row, oldest first. The sort is stable, so
+    registry order breaks ties and the order is deterministic."""
     proven = _driver_proven_keys()
-    head = [k for k in _PRIORITY if k in specs and k not in proven]
-    seen = set(head)
-    mid = [k for k in specs if k not in seen and k not in proven and k not in _DEFERRED]
-    new = [k for k in specs if k not in seen and k not in proven and k in _DEFERRED]
-    # Proven tail, STALEST driver evidence first (VERDICT r7 item 2,
-    # latest-round fix in r9): with zero unproven keys left, the
-    # window's spare slots land on the keys whose freshest green row
-    # is the most rounds old. Registry order breaks ties so the sort
-    # is deterministic.
-    pos = {k: i for i, k in enumerate(specs)}
-    tail = sorted(
-        (k for k in specs if k not in seen and k in proven),
-        key=lambda k: (proven[k], pos[k]),
-    )
-    return head + mid + new + tail
+    return sorted(all_queries(), key=lambda k: proven.get(k, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -278,7 +93,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for each hash-checked query; rows-only
-    operators (no SQL twin) are omitted."""
+    """DuckDB-equivalent SQL for every query, in the same order."""
     specs = all_queries()
-    return {key: specs[key].oracle for key in _ordered_keys() if specs[key].oracle is not None}
+    return {key: specs[key].oracle for key in _ordered_keys()}

@@ -1,4 +1,2 @@
 """North-star extension operators (SURVEY §2.E): dedup, similarity
 search, text analysis, multimodal columns."""
-
-from datapipeline_scripts_spark.extensions import affinity, curation, decontamination, dedup, graph, graphstats, mixture, multimodal, pretraining, ranking, similarity, textstats  # noqa: F401

@@ -49,7 +49,7 @@ LIMIT 25
 """
 
 
-@query("orders_market_basket", oracle=_BASKET_ORACLE, tier="ext")
+@query("orders_market_basket", oracle=_BASKET_ORACLE)
 def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 brand pairs by basket co-occurrence with exact
     support and lift in basis points (lift = n_ab·N / (n_a·n_b),

@@ -217,7 +217,7 @@ GROUP BY predicted, split
 """
 
 
-@query("corpus_build_pipeline", oracle=_build_oracle(), tier="ext")
+@query("corpus_build_pipeline", oracle=_build_oracle())
 def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full training-corpus build as ONE declared plan — the
     engine's end-to-end flagship for the §2.E families, extending

@@ -417,7 +417,7 @@ def _minhash_oracle() -> str:
     """
 
 
-@query("dedup_minhash", oracle=_minhash_oracle(), tier="ext")
+@query("dedup_minhash", oracle=_minhash_oracle())
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands) candidate pairs with estimated Jaccard.
 
@@ -512,7 +512,7 @@ def _minhash_clusters_oracle() -> str:
     """
 
 
-@query("dedup_minhash_clusters", oracle=_minhash_clusters_oracle(), tier="ext")
+@query("dedup_minhash_clusters", oracle=_minhash_clusters_oracle())
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup clustering: MinHash-LSH candidate pairs
     (est ≥ 0.5) → connected components → (doc, cluster, size) — the
@@ -548,7 +548,6 @@ _EMBED_BUCKET_SQL = sign_bucket_sql("v", _EMBED_BUCKET_DIMS)
     )
     SELECT vec_a, vec_b, cos_sim FROM pairs WHERE cos_sim >= 0.4
     """,
-    tier="core",
 )
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ 0.4) within
@@ -625,7 +624,7 @@ GROUP BY doc_id
 """
 
 
-@query("dedup_simhash", oracle=_SIMHASH_ORACLE, tier="ext")
+@query("dedup_simhash", oracle=_SIMHASH_ORACLE)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """48-bit SimHash per document from distinct-token md5 bits.
 
@@ -742,7 +741,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flag
     GROUP BY source
     """,
-    tier="ext",
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (cross-batch) dedup — the shape every continuous
@@ -797,7 +795,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN per_source b ON a.nt = b.nt AND a.source < b.source
     GROUP BY 1, 2
     """,
-    tier="ext",
 )
 def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source contamination matrix: for every source pair, how
@@ -850,7 +847,6 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON doc_b = sb.doc_id
     WHERE n_shared * 10000 // least(sa.sz, sb.sz) >= 8000
     """,
-    tier="ext",
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle CONTAINMENT ≥ 0.8 — the asymmetric near-dup measure
@@ -923,7 +919,7 @@ SELECT doc_id, n_chunks, kept_chunks, recon_fp FROM recon
 """
 
 
-@query("dedup_paragraphs", oracle=_PARA_ORACLE, tier="ext")
+@query("dedup_paragraphs", oracle=_PARA_ORACLE)
 def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-document (paragraph-level) dedup with document
     reconstruction — the CCNet/RefinedWeb boilerplate-removal shape:
@@ -994,7 +990,7 @@ FROM fp GROUP BY pre_fp HAVING count(*) > 1
 """
 
 
-@query("dedup_prefix", oracle=_PREFIX_ORACLE, tier="ext")
+@query("dedup_prefix", oracle=_PREFIX_ORACLE)
 def dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-fingerprint near-dup detector: normalize (lower, collapse
     whitespace), fingerprint the first 40 chars, and report duplicate

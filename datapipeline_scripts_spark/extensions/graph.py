@@ -211,7 +211,7 @@ r0 AS (SELECT k, {_SCALE} // (SELECT nn FROM n) AS r FROM nodes),
 {its_sql}"""
 
 
-@query("graph_pagerank", oracle=_PAGERANK_ORACLE, tier="ext")
+@query("graph_pagerank", oracle=_PAGERANK_ORACLE)
 def graph_pagerank(
     spark: SparkSession, sf_dir: str, n_rounds: int = _ITERS, checkpoint_every: int = 5
 ) -> DataFrame:

@@ -88,7 +88,7 @@ JOIN nation n ON u_d.k = n.n_nationkey
 """
 
 
-@query("graph_triangle_count", oracle=_TRIANGLE_ORACLE, tier="ext")
+@query("graph_triangle_count", oracle=_TRIANGLE_ORACLE)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle participation counts on the undirected nation
     trade graph — ordered-edge-join triangle enumeration (a < b < c,
@@ -125,7 +125,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("graph_degree_stats", oracle=_DEGREE_ORACLE, tier="ext")
+@query("graph_degree_stats", oracle=_DEGREE_ORACLE)
 def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node degree profile (out-degree, in-degree, undirected
     degree) of the nation trade graph — three partial-aggregable
@@ -157,7 +157,7 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("graph_triangle_oriented", oracle=_TRIANGLE_ORACLE, tier="ext")
+@query("graph_triangle_oriented", oracle=_TRIANGLE_ORACLE)
 def graph_triangle_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-ordered triangle enumeration — the 100 TB refinement of
     `graph_triangle_count`: every undirected edge is oriented toward
@@ -324,7 +324,7 @@ JOIN nation n ON u_d.k = n.n_nationkey
 """
 
 
-@query("graph_clustering_coeff", oracle=_CLUSTERING_ORACLE, tier="ext")
+@query("graph_clustering_coeff", oracle=_CLUSTERING_ORACLE)
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per node of the nation trade
     graph: 2·triangles / (deg·(deg−1)) in exact integer basis points —

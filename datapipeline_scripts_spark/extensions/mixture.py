@@ -72,7 +72,7 @@ def split_of_bucket(b: Column) -> Column:
     )
 
 
-@query("split_assign", oracle=_SPLIT_ORACLE, tier="ext")
+@query("split_assign", oracle=_SPLIT_ORACLE)
 def split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split by md5(doc_id) mod
     100 — assignment is a pure function of the key (reproducible under
@@ -113,7 +113,7 @@ FROM per_source s
 """
 
 
-@query("corpus_mixture", oracle=_MIXTURE_ORACLE, tier="ext")
+@query("corpus_mixture", oracle=_MIXTURE_ORACLE)
 def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture reweighting table: each source's observed char share
     (basis points) and the sampling weight that moves it to a uniform
@@ -164,7 +164,7 @@ GROUP BY shard_id
 """
 
 
-@query("corpus_pack", oracle=_PACK_ORACLE, tier="ext")
+@query("corpus_pack", oracle=_PACK_ORACLE)
 def corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic sequence packing: assign docs (in stable doc_id
     order) to fixed-budget training shards by exclusive running char
@@ -216,7 +216,7 @@ GROUP BY source, shard_id
 """
 
 
-@query("corpus_pack_partitioned", oracle=_PACK_PART_ORACLE, tier="ext")
+@query("corpus_pack_partitioned", oracle=_PACK_PART_ORACLE)
 def corpus_pack_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB form of `corpus_pack` (VERDICT r02 item 2): greedy
     fixed-budget shard packing with the running-sum window PARTITIONED
@@ -281,7 +281,7 @@ GROUP BY source
 """
 
 
-@query("corpus_sample_weighted", oracle=_SAMPLE_W_ORACLE, tier="ext")
+@query("corpus_sample_weighted", oracle=_SAMPLE_W_ORACLE)
 def corpus_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close the mixture loop: APPLY `corpus_mixture`'s weights as a
     deterministic sampler. Each doc's copy count is

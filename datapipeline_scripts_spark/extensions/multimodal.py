@@ -17,8 +17,8 @@ most common lossless format needs no codec library; non-PNG payloads
 report the loud (-1,-1)/byte-hash fallbacks, exactly like Pillow's
 undecodable branch).  The flag deliberately CHANGES
 width/height/phash semantics, so the declared DuckDB oracles cover
-the default path only; with the flag set the keys are rows-only
-verifiable.  Presence of Pillow alone never flips the path — an
+the default path only; with the flag set the keys are verified by
+their decode tests, not by the oracles.  Presence of Pillow alone never flips the path — an
 installed codec must not silently change query results.
 """
 
@@ -327,7 +327,7 @@ FROM b LEFT JOIN chk USING (doc_id)
 """
 
 
-@query("multimodal_features", oracle=_FEATURES_ORACLE, tier="ext")
+@query("multimodal_features", oracle=_FEATURES_ORACLE)
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary decode / feature-extraction plumbing demo.
 
@@ -353,7 +353,7 @@ FROM documents JOIN embeddings ON doc_id = vec_id
 """
 
 
-@query("multimodal_struct", oracle=_STRUCT_ORACLE, tier="ext")
+@query("multimodal_struct", oracle=_STRUCT_ORACLE)
 def multimodal_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested multimodal record: struct(text-meta, vector) per doc —
     the columnar layout a downstream trainer reads (parquet keeps the
@@ -474,7 +474,7 @@ FROM fr LEFT JOIN chk USING (doc_id, frame_idx)
 """
 
 
-@query("multimodal_frames", oracle=_FRAMES_ORACLE, tier="ext")
+@query("multimodal_frames", oracle=_FRAMES_ORACLE)
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over an opaque media payload — the 1→N
     (UDTF-shaped) multimodal operator: every input row yields one row
@@ -729,7 +729,7 @@ def _phash_oracle() -> str:
     """
 
 
-@query("multimodal_phash_dedup", oracle=_phash_oracle(), tier="ext")
+@query("multimodal_phash_dedup", oracle=_phash_oracle())
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate detection for binary media: the
     decode stage (Arrow-batched Python worker, stubbed deterministic

@@ -397,7 +397,7 @@ _INVENTORY_SCHEMA = T.StructType(
 )
 
 
-@query("pretraining_pipeline", oracle=_oracle(), tier="ext")
+@query("pretraining_pipeline", oracle=_oracle())
 def pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole pretraining-corpus build as one driver-gated chain —
     see the module docstring for the stage list and proof structure.

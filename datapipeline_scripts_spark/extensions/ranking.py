@@ -295,7 +295,7 @@ LIMIT 20
 """
 
 
-@query("hybrid_rrf_search", oracle=_HYBRID_ORACLE, tier="ext")
+@query("hybrid_rrf_search", oracle=_HYBRID_ORACLE)
 def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion: a lexical BM25
     leg (same scoring as text_bm25) and a dense cosine leg (query

@@ -153,7 +153,7 @@ def _ivf_from_centroids(e: DataFrame, cent: DataFrame) -> DataFrame:
     return cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
 
 
-@query("knn_ivf", oracle=_IVF_ORACLE, tier="ext")
+@query("knn_ivf", oracle=_IVF_ORACLE)
 def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate top-5: coarse quantizer →
     per-list inverted index → probe the NPROBE nearest lists only.
@@ -302,7 +302,7 @@ def _knn_bucketed_oracle() -> str:
     """
 
 
-@query("knn_bucketed", oracle=_knn_bucketed_oracle(), tier="ext")
+@query("knn_bucketed", oracle=_knn_bucketed_oracle())
 def knn_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 within 8-hyperplane LSH buckets.
 
@@ -481,7 +481,6 @@ def embedding_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_vec
     GROUP BY label
     """,
-    tier="ext",
 )
 def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-table health gate — run BEFORE any ANN/dedup consumer:
@@ -699,7 +698,7 @@ def _pq_dist_micro(a, b):
     ).cast("long")
 
 
-@query("knn_pq", oracle=_PQ_ORACLE, tier="ext")
+@query("knn_pq", oracle=_PQ_ORACLE)
 def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with exact rerank — the standard
     two-stage 100 TB retrieval shape (PQ-ADC scan → shortlist → exact
@@ -836,7 +835,7 @@ GROUP BY dim
 """
 
 
-@query("embedding_dim_stats", oracle=_DIM_STATS_ORACLE, tier="ext")
+@query("embedding_dim_stats", oracle=_DIM_STATS_ORACLE)
 def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension distribution audit of the embedding space: n,
     exact integer-microunit sum/mean/min/max and dead-dimension (zero)

@@ -227,7 +227,7 @@ def _winnow_oracle() -> str:
     """
 
 
-@query("text_winnow", oracle=_winnow_oracle(), tier="ext")
+@query("text_winnow", oracle=_winnow_oracle())
 def text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint (Schleimer/Wilkerson/Aiken): hash every
     word 3-gram, slide a window of 4 consecutive hashes, keep each
@@ -434,7 +434,7 @@ def _feature_hashing_oracle() -> str:
     """
 
 
-@query("feature_hashing", oracle=_feature_hashing_oracle(), tier="ext")
+@query("feature_hashing", oracle=_feature_hashing_oracle())
 def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick bag-of-words vectorization: every token is hashed
     into one of 1024 buckets (md5-derived 48-bit hash, the house
@@ -501,7 +501,7 @@ _RAKE_ORACLE = r"""
 """
 
 
-@query("text_keyphrase_rake", oracle=_RAKE_ORACLE, tier="ext")
+@query("text_keyphrase_rake", oracle=_RAKE_ORACLE)
 def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010): candidate phrases
     are maximal stopword-free token runs (≤4 words), each word scores
@@ -572,7 +572,7 @@ _NOVELTY_ORACLE = """
 """
 
 
-@query("text_ngram_novelty", oracle=_NOVELTY_ORACLE, tier="ext")
+@query("text_ngram_novelty", oracle=_NOVELTY_ORACLE)
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus novelty profile: for each document, the share of its
     word trigrams whose FIRST corpus occurrence (by doc_id order) is
@@ -649,7 +649,7 @@ FROM per_doc GROUP BY lang
 """
 
 
-@query("text_sentence_stats", oracle=_SENTENCE_ORACLE, tier="ext")
+@query("text_sentence_stats", oracle=_SENTENCE_ORACLE)
 def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence segmentation profile per language: split on [.!?]+ runs,
     drop blank fragments, report docs, total sentences, and the x100

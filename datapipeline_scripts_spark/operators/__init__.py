@@ -1,28 +1,1 @@
-"""Core relational operator catalog (SURVEY.md §2.D).
-
-Importing this package registers every declared query with the registry.
-"""
-
-from datapipeline_scripts_spark.operators import (  # noqa: F401
-    advstats,
-    aggregates,
-    approx,
-    arrays,
-    cdc,
-    dates,
-    history,
-    joins,
-    json_ops,
-    quality,
-    reconcile,
-    scalars,
-    scans,
-    sequences,
-    sketches,
-    sorting,
-    sql_api,
-    strings,
-    tpch_shapes,
-    udfs,
-    windows,
-)
+"""Core relational operator catalog (SURVEY.md §2.D)."""

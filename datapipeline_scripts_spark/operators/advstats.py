@@ -454,7 +454,7 @@ FROM anch
 """
 
 
-@query("time_interpolate_linear", oracle=_INTERP_ORACLE, tier="ext")
+@query("time_interpolate_linear", oracle=_INTERP_ORACLE)
 def time_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear interpolation of missing days in an irregular per-user
     daily revenue series — the sibling of `time_fill_forward` for
@@ -2548,7 +2548,7 @@ FROM nums
 """
 
 
-@query("stats_linreg_multi", oracle=_linreg_sql("lineitem", "HUGEINT", "//"), tier="ext")
+@query("stats_linreg_multi", oracle=_linreg_sql("lineitem", "HUGEINT", "//"))
 def stats_linreg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple linear regression (extendedprice-cents on quantity and
     discount-bp, with intercept) solved in closed form from one pass of
@@ -2608,7 +2608,6 @@ def stats_linreg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
               AS BIGINT) AS did_microcents
     FROM cells
     """,
-    tier="ext",
 )
 def events_ab_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences estimate for the A/B suite: per-user
@@ -2709,7 +2708,7 @@ FROM d2
 """
 
 
-@query("stats_spearman", oracle=_SPEARMAN_ORACLE, tier="ext")
+@query("stats_spearman", oracle=_SPEARMAN_ORACLE)
 def stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (tie-averaged ranks, classic
     1 − 6Σd²/(n(n²−1)) form) between quantity and discount per return
@@ -2798,7 +2797,7 @@ FROM mat
 """
 
 
-@query("orders_customer_migration", oracle=_MIGRATION_ORACLE, tier="ext")
+@query("orders_customer_migration", oracle=_MIGRATION_ORACLE)
 def orders_customer_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer value-segment migration matrix: each customer's spend
     quintile in 1998 vs 1999 (deterministic ntile tie-broken on

@@ -967,7 +967,7 @@ FROM g
 """
 
 
-@query("stats_gini", oracle=_GINI_ORACLE, tier="ext")
+@query("stats_gini", oracle=_GINI_ORACLE)
 def stats_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini concentration coefficient per order status, in exact
     integer arithmetic: prices quantized to cents (bigint), ranked
@@ -1139,7 +1139,7 @@ SELECT pair, n, corr_bp FROM (
 """
 
 
-@query("stats_corr_matrix", oracle=_CORR_ORACLE, tier="ext")
+@query("stats_corr_matrix", oracle=_CORR_ORACLE)
 def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation matrix (quantity × price ×
     discount) from ONE aggregate pass: the 9 sufficient statistics

@@ -2,7 +2,7 @@
 
 `approx_count_distinct` (HyperLogLog++), `percentile_approx`
 (Greenwald-Khanna) and seeded `sample`/`sampleBy` are not bit-equal
-across engines by design.  Rather than registering rows-only checks
+across engines by design.  Rather than registering a key with no oracle
 (which the round-1 driver recorded as `err: no_oracle`), each query
 *property-encodes* its guarantee into deterministic, hash-checkable
 output (SURVEY §2.D, VERDICT r01 item 1):
@@ -44,7 +44,7 @@ GROUP BY l_returnflag
 """
 
 
-@query("approx_distinct", oracle=_APPROX_DISTINCT_ORACLE, tier="ext")
+@query("approx_distinct", oracle=_APPROX_DISTINCT_ORACLE)
 def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ distinct orderkeys/partkeys per return flag (rsd=1%),
     cross-checked against the exact distinct counts in the same pass.
@@ -83,7 +83,7 @@ GROUP BY o_orderstatus
 """
 
 
-@query("approx_quantiles", oracle=_APPROX_QUANTILES_ORACLE, tier="ext")
+@query("approx_quantiles", oracle=_APPROX_QUANTILES_ORACLE)
 def approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greenwald-Khanna approximate percentiles of order totalprice,
     cross-checked against the exact interpolated percentiles.
@@ -124,7 +124,7 @@ GROUP BY l_returnflag
 """
 
 
-@query("sample", oracle=_SAMPLE_ORACLE, tier="ext")
+@query("sample", oracle=_SAMPLE_ORACLE)
 def sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sample (~10%): hash-checked via exact per-group
     totals plus a boolean asserting the realized sample rate is within
@@ -150,7 +150,7 @@ GROUP BY o_orderpriority
 """
 
 
-@query("sample_stratified", oracle=_SAMPLE_STRATIFIED_ORACLE, tier="ext")
+@query("sample_stratified", oracle=_SAMPLE_STRATIFIED_ORACLE)
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sample (`sampleBy`): keep 50% of URGENT orders but 5%
     of the rest — the shape used to rebalance a skewed training corpus
@@ -189,7 +189,7 @@ FROM ranked WHERE rk <= 5
 """
 
 
-@query("sample_deterministic_topk", oracle=_DET_TOPK_ORACLE, tier="ext")
+@query("sample_deterministic_topk", oracle=_DET_TOPK_ORACLE)
 def sample_deterministic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible k-per-group sample: rank each group by the md5 of
     the row key and keep the first 5 — the distributed idiom for "give

@@ -252,7 +252,7 @@ _HOLT_DAY_DUCK = "CAST(date_diff('day', d0, CAST(ts AS DATE)) AS BIGINT) + 1"
 _HOLT_DAY_SPARK = "CAST(datediff(CAST(ts AS DATE), d0) AS BIGINT) + 1"
 
 
-@query("time_holt_linear", oracle=_holt_sql("events", _HOLT_DAY_DUCK, "//"), tier="ext")
+@query("time_holt_linear", oracle=_holt_sql("events", _HOLT_DAY_DUCK, "//"))
 def time_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt's linear-trend exponential smoothing over the daily revenue
     series, with the ENGINE driving the recursion (recursive CTE —
@@ -308,7 +308,7 @@ FROM bucketed GROUP BY age_bucket
 """
 
 
-@query("orders_backlog_aging", oracle=_AGING_ORACLE, tier="ext")
+@query("orders_backlog_aging", oracle=_AGING_ORACLE)
 def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-order backlog aging report (the AR-aging classic): orders
     still in status O bucketed by age at the data-derived snapshot
@@ -380,7 +380,7 @@ FROM spine
 """
 
 
-@query("time_calendar_dim", oracle=_CALENDAR_ORACLE, tier="ext")
+@query("time_calendar_dim", oracle=_CALENDAR_ORACLE)
 def time_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generated calendar dimension over the orders date span — the
     warehouse utility every date-keyed star join wants on the

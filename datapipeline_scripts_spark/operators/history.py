@@ -62,7 +62,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-@query("scd2_history", oracle=_SCD2_ORACLE, tier="core")
+@query("scd2_history", oracle=_SCD2_ORACLE)
 def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 SCD build from the event stream: each user's event_type
     history collapsed to change intervals with valid_from/valid_to,
@@ -109,7 +109,7 @@ FROM pairs
 """
 
 
-@query("events_markov_transitions", oracle=_MARKOV_ORACLE, tier="ext")
+@query("events_markov_transitions", oracle=_MARKOV_ORACLE)
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event-type
     sequences: P(next | prev) in exact basis points. The behavioral
@@ -170,7 +170,7 @@ LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day
 """
 
 
-@query("time_fill_forward", oracle=_FILL_ORACLE, tier="ext")
+@query("time_fill_forward", oracle=_FILL_ORACLE)
 def time_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar gap-fill: a generated day spine × event-type grid,
     left-joined to daily revenue (per-row-quantized cents), with
@@ -234,7 +234,7 @@ GROUP BY n1, n2
 """
 
 
-@query("stats_ks_test", oracle=_KS_ORACLE, tier="ext")
+@query("stats_ks_test", oracle=_KS_ORACLE)
 def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov distance between the value
     distributions of two event types, on a deterministic binned grid —
@@ -326,7 +326,7 @@ FROM s
 """
 
 
-@query("stats_autocorr", oracle=_AUTOCORR_ORACLE, tier="ext")
+@query("stats_autocorr", oracle=_AUTOCORR_ORACLE)
 def stats_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1/2/3 autocorrelation of the daily event-count series — the
     seasonality probe behind ingestion-cadence monitoring (a crawl
@@ -493,7 +493,7 @@ FROM signed
 """
 
 
-@query("stats_pca_power", oracle=_pca_sql("lineitem", "HUGEINT", "//"), tier="ext")
+@query("stats_pca_power", oracle=_pca_sql("lineitem", "HUGEINT", "//"))
 def stats_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the (quantity, price-dollars,
     discount-bp) covariance matrix by 6 unrolled power iterations —
@@ -521,7 +521,7 @@ def stats_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCD2_CUTOVER = "2024-01-25 00:00:00"  # ~80/20 split of the fixture event range
 
 
-@query("scd2_merge_incremental", oracle=_SCD2_ORACLE, tier="core")
+@query("scd2_merge_incremental", oracle=_SCD2_ORACLE)
 def scd2_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SCD2 maintenance: the nightly form of
     `scd2_history`. The stored dimension (built from events before a
@@ -607,7 +607,7 @@ FROM det JOIN seas ON det.dow = seas.dow
 """
 
 
-@query("time_seasonal_decompose", oracle=_DECOMP_ORACLE, tier="ext")
+@query("time_seasonal_decompose", oracle=_DECOMP_ORACLE)
 def time_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive seasonal decomposition of the daily event-count series
     (classical moving-average form): trend = centered 7-day average
@@ -685,7 +685,7 @@ QUALIFY probe = 1
 """
 
 
-@query("scd2_point_in_time", oracle=_PIT_ORACLE, tier="core")
+@query("scd2_point_in_time", oracle=_PIT_ORACLE)
 def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time dimension lookup — the feature-store primitive:
     reconstruct each user's SCD2 state at a weekly snapshot spine
@@ -775,7 +775,7 @@ GROUP BY event_type, CAST(ts AS DATE)
 """
 
 
-@query("time_ohlc_bars", oracle=_OHLC_ORACLE, tier="ext")
+@query("time_ohlc_bars", oracle=_OHLC_ORACLE)
 def time_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC (open/high/low/close) bars per event type — the
     hypertable downsampling shape every time-series store ships
@@ -853,7 +853,7 @@ FROM pre
 """
 
 
-@query("stats_cusum_drift", oracle=_CUSUM_ORACLE, tier="ext")
+@query("stats_cusum_drift", oracle=_CUSUM_ORACLE)
 def stats_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection on the daily event-count series:
     the classic sequential drift alarm (Page's cumulative sum), in its
@@ -920,7 +920,7 @@ FROM lagged
 """
 
 
-@query("time_period_over_period", oracle=_POP_ORACLE, tier="ext")
+@query("time_period_over_period", oracle=_POP_ORACLE)
 def time_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Period-over-period reporting: daily revenue with day-over-day
     and week-over-week deltas in exact integer basis points (floor

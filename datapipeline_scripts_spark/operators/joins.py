@@ -428,7 +428,7 @@ HAVING sum(ov_us) > 0
 """
 
 
-@query("join_interval_overlap", oracle=_INTERVAL_OVERLAP_ORACLE, tier="ext")
+@query("join_interval_overlap", oracle=_INTERVAL_OVERLAP_ORACLE)
 def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True interval×interval overlap join: per-user session intervals
     against global peak hours (hours with ≥5 events), reporting each

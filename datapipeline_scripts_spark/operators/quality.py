@@ -68,7 +68,7 @@ FROM checks
 """
 
 
-@query("quality_audit", oracle=_QUALITY_ORACLE, tier="ext")
+@query("quality_audit", oracle=_QUALITY_ORACLE)
 def quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """14-constraint expectation suite over four tables: PK uniqueness,
     FK integrity (anti-join counts), domain membership, range and
@@ -169,7 +169,7 @@ GROUP BY leading_digit
 """
 
 
-@query("stats_benford", oracle=_BENFORD_ORACLE, tier="ext")
+@query("stats_benford", oracle=_BENFORD_ORACLE)
 def stats_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit analysis of order totals: observed leading-
     digit share vs the Benford expectation (basis points) — the
@@ -224,7 +224,7 @@ FROM a FULL OUTER JOIN b USING (o_orderpriority)
 """
 
 
-@query("quality_drift", oracle=_DRIFT_ORACLE, tier="ext")
+@query("quality_drift", oracle=_DRIFT_ORACLE)
 def quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift report between two dataset snapshots (orders
     before vs after a cutoff): per-category counts, shares, and share
@@ -330,7 +330,7 @@ FROM recon
 """
 
 
-@query("quality_cross_field", oracle=_XFIELD_ORACLE, tier="ext")
+@query("quality_cross_field", oracle=_XFIELD_ORACLE)
 def quality_cross_field(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header/detail cross-table reconciliation — the audit
     quality_audit's single-table rules can't express: does each order

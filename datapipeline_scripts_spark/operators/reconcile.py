@@ -57,7 +57,7 @@ FROM diff GROUP BY change_type
 """
 
 
-@query("table_diff", oracle=_DIFF_ORACLE, tier="core")
+@query("table_diff", oracle=_DIFF_ORACLE)
 def table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-snapshot reconciliation: full-outer join on the primary key,
     classify added / removed / changed / unchanged, publish per-class
@@ -151,7 +151,7 @@ SELECT metric, CAST(value AS BIGINT) AS value FROM (
 """
 
 
-@query("partition_skew_report", oracle=_SKEW_ORACLE, tier="ext")
+@query("partition_skew_report", oracle=_SKEW_ORACLE)
 def partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnosis for events.user_id: per-key count
     distribution summary (n_keys, total, max, discrete p50/p90/p99) plus

@@ -140,7 +140,7 @@ FROM events
 """
 
 
-@query("scan_provenance", oracle=_PROVENANCE_ORACLE, tier="ext")
+@query("scan_provenance", oracle=_PROVENANCE_ORACLE)
 def scan_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row provenance via the hidden `_metadata` file column: per
     source file, row counts, the row-index range, and key bounds —

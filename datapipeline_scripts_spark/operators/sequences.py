@@ -514,7 +514,7 @@ GROUP BY 1
 """
 
 
-@query("events_concurrency", oracle=_CONCURRENCY_ORACLE, tier="ext")
+@query("events_concurrency", oracle=_CONCURRENCY_ORACLE)
 def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrent sessions per hour via the sweep-line algorithm:
     sessionize (30-min gap), explode each session interval into
@@ -578,7 +578,7 @@ HAVING count(*) >= 5
 """
 
 
-@query("events_gap_stats", oracle=_GAP_STATS_ORACLE, tier="ext")
+@query("events_gap_stats", oracle=_GAP_STATS_ORACLE)
 def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-arrival gap statistics per user (min/max/mean seconds,
     exact integer µs arithmetic) — the heartbeat-health metric behind
@@ -628,7 +628,7 @@ FROM m
 """
 
 
-@query("events_rfm_segments", oracle=_RFM_ORACLE, tier="ext")
+@query("events_rfm_segments", oracle=_RFM_ORACLE)
 def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) user segmentation: per-user
     metrics quintiled into 1-5 scores (5 = most recent / most frequent
@@ -717,7 +717,7 @@ FROM curve JOIN sized USING (cohort_ym)
 """
 
 
-@query("orders_ltv_cohorts", oracle=_LTV_ORACLE, tier="ext")
+@query("orders_ltv_cohorts", oracle=_LTV_ORACLE)
 def orders_ltv_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV curves: customers grouped by first-order month, each
     cohort's revenue accumulated over account age in months, and the
@@ -777,7 +777,7 @@ FROM seqs
 """
 
 
-@query("events_pattern_regex", oracle=_PATTERN_ORACLE, tier="ext")
+@query("events_pattern_regex", oracle=_PATTERN_ORACLE)
 def events_pattern_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH_RECOGNIZE-style sequence pattern matching: each user's
     event history collapses to an ordered initial-letter string
@@ -832,7 +832,7 @@ FROM first_view v JOIN first_purchase p ON v.user_id = p.user_id
 """
 
 
-@query("events_time_to_convert", oracle=_TTC_ORACLE, tier="ext")
+@query("events_time_to_convert", oracle=_TTC_ORACLE)
 def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch conversion latency: per user, seconds from the
     first view to the first purchase strictly after it — the funnel

@@ -55,7 +55,7 @@ FROM lineitem
 """
 
 
-@query("sketch_theta_setops", oracle=_THETA_ORACLE, tier="ext")
+@query("sketch_theta_setops", oracle=_THETA_ORACLE)
 def sketch_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch distinct-count arithmetic: |R|, |A|, |R∪A|, |R∩A|,
     |R\\A| over the parts shipped per return-flag segment — one scan
@@ -132,7 +132,7 @@ GROUP BY event_type
 """
 
 
-@query("sketch_hll_rollup", oracle=_HLL_ORACLE, tier="ext")
+@query("sketch_hll_rollup", oracle=_HLL_ORACLE)
 def sketch_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch-rollup pattern: per-(event_type, day) HLL sketches
     merged up to per-event_type distinct users via `hll_union_agg` —
@@ -178,7 +178,7 @@ GROUP BY l_returnflag
 """
 
 
-@query("sketch_kll_quantiles", oracle=_KLL_ORACLE, tier="ext")
+@query("sketch_kll_quantiles", oracle=_KLL_ORACLE)
 def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL quantile sketch per return flag over l_extendedprice, with
     the sketch's own guarantee asserted in-plan: the *realized rank* of
@@ -230,7 +230,7 @@ FROM top10
 """
 
 
-@query("sketch_cms_heavyhitters", oracle=_CMS_ORACLE, tier="ext")
+@query("sketch_cms_heavyhitters", oracle=_CMS_ORACLE)
 def sketch_cms_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequency estimation for the heavy-hitter keys:
     build the CMS distributed (`count_min_sketch` agg — counter-matrix
@@ -354,7 +354,7 @@ ORDER BY est_count DESC, item
 """
 
 
-@query("sketch_approx_topk", oracle=_TOPK_ORACLE, tier="ext")
+@query("sketch_approx_topk", oracle=_TOPK_ORACLE)
 def sketch_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate heavy hitters via Spark 4's `approx_top_k` sketch —
     the streaming-friendly frequent-items operator (bounded sketch

@@ -160,7 +160,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(CASE WHEN l_returnflag = 'R' THEN cents END) AS BIGINT)
     FROM m
     """,
-    tier="ext",
 )
 def transpose_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`DataFrame.transpose` (Spark 4): rows↔columns flip with the

@@ -89,7 +89,7 @@ GROUP BY n.n_name
 """
 
 
-@query("sql_recursive_reach", oracle=_RECURSIVE_SQL.format(sfx=""), tier="ext")
+@query("sql_recursive_reach", oracle=_RECURSIVE_SQL.format(sfx=""))
 def sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4): breadth-first reachability from nation
     0 over the trade graph, bounded at 3 hops, reporting min hops per
@@ -119,7 +119,7 @@ LATERAL (
 """
 
 
-@query("sql_lateral_topk", oracle=_LATERAL_SQL.format(sfx=""), tier="ext")
+@query("sql_lateral_topk", oracle=_LATERAL_SQL.format(sfx=""))
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery: top-2 orders per market segment,
     deterministic tie-break on orderkey — the same SQL text runs on
@@ -229,7 +229,6 @@ def sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_totalprice >= 150000 AND o_orderpriority = '1-URGENT'
     GROUP BY o_orderstatus
     """,
-    tier="ext",
 )
 def sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 SQL session variables + EXECUTE IMMEDIATE: thresholds
@@ -277,7 +276,6 @@ def sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n * 10 <= total
     ORDER BY t LIMIT 1
     """,
-    tier="ext",
 )
 def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4.1 SQL scripting (BEGIN…END, DECLARE, WHILE, SET with
@@ -322,7 +320,7 @@ ORDER BY ALL
 """
 
 
-@query("sql_group_by_all", oracle=_GBALL_SQL.format(sfx=""), tier="ext")
+@query("sql_group_by_all", oracle=_GBALL_SQL.format(sfx=""))
 def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL (Spark 3.4+/4, DuckDB): the modern
     analyst shorthand — every non-aggregate select item becomes a

@@ -94,14 +94,11 @@ def compare(key: str, spark_df: DataFrame, oracle_pdf: pd.DataFrame) -> DiffRepo
 
 
 def check_query(key: str, spark, sf_dir: str) -> DiffReport:
-    """Run one declared query against its oracle (or rows-only)."""
+    """Run one declared query against its oracle."""
     from datapipeline_scripts_spark.registry import get
 
     spec = get(key)
     sdf = spec.build(spark, sf_dir)
-    if spec.oracle is None:
-        n = sdf.count()
-        return DiffReport(key=key, ok=True, spark_rows=n, oracle_rows=-1, issues=["rows-only"])
     with duck_connection(sf_dir) as con:
         opdf = con.execute(spec.oracle).fetch_df()
     return compare(key, sdf, opdf)
@@ -227,9 +224,6 @@ def agg_hash_check(key: str, spark, sf_dir: str) -> DiffReport:
 
     spec = get(key)
     sdf = spec.build(spark, sf_dir)
-    if spec.oracle is None:
-        n = sdf.count()
-        return DiffReport(key=key, ok=True, spark_rows=n, oracle_rows=-1, issues=["rows-only"])
     s_cols, s_cls, s_n, s_fp = _spark_fingerprint(sdf)
     with duck_connection(sf_dir) as con:
         o_cols, o_cls, o_n, o_fp = _duck_fingerprint(con, spec.oracle)

@@ -108,7 +108,6 @@ def snapshot(
     snapshot_ts: str | None = None,
     partition_cols: dict[str, list[str]] | None = None,
     base_manifest: str | None = None,
-    max_workers: int = 1,
 ) -> str:
     """Snapshot every configured table; return the snapshot directory.
 
@@ -120,15 +119,9 @@ def snapshot(
     manifest path) and tables whose distributed content hash equals the
     base are NOT rewritten — their manifest entry points at the base
     snapshot (`based_on`). At 100 TB this turns the nightly job from a
-    full 100 TB write into hash scans + changed-table writes.
-
-    `max_workers > 1` submits per-table extract jobs from a driver
-    thread pool: Spark's scheduler interleaves their stages, so the
-    cluster stays busy through each table's scan→write→verify gaps
-    instead of draining between tables (the reference has no such
-    overlap — tables serialize through one pg_dump). Job submission
-    is thread-safe; results are collected in table order and any
-    table's failure fails the snapshot (A2 fail-fast)."""
+    full 100 TB write into hash scans + changed-table writes. Tables
+    run in order, and any table's failure fails the snapshot (A2
+    fail-fast)."""
     cfg = cfg or JobConfig()
     snapshot_ts = snapshot_ts or time.strftime("%Y_%m_%d_%H%M%S", time.gmtime())
     tables = [
@@ -182,20 +175,7 @@ def snapshot(
                 raise RuntimeError(f"snapshot of {name}: read-back (rows, hash) {(n, h)} != written {written}")
             return name, {"n_rows": n, "content_hash": h, "schema": restored.schema.json()}
 
-        table_entries: dict[str, dict] = {}
-        if max_workers > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                # pool.map preserves table order and re-raises the first
-                # failure — fail-fast with the lock still released in
-                # the enclosing finally
-                for name, entry in pool.map(_snap_table, tables):
-                    table_entries[name] = entry
-        else:
-            for name in tables:
-                name, entry = _snap_table(name)
-                table_entries[name] = entry
+        table_entries = dict(_snap_table(name) for name in tables)
         manifest = {
             "service": cfg.clamped_service,
             "env": cfg.env_name,
@@ -214,19 +194,3 @@ def snapshot(
             shutil.rmtree(snap_dir, ignore_errors=True)
         os.unlink(lock_path)  # A4 guaranteed cleanup
 
-
-def export_metadata_only(spark: SparkSession, sf_dir: str, out_path: str, cfg: JobConfig | None = None) -> str:
-    """A10 `pg_dumpall --globals-only` analogue: catalog metadata (table
-    schemas + row counts) without data. Unlike the reference's v≥10
-    quirk (metadata-only dumps replacing data dumps,
-    /root/reference/psql-backups.sh:117-121 — a bug we fix, SURVEY §7.2),
-    this is an *additional* artifact, never a substitute."""
-    cfg = cfg or JobConfig()
-    meta = {}
-    for name in cfg.tables or catalog.TABLES:
-        df = catalog.load_table(spark, sf_dir, name)
-        meta[name] = {"schema": json.loads(df.schema.json()), "n_rows": df.count()}
-    os.makedirs(os.path.dirname(out_path) or ".", exist_ok=True)
-    with open(out_path, "w") as fh:
-        json.dump(meta, fh, indent=2)
-    return out_path

@@ -54,18 +54,23 @@ def verify_snapshot(
     include: list[str] | None = None,
     exclude: tuple[str, ...] = (),
     drop_line_pattern: dict[str, tuple[str, str]] | None = None,
-    keep_scratch: bool = False,
 ) -> VerifyResult:
     """Full restore round-trip: snapshot → scratch warehouse → manifest
     parity. `drop_line_pattern` maps table → (column, regex) rows to
     filter out during restore (counts are then checked as
     original - dropped, with the dropped count observed on the restore
-    write itself)."""
+    write itself). A table named in `include` or `drop_line_pattern`
+    that the manifest lacks raises ValueError before any restore work:
+    a misspelt name must not verify nothing and report OK."""
     manifest_path = os.path.join(snapshot_dir, MANIFEST_NAME)
     with open(manifest_path) as fh:
         manifest = json.load(fh)
-    result = VerifyResult(snapshot_dir=snapshot_dir)
     tables = list(manifest["tables"])
+    for arg, names in (("include", include or ()), ("drop_line_pattern", drop_line_pattern or {})):
+        unknown = sorted(set(names) - set(tables))
+        if unknown:
+            raise ValueError(f"{arg} names tables not in {manifest_path}: {unknown}")
+    result = VerifyResult(snapshot_dir=snapshot_dir)
     if include is not None:  # A19 restore-list filtering
         tables = [t for t in tables if t in include]
     tables = [t for t in tables if t not in exclude]
@@ -104,8 +109,7 @@ def verify_snapshot(
                 continue
             result.tables_ok.append(name)
     finally:
-        if not keep_scratch:
-            shutil.rmtree(scratch_dir, ignore_errors=True)  # A4/A22 cleanup
+        shutil.rmtree(scratch_dir, ignore_errors=True)  # A4/A22 cleanup
     return result
 
 

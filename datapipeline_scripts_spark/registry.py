@@ -24,10 +24,14 @@ build()+action together, so nothing is hidden from measurement.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+import datapipeline_scripts_spark
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -36,21 +40,23 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     key: str
     build: Builder
-    oracle: str | None  # DuckDB SQL; None → rows-only check
-    tier: str  # "core" | "ext"
-    doc: str = ""
+    oracle: str  # DuckDB SQL twin
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(key: str, oracle: str | None, tier: str = "core", doc: str = ""):
-    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` as a declared query."""
+def query(key: str, oracle: str):
+    """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` as a declared
+    query. A key exists only beside its oracle twin, so a missing oracle
+    fails at import."""
+    if not isinstance(oracle, str) or not oracle.strip():
+        raise ValueError(f"query {key!r} needs a DuckDB oracle SQL string, got {oracle!r}")
 
     def wrap(fn: Builder) -> Builder:
         if key in _REGISTRY:
             raise ValueError(f"duplicate query key {key!r}")
-        _REGISTRY[key] = QuerySpec(key=key, build=fn, oracle=oracle, tier=tier, doc=doc or (fn.__doc__ or ""))
+        _REGISTRY[key] = QuerySpec(key=key, build=fn, oracle=oracle)
         return fn
 
     return wrap
@@ -70,12 +76,13 @@ _LOADED = False
 
 
 def _ensure_loaded() -> None:
-    """Import every module that registers queries (idempotent)."""
+    """Import every module of the package (idempotent): a module that
+    declares queries is registered by being there, with no list to
+    keep."""
     global _LOADED
     if _LOADED:
         return
-    from datapipeline_scripts_spark import operators, extensions, streaming  # noqa: F401
-    from datapipeline_scripts_spark.pipeline import roundtrip  # noqa: F401
-    from datapipeline_scripts_spark.sources import bucketed_query, compaction, format_queries, pysource, staged_r8, staged_r9, staged_r10, staged_r11, staged_r12, staged_r13  # noqa: F401
-
+    pkg = datapipeline_scripts_spark
+    for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(mod.name)
     _LOADED = True

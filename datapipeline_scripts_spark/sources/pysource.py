@@ -109,7 +109,7 @@ GROUP BY host, level
 """
 
 
-@query("pysource_scan", oracle=_PYSOURCE_ORACLE, tier="ext")
+@query("pysource_scan", oracle=_PYSOURCE_ORACLE)
 def pysource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan the custom Python DataSource and aggregate per (host,
     level). The source's partitions() fan out across executors; the
@@ -210,7 +210,7 @@ GROUP BY host, level
 """
 
 
-@query("pysource_stream", oracle=_PYSOURCE_STREAM_ORACLE, tier="ext")
+@query("pysource_stream", oracle=_PYSOURCE_STREAM_ORACLE)
 def pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the custom Python STREAMING source (availableNow; the
     offset range fans out partition-parallel in 1000-row chunks)

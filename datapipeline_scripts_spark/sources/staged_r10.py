@@ -1,7 +1,6 @@
 """Round-10 query keys — staged through round 9 (the staged_r9.py
 pattern, one round later) and REGISTERED in round 10 via the
-``@query`` decorators below plus the ``_ADDED_R10`` deferral union in
-``__spark_entry__.py``. Each key was held to the registration bar a
+``@query`` decorators below. Each key was held to the registration bar a
 full round before exposure: `tests/test_staged_r10.py` runs every
 builder against its DuckDB oracle at both fixture SFs, and the
 registration test pins the registry to the same builder/oracle pair
@@ -39,12 +38,6 @@ coverage of all three export sinks; see the section comment below.
 multimodal_resize: the RESIZE step of the multimodal chain — real
 BMP decode → exact integer box resample, arithmetic oracle; see the
 section comment below.
-
-Registration recipe (round 10): ``@query`` for all SIX keys,
-``_ADDED_R10`` in ``__spark_entry__.py``'s deferral union, staged_r10
-import in ``registry._ensure_loaded``, freeze counts 319 → 325
-(tests/test_staged_r8.py, test_staged_r9.py, test_staged_r10.py),
-COVERAGE.md + docs/SCALE.md.
 """
 
 from __future__ import annotations
@@ -101,7 +94,7 @@ TFRECORD_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("tfrecord_roundtrip", oracle=TFRECORD_ROUNDTRIP_ORACLE, tier="core")
+@query("tfrecord_roundtrip", oracle=TFRECORD_ROUNDTRIP_ORACLE)
 def tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TFRecord write→parse roundtrip under the driver harness — see
     the module docstring for the proof structure. Scale shape: the
@@ -185,7 +178,7 @@ TFEXAMPLE_DATASET_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("tfexample_dataset_roundtrip", oracle=TFEXAMPLE_DATASET_ROUNDTRIP_ORACLE, tier="core")
+@query("tfexample_dataset_roundtrip", oracle=TFEXAMPLE_DATASET_ROUNDTRIP_ORACLE)
 def tfexample_dataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed tf.Example export → typed import under the driver
     harness — see the section comment above. Scale shape: encode and
@@ -321,7 +314,7 @@ def _passage_oracle() -> str:
 DEDUP_PASSAGE_WINNOW_ORACLE = _passage_oracle()
 
 
-@query("dedup_passage_winnow", oracle=DEDUP_PASSAGE_WINNOW_ORACLE, tier="ext")
+@query("dedup_passage_winnow", oracle=DEDUP_PASSAGE_WINNOW_ORACLE)
 def dedup_passage_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared-passage pair detection — see the section comment above.
     Scale shape: the winnow min-window collapses |tokens| →
@@ -384,7 +377,7 @@ JSONL_EXPORT_ROUNDTRIP_ORACLE = """
     ORDER BY doc_id
 """
 
-@query("jsonl_export_roundtrip", oracle=JSONL_EXPORT_ROUNDTRIP_ORACLE, tier="core")
+@query("jsonl_export_roundtrip", oracle=JSONL_EXPORT_ROUNDTRIP_ORACLE)
 def jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed .jsonl.zst export → manifest-verified import under
     the driver harness — see the section comment above. Scale shape:
@@ -450,7 +443,7 @@ WEBDATASET_EXPORT_ROUNDTRIP_ORACLE = """
     ORDER BY doc_id
 """
 
-@query("webdataset_export_roundtrip", oracle=WEBDATASET_EXPORT_ROUNDTRIP_ORACLE, tier="core")
+@query("webdataset_export_roundtrip", oracle=WEBDATASET_EXPORT_ROUNDTRIP_ORACLE)
 def webdataset_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed WebDataset export → import under the driver
     harness — see the section comment above. Scale shape: one tar
@@ -570,7 +563,7 @@ def _resize_oracle() -> str:
 MULTIMODAL_RESIZE_ORACLE = _resize_oracle()
 
 
-@query("multimodal_resize", oracle=MULTIMODAL_RESIZE_ORACLE, tier="ext")
+@query("multimodal_resize", oracle=MULTIMODAL_RESIZE_ORACLE)
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real decode → exact box resize under the driver harness — see
     the section comment above. Scale shape: identical to the codec

@@ -145,23 +145,9 @@ int8 codes × the scaled iterate) and report the top-|projection|
 outliers; shares `_pca_learn`/`_pca_chain_sql` with the power key so
 the pair cannot fork; see the section comment below.
 
-Registration recipe (round 11): ``@query`` for all TWENTY-FOUR
-keys, ``_ADDED_R11`` in ``__spark_entry__.py``'s deferral union,
-staged_r11 import in ``registry._ensure_loaded``, freeze counts
-326 → 350
-(tests/test_staged_r8/9/10/11.py), COVERAGE.md + docs/SCALE.md. At
-the same flip add the four heavy new keys to ``bench.py``'s
-BENCH_KEYS (`crawl_pipeline`, `text_bpe_train`,
-`embedding_pca_power`, `dedup_bloom_incremental`) so the driver's
-per-round bench covers the new surface.
-
-The flip was DRY-RUN in a throwaway clone at the end of round 10:
-registering all 24 keys (programmatic stand-in for the decorators) +
-the registry import + the `_ADDED_R11` union took the catalog to 350
-with no import-order issues (this module's imports from
-extensions.similarity resolve cleanly inside `_ensure_loaded`), and
-`scripts/driver_sim.py sf0.01 30` over the flipped surface passed
-0/30 including every new key through the driver's own adapter path.
+Registration (round 11) took the catalog 326 → 350 and added the four
+heavy new keys to ``bench.py``'s BENCH_KEYS (`crawl_pipeline`,
+`text_bpe_train`, `embedding_pca_power`, `dedup_bloom_incremental`).
 """
 
 from __future__ import annotations
@@ -3096,21 +3082,16 @@ STAGED["embedding_pca_project"] = (
 )
 
 
-# ---- round-11 registration flip ---------------------------------------------
+# ---- registration -----------------------------------------------------------
 #
-# The deliberate flip (this module's docstring "Registration recipe"):
-# every staged key enters the registry, catalog 326 → 350. Programmatic
-# registration over STAGED is the decorator applied in a loop — the
-# oracles live below their builders in this module, so decorating at
-# definition sites would force every oracle above its function. The
-# STAGED dict stays authoritative for tests/test_staged_r11.py's
-# both-SF hash gate; registering from it guarantees the registry and
-# the staged proofs can never cover different (builder, oracle) pairs.
-
-_R11_CORE = {"federated_ingest_union", "arrow_ipc_roundtrip"}
+# Programmatic registration over STAGED is the decorator applied in a
+# loop: the oracles live below their builders in this module, so
+# decorating at definition sites would force every oracle above its
+# function. Registering from the dict the tests prove guarantees the
+# registry and the proofs cover the same (builder, oracle) pairs.
 
 from datapipeline_scripts_spark.registry import query as _query  # noqa: E402
 
 for _key, (_fn, _oracle) in STAGED.items():
-    _query(_key, oracle=_oracle, tier="core" if _key in _R11_CORE else "ext")(_fn)
+    _query(_key, oracle=_oracle)(_fn)
 del _key, _fn, _oracle

@@ -113,21 +113,7 @@ fixed a real scale bug pre-registration: fixed-width margin bins
 saturate as weights grow with training-set size → widths now derive
 from the data on both engines (docs/SCALE_EXPERIMENT.md).
 
-Registration recipe (round 12): register all keys from ``STAGED``
-(the staged_r11 programmatic flip), ``_ADDED_R12`` in
-``__spark_entry__.py``'s deferral union, staged_r12 import in
-``registry._ensure_loaded``, freeze counts 350 → 350+len(STAGED) (368
-at eighteen staged keys)
-across tests/test_staged_r*.py, COVERAGE.md + docs/SCALE.md, and any
-heavy keys into ``bench.py`` BENCH_KEYS with probed warm costs.
-
-The flip was DRY-RUN in a throwaway clone at the end of round 11
-(re-run after the final key landed): registering the staged keys
-(the programmatic loop) + the registry import + the `_ADDED_R12`
-union took the catalog to 350+len(STAGED) with no import-order
-issues, and `scripts/driver_sim.py sf0.01 50` over the flipped
-surface passed 0/50 including every new key through the driver's own
-adapter path (the window holds all new keys + stalest re-proofs).
+Registration (round 12) took the catalog 350 → 368.
 """
 
 from __future__ import annotations
@@ -2318,21 +2304,16 @@ STAGED["corpus_mixture_temperature"] = (
 )
 
 
-# ---- round-12 registration flip ---------------------------------------------
+# ---- registration -----------------------------------------------------------
 #
-# The deliberate flip (this module's docstring "Registration recipe"):
-# every staged key enters the registry, catalog 350 → 368. Programmatic
-# registration over STAGED is the decorator applied in a loop — the
-# oracles live below their builders in this module, so decorating at
-# definition sites would force every oracle above its function. The
-# STAGED dict stays authoritative for tests/test_staged_r12.py's
-# both-SF hash gate; registering from it guarantees the registry and
-# the staged proofs can never cover different (builder, oracle) pairs.
-
-_R12_CORE = {"crawl_increment_pipeline"}
+# Programmatic registration over STAGED is the decorator applied in a
+# loop: the oracles live below their builders in this module, so
+# decorating at definition sites would force every oracle above its
+# function. Registering from the dict the tests prove guarantees the
+# registry and the proofs cover the same (builder, oracle) pairs.
 
 from datapipeline_scripts_spark.registry import query as _query  # noqa: E402
 
 for _key, (_fn, _oracle) in STAGED.items():
-    _query(_key, oracle=_oracle, tier="core" if _key in _R12_CORE else "ext")(_fn)
+    _query(_key, oracle=_oracle)(_fn)
 del _key, _fn, _oracle

@@ -1,9 +1,7 @@
-"""Round-13 query keys, STAGED but NOT registered (the staged_r10/r11/
-r12 pattern, one round later): round 12's driver window is committed
-to the eighteen _ADDED_R12 keys plus stalest-evidence re-proofs, so
-the surface built in round 12 enters the registry in round 13 —
-already held to the registration bar here: `tests/test_staged_r13.py`
-runs every builder against its DuckDB oracle at both fixture SFs.
+"""Round-13 query keys, built in round 12 and registered in round 13
+(the staged_r10/r11/r12 pattern, one round later):
+`tests/test_staged_r13.py` runs every builder against its DuckDB
+oracle at both fixture SFs.
 
 The round-12 steer (VERDICT r11 items 3 and 4) named the two frontier
 gaps this module closes first, then widens around them:
@@ -130,20 +128,7 @@ Scale shapes (docs/SCALE.md §E1/E2 arguments carry over):
   bound.
 - rebalance: O(|hot list|) reassignment against 2 broadcast rows.
 
-Registration recipe (round 13): register all keys from ``STAGED``
-(the staged_r11/r12 programmatic flip), ``_ADDED_R13`` in
-``__spark_entry__.py``'s deferral union, staged_r13 import in
-``registry._ensure_loaded``, freeze counts 368 -> 368+len(STAGED)
-across tests/test_staged_r*.py, COVERAGE.md + docs/SCALE.md, and any
-heavy keys into ``bench.py`` BENCH_KEYS with probed warm costs
-(docs/BENCH_NOTES.md "Round-13 prospective").
-
-The flip was DRY-RUN in a throwaway clone at the end of round 12:
-registering the staged keys + the registry import + the
-``_ADDED_R13`` union took the catalog to 368+len(STAGED) with no
-import-order issues, and ``scripts/driver_sim.py sf0.01 50`` over the
-flipped surface passed 0/50 including every new key through the
-driver's own adapter path.
+Registration (round 13) took the catalog 368 → 379.
 """
 
 from __future__ import annotations
@@ -1730,22 +1715,16 @@ TEXT_BPE_FERTILITY_ORACLE = _fertility_oracle()
 STAGED["text_bpe_fertility"] = (text_bpe_fertility, TEXT_BPE_FERTILITY_ORACLE)
 
 
-# ---- round-13 registration flip ---------------------------------------------
+# ---- registration -----------------------------------------------------------
 #
-# The deliberate flip (this module's docstring "Registration recipe",
-# dry-run in a throwaway clone at the end of round 12): every staged
-# key enters the registry, catalog 368 → 379. Programmatic
-# registration over STAGED is the decorator applied in a loop — the
-# oracles live below their builders in this module, so decorating at
-# definition sites would force every oracle above its function. The
-# STAGED dict stays authoritative for tests/test_staged_r13.py's
-# both-SF hash gate; registering from it guarantees the registry and
-# the staged proofs can never cover different (builder, oracle) pairs.
-
-_R13_CORE = {"corpus_selection_pipeline"}
+# Programmatic registration over STAGED is the decorator applied in a
+# loop: the oracles live below their builders in this module, so
+# decorating at definition sites would force every oracle above its
+# function. Registering from the dict the tests prove guarantees the
+# registry and the proofs cover the same (builder, oracle) pairs.
 
 from datapipeline_scripts_spark.registry import query as _query  # noqa: E402
 
 for _key, (_fn, _oracle) in STAGED.items():
-    _query(_key, oracle=_oracle, tier="core" if _key in _R13_CORE else "ext")(_fn)
+    _query(_key, oracle=_oracle)(_fn)
 del _key, _fn, _oracle

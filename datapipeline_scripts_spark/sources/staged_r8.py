@@ -5,9 +5,7 @@ VERDICT r6 item 2 froze the catalog at 306 keys until the driver's
 round-7 window closed the correctness gate; CORRECTNESS_r07 closed it
 (306/306 cumulative, VERDICT r7 headline), so round 8 flips these five
 builders live exactly per the staged recipe (VERDICT r7 item 1): the
-``@query`` registrations below, plus an ``_ADDED_R8`` deferral set in
-``__spark_entry__.py`` so the keys enter the driver window without
-displacing anything. They were oracle-proven at sf0.001+sf0.01 while
+``@query`` registrations below. They were oracle-proven at sf0.001+sf0.01 while
 staged (`tests/test_staged_r8.py`), so registration is the only change
 this round.
 
@@ -46,7 +44,7 @@ AVRO_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("avro_roundtrip", oracle=AVRO_ROUNDTRIP_ORACLE, tier="core")
+@query("avro_roundtrip", oracle=AVRO_ROUNDTRIP_ORACLE)
 def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → Avro Object Container Files via the two-tier sink
     (`readers.write_avro`: spark-avro when on the classpath, the pure
@@ -164,7 +162,7 @@ PROTOBUF_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("protobuf_roundtrip", oracle=PROTOBUF_ROUNDTRIP_ORACLE, tier="core")
+@query("protobuf_roundtrip", oracle=PROTOBUF_ROUNDTRIP_ORACLE)
 def protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → protobuf wire bytes (Arrow-batched encoder, public
     wire format) → `readers.protobuf_decode` (spark-protobuf on a
@@ -218,7 +216,8 @@ def protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- multimodal_real_png ----------------------------------------------------
 #
 # VERDICT r6 item 5: nothing RUNS the stdlib PNG decoder under the
-# driver harness (the REAL_DECODE env path is rows-only by design).
+# driver harness (the REAL_DECODE env path is outside the oracles by
+# design).
 # This key encodes a real PNG per document executor-side (grayscale
 # 8-bit, pixel values a pure function of doc_id), decodes it with the
 # REAL stdlib decoder (png_stdlib — zlib inflate, filter inversion,
@@ -300,7 +299,7 @@ def _real_png_oracle() -> str:
 MULTIMODAL_REAL_PNG_ORACLE = _real_png_oracle()
 
 
-@query("multimodal_real_png", oracle=MULTIMODAL_REAL_PNG_ORACLE, tier="ext")
+@query("multimodal_real_png", oracle=MULTIMODAL_REAL_PNG_ORACLE)
 def multimodal_real_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real PNG decode under the driver harness: per-document PNGs
     (pixel values a pure function of doc_id) are encoded AND decoded
@@ -346,7 +345,7 @@ JDBC_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("jdbc_roundtrip", oracle=JDBC_ROUNDTRIP_ORACLE, tier="core")
+@query("jdbc_roundtrip", oracle=JDBC_ROUNDTRIP_ORACLE)
 def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → a REAL relational database (embedded Apache Derby, the
     JDBC driver baked into this Spark) via the JDBC sink → 4-way
@@ -425,7 +424,7 @@ AVRO_LOGICAL_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("avro_logical_roundtrip", oracle=AVRO_LOGICAL_ROUNDTRIP_ORACLE, tier="core")
+@query("avro_logical_roundtrip", oracle=AVRO_LOGICAL_ROUNDTRIP_ORACLE)
 def avro_logical_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem dates and decimals through the Avro LOGICAL types
     (`int/date`, `bytes/decimal`) via the two-tier sink and source —

@@ -1,10 +1,10 @@
 """Round-9 query keys — staged through the round-8 catalog freeze,
 REGISTERED in round 9 (VERDICT r8 item 1, the staged_r8.py recipe one
-round later): the ``@query`` registrations below plus an ``_ADDED_R9``
-deferral set in ``__spark_entry__.py`` put the round-8 codec/ingest
-work under the driver's own hash gate. Every key was oracle-proven at
-sf0.001 + sf0.01 while staged (`tests/test_staged_r9.py`) AND at the
-10× proxy (`scripts/staged_scale_check.py`), so registration is the
+round later): the ``@query`` registrations below put the round-8
+codec/ingest work under the driver's own hash gate. Every key was
+oracle-proven at sf0.001 + sf0.01 while staged
+(`tests/test_staged_r9.py`) AND at the 10× proxy
+(`scripts/check_all.py <proxy_dir> key1,key2`), so registration is the
 only change this round.
 
 multimodal_real_jpeg: per-document baseline JPEGs are ENCODED and
@@ -133,7 +133,7 @@ def _real_jpeg_oracle() -> str:
 MULTIMODAL_REAL_JPEG_ORACLE = _real_jpeg_oracle()
 
 
-@query("multimodal_real_jpeg", oracle=MULTIMODAL_REAL_JPEG_ORACLE, tier="ext")
+@query("multimodal_real_jpeg", oracle=MULTIMODAL_REAL_JPEG_ORACLE)
 def multimodal_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real baseline-JPEG decode under the driver harness — see the
     module docstring for the proof structure. Scale shape:
@@ -271,7 +271,7 @@ def _real_gif_oracle() -> str:
 MULTIMODAL_REAL_GIF_ORACLE = _real_gif_oracle()
 
 
-@query("multimodal_real_gif", oracle=MULTIMODAL_REAL_GIF_ORACLE, tier="ext")
+@query("multimodal_real_gif", oracle=MULTIMODAL_REAL_GIF_ORACLE)
 def multimodal_real_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real GIF decode under the driver harness — see the section
     comment above for the proof structure. Scale shape: identical to
@@ -387,7 +387,7 @@ def _real_tiff_oracle() -> str:
 MULTIMODAL_REAL_TIFF_ORACLE = _real_tiff_oracle()
 
 
-@query("multimodal_real_tiff", oracle=MULTIMODAL_REAL_TIFF_ORACLE, tier="ext")
+@query("multimodal_real_tiff", oracle=MULTIMODAL_REAL_TIFF_ORACLE)
 def multimodal_real_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real TIFF decode under the driver harness — see the section
     comment above for the rotation. Scale shape: identical to the
@@ -480,7 +480,7 @@ def _real_wav_oracle() -> str:
 MULTIMODAL_REAL_WAV_ORACLE = _real_wav_oracle()
 
 
-@query("multimodal_real_wav", oracle=MULTIMODAL_REAL_WAV_ORACLE, tier="ext")
+@query("multimodal_real_wav", oracle=MULTIMODAL_REAL_WAV_ORACLE)
 def multimodal_real_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real PCM-WAV decode under the driver harness — see the section
     comment above. Scale shape: identical to the image siblings
@@ -612,7 +612,7 @@ def _real_video_oracle() -> str:
 MULTIMODAL_REAL_VIDEO_ORACLE = _real_video_oracle()
 
 
-@query("multimodal_real_video", oracle=MULTIMODAL_REAL_VIDEO_ORACLE, tier="ext")
+@query("multimodal_real_video", oracle=MULTIMODAL_REAL_VIDEO_ORACLE)
 def multimodal_real_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real MJPEG-AVI demux + frame decode under the driver harness —
     see the section comment above. Scale shape: demux is O(file) per
@@ -705,7 +705,7 @@ WARC_ROUNDTRIP_ORACLE = f"""
 # row hashes identically on both sides (ADVICE r08 item 2).
 
 
-@query("warc_roundtrip", oracle=WARC_ROUNDTRIP_ORACLE, tier="core")
+@query("warc_roundtrip", oracle=WARC_ROUNDTRIP_ORACLE)
 def warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC write→parse roundtrip under the driver harness — see the
     section comment above. Scale shape: the production `read_warc`
@@ -782,7 +782,7 @@ WEBDATASET_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("webdataset_roundtrip", oracle=WEBDATASET_ROUNDTRIP_ORACLE, tier="core")
+@query("webdataset_roundtrip", oracle=WEBDATASET_ROUNDTRIP_ORACLE)
 def webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset pack→walk roundtrip under the driver harness — see
     the section comment above. Scale shape: production
@@ -859,7 +859,7 @@ JSONL_ZST_ROUNDTRIP_ORACLE = """
 """
 
 
-@query("jsonl_zst_roundtrip", oracle=JSONL_ZST_ROUNDTRIP_ORACLE, tier="core")
+@query("jsonl_zst_roundtrip", oracle=JSONL_ZST_ROUNDTRIP_ORACLE)
 def jsonl_zst_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """jsonl.zst write→read roundtrip under the driver harness — see
     the section comment above. Scale shape: production

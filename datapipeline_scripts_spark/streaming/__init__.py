@@ -1,5 +1,3 @@
 """Event-time operators (SURVEY §2.E E5/E6): windows, sessions, as-of
 joins — batch forms registered as queries; true Structured Streaming
 variants in `stream_jobs` (exercised by tests)."""
-
-from datapipeline_scripts_spark.streaming import asof, cdc_stream, foreach_sink, kafka, stream_jobs, windows  # noqa: F401

@@ -168,7 +168,6 @@ def _merge_asof_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     ASOF LEFT JOIN o
       ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
     """,
-    tier="ext",
 )
 def asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same as-of semantics via union → repartition by user →
@@ -227,7 +226,6 @@ def asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(dist_us // 1000000 AS BIGINT) AS dist_s
     FROM cand WHERE rn = 1
     """,
-    tier="ext",
 )
 def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bidirectional nearest-neighbor as-of: each purchase matched to

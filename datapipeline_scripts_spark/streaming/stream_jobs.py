@@ -306,7 +306,6 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM matched UNION ALL SELECT * FROM unmatched
     """,
-    tier="ext",
 )
 def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join: like `events_stream_join` but
@@ -382,7 +381,6 @@ def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     WHERE session_end <= (SELECT max(ts) - INTERVAL 2 HOUR FROM events)
     """,
-    tier="ext",
 )
 def events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True-streaming sessionization with `F.session_window` (30-min
@@ -426,7 +424,6 @@ def events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY 1
     """,
-    tier="ext",
 )
 def events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True-streaming sliding window (2 h length, 1 h slide): each
@@ -461,7 +458,6 @@ def events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM agg)
     WHERE rn = 1
     """,
-    tier="ext",
 )
 def events_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trending item over a live stream: the windowed aggregation runs
@@ -491,7 +487,7 @@ def _ohlc_oracle() -> str:
     return _OHLC_ORACLE
 
 
-@query("events_stream_ohlc", oracle=_ohlc_oracle(), tier="ext")
+@query("events_stream_ohlc", oracle=_ohlc_oracle())
 def events_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC bars computed BY THE STREAMING ENGINE: the same
     min_by/max_by aggregation as the batch `time_ohlc_bars`, run as a

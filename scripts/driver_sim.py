@@ -38,18 +38,14 @@ def main() -> int:
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    missing = [k for k in queries if k not in oracles]
-    print(f"{len(queries)} queries, {len(oracles)} oracles, {len(missing)} rows-only", flush=True)
+    print(f"{len(queries)} queries, {len(oracles)} oracles", flush=True)
 
     con = duck_connection(sf_dir)
     failures = 0
     for key in list(queries)[:n_keys]:
         try:
             sdf = queries[key](spark, sf_dir)
-            odf = con.execute(oracles[key]).df() if key in oracles else None
-            if odf is None:
-                print(f"[ROWS] {key}: {sdf.count()} rows (no oracle)", flush=True)
-                continue
+            odf = con.execute(oracles[key]).df()
             report = compare(key, sdf, odf)
             print(report, flush=True)
             if not report.ok:

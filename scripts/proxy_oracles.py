@@ -123,8 +123,7 @@ def _label_prop(con, pairs_table: str, p: str, max_iters: int = 50) -> str:
     table -> temp table `{p}_membership` (doc_id, cluster_id): the
     engine's own connected-components algorithm replayed in SQL,
     bounded by graph diameter, replacing the O(sum cluster_size^2)-row
-    recursive closure that budget-outs at deep rungs. Shared by the
-    clusters and split-leakage twins so the two cannot drift."""
+    recursive closure that budget-outs at deep rungs."""
     con.execute(
         f"""
         CREATE OR REPLACE TEMP TABLE {p}_edges AS
@@ -279,57 +278,10 @@ def twin_text_contamination(con) -> str:
     return "tc_final"
 
 
-def twin_split_leakage_audit(con) -> str:
-    """Staged twin for the STAGED split_leakage_audit key: minhash
-    pairs via the staged signature table (twin_dedup_minhash), the
-    shared iterative label propagation, then the split-mix census —
-    the plain oracle's recursive closure budget-outs past the 10x
-    rung exactly like dedup_clusters' did."""
-    from datapipeline_scripts_spark.functions.text import md5_48_sql
-    from datapipeline_scripts_spark.sources.staged_r14 import (
-        _SL_TRAIN_PCT,
-        _SL_VAL_PCT,
-    )
-
-    twin_dedup_minhash(con)
-    _label_prop(con, "mh_final", "sl")
-    h = md5_48_sql("CAST(doc_id AS VARCHAR)")
-    con.execute(
-        f"""
-        CREATE OR REPLACE TEMP TABLE sl_final AS
-        WITH sp AS (
-          SELECT doc_id, cluster_id,
-                 CASE WHEN ({h}) % 100 < {_SL_TRAIN_PCT} THEN 'train'
-                      WHEN ({h}) % 100 < {_SL_TRAIN_PCT + _SL_VAL_PCT} THEN 'val'
-                      ELSE 'test' END AS split
-          FROM sl_membership
-        ),
-        mix AS (
-          SELECT cluster_id,
-                 string_agg(DISTINCT split, '+' ORDER BY split) AS split_mix,
-                 count(*) AS nd,
-                 count(*) FILTER (WHERE split = 'train') AS nt,
-                 count(*) FILTER (WHERE split = 'val') AS nv,
-                 count(*) FILTER (WHERE split = 'test') AS ns
-          FROM sp GROUP BY cluster_id
-        )
-        SELECT split_mix,
-               CAST(count(*) AS BIGINT) AS n_clusters,
-               CAST(sum(nd) AS BIGINT) AS n_docs,
-               CAST(sum(nt) AS BIGINT) AS n_train,
-               CAST(sum(nv) AS BIGINT) AS n_val,
-               CAST(sum(ns) AS BIGINT) AS n_test
-        FROM mix GROUP BY split_mix
-        """
-    )
-    return "sl_final"
-
-
 _TWINS = {
     "dedup_minhash": twin_dedup_minhash,
     "dedup_clusters": twin_dedup_clusters,
     "text_contamination": twin_text_contamination,
-    "split_leakage_audit": twin_split_leakage_audit,
 }
 
 # Keys whose RESULT is too large to distinct/fingerprint in one Spark
@@ -394,17 +346,7 @@ def main() -> int:
     if unknown:
         raise SystemExit(f"no twin oracle for: {sorted(unknown)}")
     spark = get_spark("proxy_oracles")
-    specs = dict(all_queries())
-    # staged keys are twin-provable before registration (the
-    # split_leakage_audit precedent): resolve them from the staged
-    # dict when the registry does not know them yet
-    from types import SimpleNamespace
-
-    from datapipeline_scripts_spark.sources.staged_r14 import STAGED as _STAGED_R14
-
-    for _k, (_fn, _orc) in _STAGED_R14.items():
-        if _k not in specs:
-            specs[_k] = SimpleNamespace(build=_fn, oracle=_orc)
+    specs = all_queries()
     failures = 0
     for key in sorted(only):
         t0 = time.time()

@@ -31,9 +31,8 @@ def main() -> int:
     specs = all_queries()
     if args.list or not args.key:
         for key in sorted(specs):
-            spec = specs[key]
-            kind = "oracle" if spec.oracle else "rows-only"
-            print(f"{key:24s} [{spec.tier}/{kind}] {spec.doc.strip().splitlines()[0] if spec.doc else ''}")
+            doc = (specs[key].build.__doc__ or "").strip()
+            print(f"{key:24s} {doc.splitlines()[0] if doc else ''}")
         return 0
     if args.key not in specs:
         print(f"unknown key {args.key!r}; use --list", file=sys.stderr)

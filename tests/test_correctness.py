@@ -15,5 +15,4 @@ KEYS = sorted(all_queries())
 def test_query_matches_oracle(key: str, spark, sf_dir: str) -> None:
     report = check_query(key, spark, sf_dir)
     assert report.ok, str(report)
-    if report.oracle_rows >= 0:
-        assert report.spark_rows == report.oracle_rows
+    assert report.spark_rows == report.oracle_rows

@@ -1,59 +1,78 @@
 """Adapter-surface guards: the driver consumes __spark_entry__.py's
 queries()/oracle_sql() dicts and proves the FIRST 50 keys each round —
-a typo in the rotation sets or a missing oracle entry silently burns a
+a misordered rotation or a missing oracle entry silently burns a
 round's worth of driver budget, so lock the contract here."""
 
 from __future__ import annotations
 
+import hashlib
 import importlib.util
+import json
 import os
+import subprocess
+import sys
 
-from datapipeline_scripts_spark.registry import all_queries
+import pytest
+
+from datapipeline_scripts_spark.registry import all_queries, query
+from datapipeline_scripts_spark.sources import staged_r8, staged_r9, staged_r10, staged_r11, staged_r12, staged_r13
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _entry_module():
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+    path = os.path.join(_REPO, "__spark_entry__.py")
     spec = importlib.util.spec_from_file_location("spark_entry_under_test", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-def test_added_r3_keys_all_registered():
-    mod = _entry_module()
+# sha256 of the sorted registered keys joined by newlines. A change to
+# the catalog's key set is a deliberate, reviewed edit of this constant.
+_KEYSET_SHA256 = "ff20da377f89ad41ff611c93f82b220939705b894d62b7af0c8963bbfb426e79"
+
+
+def test_registry_imports_every_package_module():
+    """The registry finds its modules by walking the package, so no
+    module can sit unimported (and its keys unregistered) because a
+    hand-kept list forgot it. Checked in a fresh interpreter, where
+    nothing but the registry has imported the package."""
+    probe = (
+        "import json, pkgutil, sys, datapipeline_scripts_spark as p\n"
+        "from datapipeline_scripts_spark.registry import all_queries\n"
+        "keys = sorted(all_queries())\n"
+        "walked = [m.name for m in pkgutil.walk_packages(p.__path__, p.__name__ + '.')]\n"
+        "print(json.dumps({'walked': walked, 'missing': [m for m in walked if m not in sys.modules], 'keys': keys}))"
+    )
+    out = subprocess.run([sys.executable, "-c", probe], cwd=_REPO, capture_output=True, text=True, check=True)
+    got = json.loads(out.stdout.splitlines()[-1])
+    assert len(got["walked"]) > 50
+    assert got["missing"] == []
+    assert len(got["keys"]) == 379
+    assert hashlib.sha256("\n".join(got["keys"]).encode()).hexdigest() == _KEYSET_SHA256
+
+
+def test_query_without_an_oracle_is_refused():
+    """A key exists only beside its DuckDB twin: registering one without
+    an oracle raises at declaration time and registers nothing."""
+    with pytest.raises(ValueError, match="oracle"):
+        query("no_oracle_key", None)
+    with pytest.raises(ValueError, match="oracle"):
+        query("no_oracle_key", "  ")
+    assert "no_oracle_key" not in all_queries()
+
+
+def test_staged_keys_registered_with_correct_builders():
+    """Every key the round-named modules register from their STAGED dict
+    is bound to the same builder and oracle their proofs run."""
     specs = all_queries()
-    missing = sorted(k for k in mod._ADDED_R3 if k not in specs)
-    assert not missing, f"_ADDED_R3 names unregistered keys: {missing}"
-
-
-def test_added_r8_keys_registered_and_lead_the_window():
-    """Round-8 flip (VERDICT r7 item 1): the five staged keys are
-    registered, named in _ADDED_R8, and — having no driver evidence —
-    occupy the front of the 50-key window."""
-    mod = _entry_module()
-    specs = all_queries()
-    missing = sorted(k for k in mod._ADDED_R8 if k not in specs)
-    assert not missing, f"_ADDED_R8 names unregistered keys: {missing}"
-    proven = mod._driver_proven_keys()
-    head = mod._ordered_keys()[:50]
-    unproven_new = sorted(mod._ADDED_R8 - set(proven))
-    stragglers = [k for k in unproven_new if k not in head]
-    assert not stragglers, f"new keys outside the driver window: {stragglers}"
-
-
-def test_added_r9_keys_registered_and_lead_the_window():
-    """Round-9 flip (VERDICT r8 item 1): the eight staged keys are
-    registered, named in _ADDED_R9, and — having no driver evidence —
-    occupy the front of the 50-key window."""
-    mod = _entry_module()
-    specs = all_queries()
-    missing = sorted(k for k in mod._ADDED_R9 if k not in specs)
-    assert not missing, f"_ADDED_R9 names unregistered keys: {missing}"
-    proven = mod._driver_proven_keys()
-    head = mod._ordered_keys()[:50]
-    unproven_new = sorted(mod._ADDED_R9 - set(proven))
-    stragglers = [k for k in unproven_new if k not in head]
-    assert not stragglers, f"new keys outside the driver window: {stragglers}"
+    for mod in (staged_r8, staged_r9, staged_r10, staged_r11, staged_r12, staged_r13):
+        for key, (fn, oracle) in mod.STAGED.items():
+            assert key in specs, key
+            assert specs[key].build is fn, key
+            assert specs[key].oracle == oracle, key
 
 
 def test_proven_tail_ordered_stalest_evidence_first():
@@ -93,13 +112,6 @@ def test_spare_window_slots_land_on_stalest_cohort():
         )
 
 
-def test_every_query_has_an_oracle():
-    # round-2 milestone: zero rows-only entries — keep it that way
-    specs = all_queries()
-    rows_only = sorted(k for k, s in specs.items() if s.oracle is None)
-    assert not rows_only, f"queries without a DuckDB oracle: {rows_only}"
-
-
 def test_entry_exports_cover_registry():
     mod = _entry_module()
     q = mod.queries()
@@ -133,6 +145,11 @@ def test_rotation_puts_every_unproven_key_first():
     assert not stragglers, (
         f"unproven keys ordered BEHIND a proven key (driver budget wasted): {stragglers}"
     )
+    # the same rule with a backlog: the ten freshest keys lose their
+    # evidence and must move from the back to the front of the order
+    unproven = set(ordered[-10:])
+    mod._driver_proven_keys = lambda: {k: r for k, r in proven.items() if k not in unproven}
+    assert set(mod._ordered_keys()[:10]) == unproven
     # and the parsed evidence itself must be non-trivial: the rotation
     # reads CORRECTNESS_r*.json at import, so an accidental rename/move
     # of those files would silently reset the whole rotation

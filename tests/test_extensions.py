@@ -1,5 +1,5 @@
 """Quality tests for the sketch-based dedup/similarity operators —
-rows-only queries still need their *semantics* verified: recall of the
+beyond the oracle hash, their *semantics* need verifying: recall of the
 LSH candidates against exact Jaccard, SimHash locality, bucketed-ANN
 containment in the brute-force ranking."""
 

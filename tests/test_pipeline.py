@@ -41,13 +41,17 @@ def snap_dir(spark, sf_dir, tmp_path_factory):
     return path
 
 
-def test_snapshot_layout_and_manifest(snap_dir):
+def test_snapshot_layout_and_manifest(spark, sf_dir, snap_dir):
     assert snap_dir.endswith("test/unit-test-service/2026_01_01_000000")
     with open(os.path.join(snap_dir, MANIFEST_NAME)) as fh:
         manifest = json.load(fh)
     assert set(manifest["tables"]) == set(TABLES)
     assert manifest["tables"]["region"]["n_rows"] == 5
     assert manifest["tables"]["nation"]["n_rows"] == 25
+    # A10: the manifest is the metadata-only artifact — every table's
+    # schema and row count, readable without touching the data
+    for name in TABLES:
+        assert manifest["tables"][name]["schema"] == catalog.load_table(spark, sf_dir, name).schema.json()
     # check-in recorded at the service root (dead-man's-switch analogue)
     service_root = os.path.dirname(snap_dir)
     with open(os.path.join(service_root, CHECKINS_NAME)) as fh:
@@ -63,6 +67,19 @@ def test_verify_round_trip_ok(spark, snap_dir, tmp_path):
 def test_verify_include_exclude(spark, snap_dir, tmp_path):
     result = verify_snapshot(spark, snap_dir, str(tmp_path / "s2"), include=["region", "nation"], exclude=("nation",))
     assert result.tables_ok == ["region"]
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [{"include": ["regoin"]}, {"drop_line_pattern": {"regoin": ("r_name", "^A")}}],
+    ids=["include", "drop_line_pattern"],
+)
+def test_verify_rejects_tables_missing_from_manifest(spark, snap_dir, tmp_path, kwargs):
+    # a misspelt table must not verify nothing and report OK
+    scratch = tmp_path / "s_unknown"
+    with pytest.raises(ValueError, match="regoin"):
+        verify_or_raise(spark, snap_dir, str(scratch), **kwargs)
+    assert not scratch.exists()
 
 
 def test_verify_drop_line_pattern(spark, snap_dir, tmp_path):
@@ -235,20 +252,6 @@ def test_config_env_defaults(monkeypatch):
     cfg = JobConfig()
     assert cfg.attempts == 3
     assert cfg.service_name == "svc-from-env"
-
-
-def test_snapshot_parallel_matches_sequential(spark, sf_dir, snap_dir, tmp_path):
-    # driver-side thread pool must yield the same manifest content as
-    # the sequential path (same hashes/rows/schemas), just faster
-    root = str(tmp_path / "psnap")
-    pdir = snapshot(
-        spark, sf_dir, root, cfg=_cfg(), snapshot_ts="2026_01_02_000000", max_workers=3
-    )
-    with open(os.path.join(pdir, MANIFEST_NAME)) as fh:
-        par = json.load(fh)["tables"]
-    with open(os.path.join(snap_dir, MANIFEST_NAME)) as fh:
-        seq = json.load(fh)["tables"]
-    assert par == seq
 
 
 # --- fingerprint: hash compatibility and partition invariance ---------------

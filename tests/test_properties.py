@@ -460,81 +460,3 @@ def test_bpe_apply_merge_matches_python_model(spark, sym_lists, pair):
         assert got[i] == want, (s, pair, got[i], want)
         assert len(got[i]) <= len(s)
         assert "".join(got[i]) == "".join(s)
-
-
-# PII-ish text: words over a digit/punct-rich alphabet so generated
-# strings routinely contain partial matches, boundary cases, and
-# adjacent-class collisions (e.g. digit runs beside hyphens/dots).
-_PII_CHARS = st.characters(
-    whitelist_categories=(), whitelist_characters="abcde012345.-@_ %+"
-)
-_PII_TEXT = st.text(alphabet=_PII_CHARS, min_size=0, max_size=40)
-_PII_SNIPPETS = st.sampled_from(
-    [
-        "user4@mail3.example.com",
-        "u@x.co",
-        "555-012-3456",
-        "123-45-6789",
-        "10.1.2.3",
-        "192.168.7.200",
-        "1.2.3.4.5",
-        "12-34-5678",
-        "a@b",
-        "....",
-        "@@",
-        "1-2-3",
-        "999-999-9999",
-        "000-00-0000",
-    ]
-)
-
-
-@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    st.lists(
-        st.tuples(_PII_TEXT, _PII_SNIPPETS, _PII_TEXT), min_size=1, max_size=8
-    )
-)
-def test_pii_redaction_matches_python_model(spark, parts):
-    """The staged r14 redaction chain (fixed class order, placeholder
-    rewrites) must equal an independent Python `re` model on
-    arbitrary digit/punct-rich text with embedded real/near-miss PII
-    snippets — pinning the Java-regex semantics the oracle's RE2 twin
-    was probed against, including boundary (\\b) behavior at class
-    collisions. Counting must agree too (regexp_count vs findall)."""
-    import re
-
-    from datapipeline_scripts_spark.sources.staged_r14 import (
-        _PII_PLACEHOLDER,
-        _PII_RE,
-        _PII_REDACT_ORDER,
-        _redacted,
-    )
-
-    texts = [f"{a} {b} {c}" for a, b, c in parts]
-
-    def py_redact(t: str) -> str:
-        for k in _PII_REDACT_ORDER:
-            t = re.sub(_PII_RE[k], _PII_PLACEHOLDER[k], t)
-        return t
-
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    rows = (
-        df.select(
-            F.col("t"),
-            _redacted(F.col("t")).alias("red"),
-            *[
-                F.regexp_count("t", F.lit(_PII_RE[k])).alias(f"n_{k}")
-                for k in sorted(_PII_RE)
-            ],
-        )
-        .collect()
-    )
-    by_text = {}
-    for r in rows:
-        by_text.setdefault(r["t"], r)
-    for t in texts:
-        r = by_text[t]
-        assert r["red"] == py_redact(t), t
-        for k in sorted(_PII_RE):
-            assert r[f"n_{k}"] == len(re.findall(_PII_RE[k], t)), (t, k)
