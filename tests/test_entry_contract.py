@@ -15,7 +15,6 @@ import sys
 import pytest
 
 from datapipeline_scripts_spark.registry import all_queries, query
-from datapipeline_scripts_spark.sources import staged_r8, staged_r9, staged_r10, staged_r11, staged_r12, staged_r13
 
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -62,17 +61,6 @@ def test_query_without_an_oracle_is_refused():
     with pytest.raises(ValueError, match="oracle"):
         query("no_oracle_key", "  ")
     assert "no_oracle_key" not in all_queries()
-
-
-def test_staged_keys_registered_with_correct_builders():
-    """Every key the round-named modules register from their STAGED dict
-    is bound to the same builder and oracle their proofs run."""
-    specs = all_queries()
-    for mod in (staged_r8, staged_r9, staged_r10, staged_r11, staged_r12, staged_r13):
-        for key, (fn, oracle) in mod.STAGED.items():
-            assert key in specs, key
-            assert specs[key].build is fn, key
-            assert specs[key].oracle == oracle, key
 
 
 def test_proven_tail_ordered_stalest_evidence_first():

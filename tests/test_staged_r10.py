@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from datapipeline_scripts_spark.oracle import compare, duck_connection
+from datapipeline_scripts_spark.registry import all_queries
 from datapipeline_scripts_spark.sources.staged_r10 import STAGED
 
 
@@ -24,3 +25,17 @@ def test_staged_key_matches_oracle(spark, key, sf_dir):
     report = compare(key, sdf, opdf)
     assert report.ok, str(report)
     assert report.spark_rows > 0
+
+
+def test_r10_keys_registered_with_correct_builders():
+    """Round 10 flipped the staged keys live: every STAGED key must be
+    in the registry, bound to the SAME builder and oracle the proofs
+    above ran (the decorating-the-wrong-function failure mode breaks
+    the driver contract silently), and the catalog is 379 (368 + the
+    eleven round-13 registrations)."""
+    specs = all_queries()
+    assert len(specs) == 379
+    for key, (fn, oracle) in STAGED.items():
+        assert key in specs, key
+        assert specs[key].build is fn, key
+        assert specs[key].oracle == oracle, key
