@@ -64,10 +64,15 @@ def _ship_package(spark: SparkSession) -> None:
     cwd=/root/repo (local-mode workers inherit the cwd), but an
     externally-launched driver may run anywhere — so ship a zip of the
     package via addPyFile once per SparkContext (SparkFiles paths are
-    prepended to worker sys.path per task)."""
+    prepended to worker sys.path per task).
+
+    The zip stays in the temp directory while the context may still
+    ship it to a new executor, and is removed when the driver process
+    exits (A4 guaranteed cleanup); Spark removes its own SparkFiles copy."""
     sc = spark.sparkContext
     if sc.applicationId in _SHIPPED_CONTEXTS:
         return
+    import atexit
     import tempfile
     import zipfile
 
@@ -76,6 +81,7 @@ def _ship_package(spark: SparkSession) -> None:
         tempfile.gettempdir(), f"dps_spark_pkg_{sc.applicationId.replace(':', '_')}.zip"
     )
     if not os.path.exists(zip_path):
+        atexit.register(_remove_file, zip_path)
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
@@ -96,6 +102,13 @@ def _ship_package(spark: SparkSession) -> None:
             "addPyFile(%s) failed (%s); workers rely on cwd fallback", zip_path, exc
         )
     _SHIPPED_CONTEXTS.add(sc.applicationId)
+
+
+def _remove_file(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def ensure_session_conf(spark: SparkSession) -> None:

@@ -13,6 +13,20 @@ Settings chosen for DuckDB-oracle parity and scale-readiness:
   (AQE coalesces down, so err high there / exact here).
 - Arrow enabled: every pandas interchange (Pandas UDFs, toPandas in the
   bench harness) rides the vectorized Arrow path.
+- Generated-code cache sized to the working set
+  (``CODEGEN_CACHE_ENTRIES``): Spark keeps compiled Janino classes in a
+  JVM-wide LRU of 100 entries by default, and one pass of
+  ``pretraining_pipeline`` needs 113-119 classes, the 12 relational
+  bench keys 225. A cyclic access pattern larger than an LRU gets almost
+  no hits, so every warm pass recompiled 80-101 unchanged classes (and
+  the JIT compiled each fresh class again). A fixed constant, not an
+  option: the right size follows the catalog, not the deployment, and
+  ``scripts/check_all.py`` prints the session's compile count so a
+  working set that outgrows it shows. Class names leave out the
+  whole-stage codegen stage id (``useIdInClassName=false``): AQE numbers
+  stages in the order they are planned, which varies with which query
+  stage finishes first, and an id in the name made the same pipeline a
+  different cache key in each order.
 """
 
 from __future__ import annotations
@@ -20,6 +34,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# compiled-class cache entries; the largest measured working set is 225
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_parallelism() -> int:
@@ -47,6 +65,8 @@ def get_spark(app_name: str = "datapipeline_scripts_spark", **extra_conf: str) -
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # scan-split granularity: map-stage parallelism is bounded by
         # input splits, and a compact table whose rows EXPAND downstream
@@ -65,3 +85,14 @@ def get_spark(app_name: str = "datapipeline_scripts_spark", **extra_conf: str) -
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, seconds spent in Janino) since the JVM started.
+
+    JVM-wide counters: every session of the driver JVM shares them, as it
+    shares the compiled-class cache."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return int(metrics.METRIC_COMPILATION_TIME().getCount()), generator.compileTime() / 1e9

@@ -5,7 +5,10 @@ Pass --agg-hash to compare engine-side (count, md5_48 row-sum)
 fingerprints instead of collecting rows through the driver — the scale
 mode for proxy datasets whose results exceed the py4j materialization
 budget (VERDICT r04 item 2). Doubles compare at 1e-6 quantization in
-this mode; the default row-collect mode stays the exact-repr gate."""
+this mode; the default row-collect mode stays the exact-repr gate.
+
+The summary ends with the session's generated-code compile count and
+Janino compile time."""
 
 from __future__ import annotations
 
@@ -17,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datapipeline_scripts_spark.oracle import agg_hash_check, check_query
 from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.session import get_spark
+from datapipeline_scripts_spark.session import CODEGEN_CACHE_ENTRIES, codegen_stats, get_spark
 
 
 def main() -> int:
@@ -49,6 +52,14 @@ def main() -> int:
             print(f"{time.time() - t0:6.1f}s [ERR ] {key}: {msg}", flush=True)
     n_checked = len(only) if only else len(all_queries())
     print(f"done: {failures} failures / {n_checked} queries checked", flush=True)
+    # the classes a run over a key subset compiles are that subset's
+    # working set: one larger than the cache recompiles on every pass
+    compiles, compile_s = codegen_stats(spark)
+    print(
+        f"codegen: {compiles} classes compiled, {compile_s:.1f}s in Janino"
+        f" (cache holds {CODEGEN_CACHE_ENTRIES})",
+        flush=True,
+    )
     return 1 if failures else 0
 
 
