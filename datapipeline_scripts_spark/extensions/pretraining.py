@@ -32,13 +32,24 @@ Scale shape (each claim inherited from the standalone key's audited
 plan): the ingest and export passes are Arrow-batched workers with one
 task per row-batch / per pack — no driver data path except the
 manifest (one ~60-byte row per SHARD, the documented KB-bound
-contract, same as every `write_*_dataset` manifest). The curated set
-is persisted once and feeds all four downstream consumers (at 100 TB
-this is the checkpoint every production pipeline materializes between
-curation and packing). The only data-sized shuffles carry winnow/
-minhash fingerprints and (source, pack) keys — never document bodies;
-pair generation is doc-frequency-capped (winnow) and band-bucketed
-(minhash), cartesian-free.
+contract, same as every `write_*_dataset` manifest). Each stage's
+artifact is finished before the next stage reads it, as in the
+reference pipeline: the curated set, the MinHash signatures, the
+MinHash survivors, the winnow fingerprints and the winnow survivors
+are each materialized once as an eager local checkpoint (at 100 TB
+these are the checkpoints every production pipeline materializes
+between curation, dedup and packing). The checkpoint cuts the
+lineage, so the export query plans from the last checkpoint instead
+of carrying the whole chain. The trade: checkpoint blocks live only
+on the executor that wrote them, so losing an executor mid-build
+fails the build instead of recomputing the lost stage; a durable
+(reliable-storage) checkpoint mode would lift that. All blocks are
+released when the build ends, including when a stage raises. The
+export shards stay in the temp directory until the next build of the
+same application or driver exit. The only data-sized shuffles carry
+winnow/minhash fingerprints and (source, pack) keys — never document
+bodies; pair generation is doc-frequency-capped (winnow) and
+band-bucketed (minhash), cartesian-free.
 
 Reference parity: the reference's pipeline is extract → verify →
 restore (backup.sh:264-375); this is the analogous end-to-end drill
@@ -48,6 +59,8 @@ restorable by restoring it.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -144,6 +157,16 @@ def _export_writer(out_dir: str):
         return pd.DataFrame({"shard": [name], "n_records": [len(records)]})
 
     return write_pack
+
+
+@functools.cache
+def _remove_at_exit(out_dir: str) -> None:
+    """Remove the export directory when the driver exits (A4
+    guaranteed cleanup). The read-back frame a build returns stays lazy
+    over the shards, so the directory must outlive the build; the next
+    build of the same application replaces it. Registered once per
+    directory, however many builds write it."""
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
 
 
 def _winnow_drop(gated: DataFrame, pin) -> DataFrame:
@@ -411,6 +434,7 @@ def pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
+    _remove_at_exit(out_dir)
 
     # S0: WARC ingest (fixture parquet is one partition — spread the
     # per-row codec work; a no-op at real multi-partition scale)
@@ -461,16 +485,21 @@ def pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the curated set and the dedup index tables each feed several
     # consumers — pin them once, exactly the checkpoints a production
-    # pipeline materializes between curation, dedup and packing
-    # (disk-spillable at real scale; all released in the finally)
+    # pipeline materializes between curation, dedup and packing. A pin
+    # is an eager local checkpoint: it runs its stage now and cuts the
+    # lineage there, so every later plan starts from a LogicalRDD leaf
+    # instead of carrying the whole upstream chain, which a persist()
+    # keeps and AQE re-renders after every query stage. The blocks are
+    # disk-spillable and released in the finally; they live only on
+    # their executors (the trade is in the module docstring).
     pinned: list[DataFrame] = []
 
     def pin(df: DataFrame) -> DataFrame:
-        pinned.append(df.persist())
+        pinned.append(df.localCheckpoint(eager=True))
         return pinned[-1]
 
-    gated = pin(gated)
     try:
+        gated = pin(gated)
         # S2: MinHash near-dup dedup first (whole-document near
         # copies), then S3: winnow shared-passage dedup on the
         # remainder (partial overlaps MinHash's whole-doc estimate
@@ -530,8 +559,13 @@ def pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         expected = {r["shard"]: int(r["n_records"]) for r in manifest_rows}
     finally:
+        # a checkpointed frame's unpersist() is a no-op (it is not in
+        # the cache manager); its blocks belong to the checkpointed RDD
+        # under the plan's LogicalRDD leaf. Spark warns that such an RDD
+        # cannot be recomputed once released: nothing reads the pins
+        # after the export, since the result reads the shards back.
         for df in pinned:
-            df.unpersist()
+            df._jdf.logicalPlan().rdd().unpersist(False)
 
     # S7: CRC-verified typed read-back through the production reader,
     # manifest-checked; the returned inventory is recomputed FROM THE

@@ -8,7 +8,9 @@ budget (VERDICT r04 item 2). Doubles compare at 1e-6 quantization in
 this mode; the default row-collect mode stays the exact-repr gate.
 
 The summary ends with the session's generated-code compile count and
-Janino compile time."""
+Janino compile time, and the number of persistent RDDs the session
+still holds: a builder that never releases its cached or checkpointed
+frames shows up there."""
 
 from __future__ import annotations
 
@@ -60,6 +62,7 @@ def main() -> int:
         f" (cache holds {CODEGEN_CACHE_ENTRIES})",
         flush=True,
     )
+    print(f"persistent RDDs held: {spark.sparkContext._jsc.getPersistentRDDs().size()}", flush=True)
     return 1 if failures else 0
 
 

@@ -7,11 +7,20 @@ stage the proof doesn't cover)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import tempfile
+import textwrap
+
 import duckdb
 import pytest
 
+from datapipeline_scripts_spark.extensions import pretraining
 from datapipeline_scripts_spark.oracle import compare, duck_connection
 from datapipeline_scripts_spark.registry import get
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
@@ -69,7 +78,6 @@ def test_export_integrity_loop_is_loud(spark, tmp_path):
     and a record silently dropped at a frame boundary refuses on the
     writer-attested manifest — neither can reach the inventory."""
     import glob
-    import os
 
     from datapipeline_scripts_spark.sources import tfrecord as tfr
     from datapipeline_scripts_spark.sources.tfexample import read_tfexample
@@ -78,7 +86,7 @@ def test_export_integrity_loop_is_loud(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     spec.build(spark, sf).count()  # materialize the export
     out_dir = os.path.join(
-        "/tmp",
+        tempfile.gettempdir(),
         f"spark_graft_pretraining_sf0.001_{spark.sparkContext.applicationId}",
     )
     shards = sorted(glob.glob(os.path.join(out_dir, "*.tfrecord")))
@@ -117,3 +125,72 @@ def test_export_integrity_loop_is_loud(spark, tmp_path):
     )
     with pytest.raises(Exception, match="manifest expects"):
         df.count()
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_pins_are_released(spark, sf_dir, monkeypatch):
+    """Every pinned stage's checkpoint blocks are released when the
+    build ends, and when a mid-chain stage raises; the error still
+    reaches the caller."""
+    spec = get("pretraining_pipeline")
+    held = _persistent_rdds(spark)
+    spec.build(spark, sf_dir)
+    assert _persistent_rdds(spark) == held
+
+    def fail(gated, pin):
+        raise RuntimeError("winnow stage failed")
+
+    monkeypatch.setattr(pretraining, "_winnow_drop", fail)
+    with pytest.raises(RuntimeError, match="winnow stage failed"):
+        spec.build(spark, sf_dir)
+    assert _persistent_rdds(spark) == held
+
+
+def test_export_query_starts_at_the_last_pin(spark, sf_dir):
+    """The pins cut the lineage: no SQL execution of one build plans
+    both the ingest worker and the export writer. With lazy pins the
+    export query carries the whole chain from the WARC ingest on, and
+    AQE re-renders that plan after every query stage."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans() -> dict[int, str]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = store.executionsList()
+        return {
+            execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+        }
+
+    seen = plans()
+    get("pretraining_pipeline").build(spark, sf_dir)
+    new = [plan for eid, plan in plans().items() if eid not in seen]
+    assert any("_ingest_worker" in plan for plan in new)
+    assert any("write_pack" in plan for plan in new)
+    assert not [plan for plan in new if "_ingest_worker" in plan and "write_pack" in plan]
+
+
+def test_export_directory_is_removed_at_exit(tmp_path, sf_dir):
+    script = textwrap.dedent(
+        f"""
+        import glob, os, tempfile
+        from datapipeline_scripts_spark.registry import get
+        from datapipeline_scripts_spark.session import get_spark
+
+        spark = get_spark("export_cleanup")
+        spec = get("pretraining_pipeline")
+        for _ in range(2):  # a second build reuses the directory
+            assert spec.build(spark, {sf_dir!r}).count() > 0
+        print(len(glob.glob(os.path.join(tempfile.gettempdir(), "spark_graft_pretraining_*"))))
+        """
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "SPARK_GRAFT_CPUS": "2"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO, env=env, capture_output=True, text=True, timeout=600
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-1] == "1"  # the export existed while the driver ran
+    assert not list(tmp_path.glob("spark_graft_pretraining_*"))
