@@ -179,6 +179,7 @@ def main() -> None:
     specs["agg_group"].build(spark, sf_dir).count()
 
     timings: dict[str, float] = {}
+    timings_full: dict[str, float] = {}
     for key in BENCH_KEYS:
         # best-of-N: the VM scheduler adds multi-second jitter randomly
         # across queries (+-30% run-to-run observed); the min is the
@@ -187,7 +188,10 @@ def main() -> None:
         # improving a query shape for its first ~6 executions
         # (measured: 0.63→0.38s over 8 runs of agg_group), so timing
         # from cold bills C2-compiler warmup to the plan.
-        best, n = float("inf"), 0
+        # `queries_full` times the same build written to the noop sink,
+        # which computes every output column; count() lets Catalyst
+        # prune the columns it does not need
+        best, best_full, n = float("inf"), float("inf"), 0
         for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "2"))):
             specs[key].build(spark, sf_dir).count()
         for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))):
@@ -195,8 +199,12 @@ def main() -> None:
             df = specs[key].build(spark, sf_dir)
             n = df.count()
             best = min(best, time.perf_counter() - t0)
+            t0 = time.perf_counter()
+            specs[key].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            best_full = min(best_full, time.perf_counter() - t0)
         timings[key] = round(best, 3)
-        print(f"# {key}: {timings[key]:.3f}s rows={n}", file=sys.stderr, flush=True)
+        timings_full[key] = round(best_full, 3)
+        print(f"# {key}: {timings[key]:.3f}s full={timings_full[key]:.3f}s rows={n}", file=sys.stderr, flush=True)
 
     total = round(sum(timings.values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -205,6 +213,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "queries_full": timings_full,
         "sf": float(sf) if sf else sf_dir,
     }
     out.update(_shared_set_vs_previous(timings))

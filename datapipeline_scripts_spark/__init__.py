@@ -5,7 +5,8 @@ A from-scratch re-expression of the capability surface of
 pipeline; see SURVEY.md) as an idiomatic Apache Spark engine:
 
 - ``session``    — SparkSession factory (UTC, AQE, local tuning).
-- ``catalog``    — fixture-table loader / temp-view registration.
+- ``cds``        — the driver JVM's class-data archive (faster start).
+- ``catalog``    — fixture-table loader.
 - ``registry``   — declared-query registry: every operator ships a
   DataFrame builder AND a DuckDB oracle SQL string, so the engine is
   differentially tested query-by-query (SURVEY.md §5.2).

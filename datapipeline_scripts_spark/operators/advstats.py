@@ -2473,9 +2473,9 @@ def _linreg_sql(table: str, big: str, div: str) -> str:
     rows, but cy ~ 3.8e6 cents times det ~ 3.75e30-at-60M-rows crosses
     1.7e38 near ~1.4e8 rows on this value distribution (vs ~6e7 for the
     raw form, which errored loudly at the 100x proxy).  Measured, not
-    argued: scripts/linreg_ceiling_probe.py brackets the edge on a
-    lineitem-shaped generated table — both engines hash-match at 8e7
-    rows and BOTH overflow loudly at 2e8 (docs/SCALE_EXPERIMENT.md);
+    argued: on a lineitem-shaped generated table both engines
+    hash-match at 8e7 rows and BOTH overflow loudly at 2e8 (the
+    bracketing run is recorded in docs/SCALE_EXPERIMENT.md);
     hash-proven at the 60M-row proxy.
 
     Final coefficients come out as *integer 1e-4 units* via truncating

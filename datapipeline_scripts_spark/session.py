@@ -27,13 +27,31 @@ Settings chosen for DuckDB-oracle parity and scale-readiness:
   stages in the order they are planned, which varies with which query
   stage finishes first, and an id in the name made the same pipeline a
   different cache key in each order.
+- The driver JVM starts from a class-data archive (``cds``): the first
+  session on a machine records the classes the JVM loaded into
+  ``$XDG_CACHE_HOME/spark-graft/<key>.jsa`` (``~/.cache`` when unset)
+  as it exits, and every later session maps them, parsed and verified,
+  instead of loading them again (``setup_s`` 9.9 -> 6.0 s on
+  ``backup_drill``, docs/BENCH_NOTES.md). The key covers the JDK, the
+  PySpark version and Spark's jars. CDS is off, and the JVM starts as
+  it would without it, when anything but Spark's jars and an empty conf
+  dir would be on the class path (``SPARK_CONF_DIR`` set, files other
+  than templates in ``$SPARK_HOME/conf``, an extra class path), when the
+  cache cannot be written or another process is recording. The archive
+  is published (renamed into place) only after the recording JVM has
+  exited with status 0: a JVM that maps a torn archive dies of SIGBUS.
+  The CDS flags go before the caller's ``spark.driver.extraJavaOptions``,
+  which are kept.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import cds
 
 
 # compiled-class cache entries; the largest measured working set is 225
@@ -80,9 +98,15 @@ def get_spark(app_name: str = "datapipeline_scripts_spark", **extra_conf: str) -
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
         )
     )
+    # a running JVM keeps the flags it started with: getOrCreate only
+    # attaches to it
+    plan = cds.plan(extra_conf) if SparkContext._gateway is None else None
+    if plan is not None and plan.java_options:
+        caller = extra_conf.get("spark.driver.extraJavaOptions", "")
+        extra_conf["spark.driver.extraJavaOptions"] = f"{plan.java_options} {caller}".strip()
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = builder.getOrCreate() if plan is None else cds.launch(builder, plan)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -8,9 +8,11 @@ budget (VERDICT r04 item 2). Doubles compare at 1e-6 quantization in
 this mode; the default row-collect mode stays the exact-repr gate.
 
 The summary ends with the session's generated-code compile count and
-Janino compile time, and the number of persistent RDDs the session
-still holds: a builder that never releases its cached or checkpointed
-frames shows up there."""
+Janino compile time, the number of persistent RDDs the session
+still holds (a builder that never releases its cached or checkpointed
+frames shows up there), and the class-data archive the driver JVM
+started from, or why it started without one (a machine that lost the
+faster start shows up there)."""
 
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from datapipeline_scripts_spark import cds
 from datapipeline_scripts_spark.oracle import agg_hash_check, check_query
 from datapipeline_scripts_spark.registry import all_queries
 from datapipeline_scripts_spark.session import CODEGEN_CACHE_ENTRIES, codegen_stats, get_spark
@@ -63,6 +66,7 @@ def main() -> int:
         flush=True,
     )
     print(f"persistent RDDs held: {spark.sparkContext._jsc.getPersistentRDDs().size()}", flush=True)
+    print(f"cds: {cds.status()}", flush=True)
     return 1 if failures else 0
 
 
