@@ -32,7 +32,8 @@ reports what the running JVM got.
   another process recording, the JVM already running) the session
   starts exactly as without it. A rejected archive (another class path,
   a patched JDK) falls back to normal class loading (``-Xshare:auto``,
-  the JDK's default).
+  the JDK's default), and ``launch`` removes it once the JVM is up, so
+  the next session records a new one.
 """
 
 from __future__ import annotations
@@ -207,9 +208,15 @@ def launch(builder, chosen: Plan):
         atexit.register(_publish, chosen.archive)
     os.environ["SPARK_CONF_DIR"] = conf_dir(os.path.dirname(chosen.archive))
     try:
-        return builder.getOrCreate()
+        spark = builder.getOrCreate()
     finally:
         del os.environ["SPARK_CONF_DIR"]
+    if not chosen.recording and _jvm_maps(chosen.archive) is False:
+        try:
+            os.remove(chosen.archive)
+        except FileNotFoundError:  # another session removed it first
+            pass
+    return spark
 
 
 def _publish(temp: str) -> None:
@@ -239,6 +246,17 @@ def _publish(temp: str) -> None:
             pass
 
 
+def _jvm_maps(archive: str) -> bool | None:
+    """Whether the driver JVM has ``archive`` mapped; None when its
+    memory map cannot be read."""
+    proc = getattr(SparkContext._gateway, "proc", None)
+    try:
+        with open(f"/proc/{proc.pid}/maps") as fh:
+            return any(line.rstrip().endswith(archive) for line in fh)
+    except (AttributeError, OSError):
+        return None
+
+
 def status() -> str:
     """One line: the archive the driver JVM maps or records, or why CDS
     is off."""
@@ -248,10 +266,10 @@ def status() -> str:
         return f"off ({_launched.off})"
     if _launched.recording:
         return f"recording {_launched.archive} (published when the driver JVM exits cleanly)"
-    proc = getattr(SparkContext._gateway, "proc", None)
-    try:
-        with open(f"/proc/{proc.pid}/maps") as fh:
-            mapped = any(line.rstrip().endswith(_launched.archive) for line in fh)
-    except (AttributeError, OSError):
+    mapped = _jvm_maps(_launched.archive)
+    if mapped is None:
         return f"given {_launched.archive} (mapping not checked)"
-    return f"mapped {_launched.archive}" if mapped else f"rejected {_launched.archive} (the JVM did not map it)"
+    if mapped:
+        return f"mapped {_launched.archive}"
+    removed = "" if os.path.exists(_launched.archive) else "; removed, the next session records a new one"
+    return f"rejected {_launched.archive} (the JVM did not map it{removed})"

@@ -115,8 +115,7 @@ def bmp_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
     w, h, top_down, bpp, comp, data_off, palette = _header(payload)
     if bpp not in (8, 24, 32):
         raise NotImplementedError(
-            f"BMP bit depth {bpp} not supported (8/24/32 only); "
-            "install Pillow for full coverage"
+            f"BMP bit depth {bpp} not supported (8/24/32 only)"
         )
     if comp == 3 and bpp == 32:
         # BI_BITFIELDS with the standard BGRX masks decodes like BI_RGB

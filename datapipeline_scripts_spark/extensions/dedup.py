@@ -329,12 +329,12 @@ def band_rows_hashed(sig: DataFrame, n_bands: int, rows_per_band: int) -> DataFr
     carried ~40 bytes, and the join compares longs, not strings.
 
     A 64-bit hash can collide where the underlying band values differ,
-    so every consumer MUST re-verify the candidate with
-    ``band_slices_equal`` at the join output — the sig arrays already
-    ride the join for the match count, so the exact check is free of
-    extra shuffle. bucket-string equality ≡ element-wise band equality
-    (concat_ws of decimal longs is injective), so join-on-bhash +
-    exact filter yields the IDENTICAL candidate set."""
+    so pairs come from ``band_join``, which re-verifies the candidate
+    at the join output — the sig arrays already ride the join for the
+    match count, so the exact check is free of extra shuffle.
+    bucket-string equality ≡ element-wise band equality (concat_ws of
+    decimal longs is injective), so join-on-bhash + exact filter yields
+    the IDENTICAL candidate set."""
     band_structs = F.array(
         *[
             F.struct(
@@ -351,16 +351,29 @@ def band_rows_hashed(sig: DataFrame, n_bands: int, rows_per_band: int) -> DataFr
     )
 
 
-def band_slices_equal(rows_per_band: int):
-    """Exact band-match predicate for a pair joined from
-    ``band_rows_hashed`` legs aliased x/y: the joined band's
-    ``rows_per_band`` signature values are element-wise equal. This is
-    the mandatory post-bhash verification (see band_rows_hashed) and
-    is exactly the old bucket-string equality."""
+def _band_slices_equal(rows_per_band: int):
+    """The joined band's ``rows_per_band`` signature values of x and y
+    are element-wise equal: exactly the old bucket-string equality."""
     start = F.col("x.band") * rows_per_band + 1
     return F.slice(F.col("x.sig"), start, rows_per_band) == F.slice(
         F.col("y.sig"), start, rows_per_band
     )
+
+
+def band_join(x: DataFrame, y: DataFrame, rows_per_band: int, extra=None) -> DataFrame:
+    """Candidate pairs of two ``band_rows_hashed`` frames, aliased x and
+    y: an equi-join on (band, bhash), ``extra`` (a condition on the x/y
+    columns, or None) and the exact re-check that the band's signature
+    values are equal, which rules out bhash collisions."""
+    cond = (F.col("x.band") == F.col("y.band")) & (F.col("x.bhash") == F.col("y.bhash"))
+    if extra is not None:
+        cond = cond & extra
+    return x.alias("x").join(y.alias("y"), cond & _band_slices_equal(rows_per_band))
+
+
+def sig_agreement(n: int):
+    """How many of the first ``n`` signature values x and y share."""
+    return sum(F.when(F.col("x.sig")[i] == F.col("y.sig")[i], 1).otherwise(0) for i in range(n))
 
 
 def _minhash_hex32_sql(hex_expr: str, start: int) -> str:
@@ -462,19 +475,9 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_signatures(spark, sf_dir)
     rows_per_band = _N_HASHES // _BANDS
     bands = band_rows_hashed(sig, _BANDS, rows_per_band)
-    matches = sum(
-        F.when(F.col("x.sig")[i] == F.col("y.sig")[i], 1).otherwise(0) for i in range(_N_HASHES)
-    )
-    est = F.round(matches / F.lit(float(_N_HASHES)), 4)
+    est = F.round(sig_agreement(_N_HASHES) / F.lit(float(_N_HASHES)), 4)
     return (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bhash") == F.col("y.bhash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & band_slices_equal(rows_per_band),
-        )
+        band_join(bands, bands, rows_per_band, F.col("x.doc_id") < F.col("y.doc_id"))
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),

@@ -1,11 +1,9 @@
-"""Stdlib-only baseline JPEG decoder for the SPARK_GRAFT_REAL_DECODE
-path (extensions/multimodal.py) — the sequel to png_stdlib.py (VERDICT
-r7 item 6 chose "add a baseline-JPEG stdlib decoder proven against JVM
-ImageIO" over closing the item as Pillow-gated): JPEG is the most
-common LOSSY image format, and baseline (SOF0/SOF1) huffman-coded
-JPEG decodes with nothing beyond integer arithmetic, so real
-width/height and difference hashes no longer need Pillow for the two
-formats that dominate real corpora.
+"""Stdlib-only baseline JPEG decoder, one of the codecs
+`extensions/multimodal.py` routes payloads through — the sequel to
+png_stdlib.py: JPEG is the most common LOSSY image format, and baseline
+(SOF0/SOF1) huffman-coded JPEG decodes with nothing beyond integer
+arithmetic, so real width/height and difference hashes need no codec
+library for the two formats that dominate real corpora.
 
 Everything follows the PUBLIC specification (ITU-T T.81 / ISO 10918-1
 + the JFIF colorspace conventions):
@@ -30,7 +28,7 @@ lossless metadata even for shapes the pixel decoder refuses).
 
 Determinism: the whole pixel path is INTEGER arithmetic — the IDCT is
 a fixed-point (13-bit) 64×64 basis matrix, so the same bytes decode to
-the same pixels on every worker, with no libjpeg/Pillow/SIMD variance
+the same pixels on every worker, with no libjpeg/SIMD variance
 (the fleet-uniformity property ADVICE r06 established for PNG hashes).
 The float→int basis quantization happens once at import from 8 distinct
 cosine values and is pinned by a test fingerprint; conformance against
@@ -307,12 +305,12 @@ def jpeg_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
             if prec != 8:
                 raise NotImplementedError(
                     f"{prec}-bit JPEG not supported by the stdlib decoder "
-                    "(8-bit baseline only); install Pillow"
+                    "(8-bit baseline only)"
                 )
             if nc not in (1, 3):
                 raise NotImplementedError(
                     f"{nc}-component JPEG (CMYK?) not supported by the "
-                    "stdlib decoder; install Pillow"
+                    "stdlib decoder"
                 )
             comps = []
             for c in range(nc):
@@ -325,8 +323,7 @@ def jpeg_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
             )
             raise NotImplementedError(
                 f"{kind} JPEG (SOF{marker - 0xC0}) not supported by the "
-                "stdlib decoder (baseline huffman only); re-encode baseline "
-                "or install Pillow"
+                "stdlib decoder (baseline huffman only); re-encode baseline"
             )
         elif marker == 0xC4:  # DHT
             j = 0
@@ -357,7 +354,7 @@ def jpeg_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
     if len(sel) != len(comps):
         raise NotImplementedError(
             "multi-scan (non-interleaved) baseline JPEG not supported by "
-            "the stdlib decoder; install Pillow"
+            "the stdlib decoder"
         )
     if len(comps) == 1:
         # T.81: a single-component scan is non-interleaved — one data

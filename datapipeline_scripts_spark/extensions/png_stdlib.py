@@ -1,9 +1,6 @@
-"""Stdlib-only PNG decoder for the SPARK_GRAFT_REAL_DECODE path
-(extensions/multimodal.py) — PNG is DEFLATE plus five byte filters,
-so the most common lossless image format decodes with nothing beyond
-``zlib``, closing the "real image decode needs Pillow" container gap
-for PNG payloads (Pillow, when installed, still takes precedence and
-covers every other format).
+"""Stdlib-only PNG decoder, one of the codecs `extensions/multimodal.py`
+routes payloads through — PNG is DEFLATE plus five byte filters, so the
+most common lossless image format decodes with nothing beyond ``zlib``.
 
 Everything follows the PUBLIC PNG specification (W3C/ISO, RFC 2083):
 8-byte signature; length/type/data/CRC chunks; IHDR carries
@@ -88,13 +85,12 @@ def png_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
     if interlace != 0:
         raise NotImplementedError(
             "Adam7-interlaced PNG not supported by the stdlib decoder; "
-            "re-encode non-interlaced or install Pillow"
+            "re-encode non-interlaced"
         )
     if depth != 8 or ct not in _CHANNELS:
         raise NotImplementedError(
             f"PNG bit depth {depth} / color type {ct} not supported by the "
-            "stdlib decoder (8-bit gray/RGB/palette/GA/RGBA only); "
-            "install Pillow for full coverage"
+            "stdlib decoder (8-bit gray/RGB/palette/GA/RGBA only)"
         )
     ch = _CHANNELS[ct]
     raw = zlib.decompress(b"".join(idat_parts))

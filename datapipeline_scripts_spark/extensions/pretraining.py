@@ -86,8 +86,9 @@ from datapipeline_scripts_spark.extensions.dedup import (
     _BANDS,
     _N_HASHES,
     _minhash_hex32_sql,
+    band_join,
     band_rows_hashed,
-    band_slices_equal,
+    sig_agreement,
 )
 from datapipeline_scripts_spark.functions.text import md5_48, md5_48_sql, shingles, tokens
 from datapipeline_scripts_spark.registry import query
@@ -250,20 +251,9 @@ def _minhash_drop(docs: DataFrame, pin) -> DataFrame:
     # absorbs the pair-level dedup — the exchange that used to carry
     # two 16-long arrays per collision now never happens; only the
     # surviving doc_b longs shuffle.
-    matches = sum(
-        F.when(F.col("x.sig")[i] == F.col("y.sig")[i], 1).otherwise(0)
-        for i in range(_N_HASHES)
-    )
     return (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bhash") == F.col("y.bhash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & band_slices_equal(rows_per_band),
-        )
-        .filter(matches >= _MH_MIN_MATCHES)
+        band_join(bands, bands, rows_per_band, F.col("x.doc_id") < F.col("y.doc_id"))
+        .filter(sig_agreement(_N_HASHES) >= _MH_MIN_MATCHES)
         .select(F.col("y.doc_id").alias("doc_id"))
         .distinct()
     )

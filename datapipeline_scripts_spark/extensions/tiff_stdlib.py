@@ -195,7 +195,7 @@ def _decode_strip(comp: int, data: bytes, expected: int) -> bytearray:
         return _packbits_decode(data, expected)
     raise NotImplementedError(
         f"TIFF compression {comp} not supported by the stdlib decoder "
-        "(None/LZW/Deflate/PackBits only); install Pillow for full coverage"
+        "(None/LZW/Deflate/PackBits only)"
     )
 
 

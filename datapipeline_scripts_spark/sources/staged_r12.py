@@ -128,8 +128,9 @@ from datapipeline_scripts_spark.extensions.dedup import (
     _N_HASHES,
     _SHINGLE_SQL,
     _minhash_hex32_sql,
+    band_join,
     band_rows_hashed,
-    band_slices_equal,
+    sig_agreement,
 )
 from datapipeline_scripts_spark.extensions.similarity import _centroid_frame
 from datapipeline_scripts_spark.functions.text import (
@@ -790,7 +791,7 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     # band rows keyed by xxhash64 of the band's values instead of the
     # concat_ws string (optimization r14, guide §2.3 — see
     # dedup.band_rows_hashed); every consumer re-verifies the exact
-    # band equality at the join output (dedup.band_slices_equal), so
+    # band equality at the join output (dedup.band_join), so
     # the candidate sets are identical while the band exchange carries
     # a long, not a ~40-byte string.
     return band_rows_hashed(sig, _BANDS, _N_HASHES // _BANDS)
@@ -818,22 +819,12 @@ def dedup_minhash_store_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     # the estimate is a pure function of the (bid, rid) pair, so it is
     # folded to a scalar at the join output and the candidate-dedup
     # exchange carries 3 scalars per collision, not two 16-long arrays
-    matches = sum(
-        F.when(F.col("x.sig")[i] == F.col("y.sig")[i], 1).otherwise(0)
-        for i in range(_N_HASHES)
-    )
     est = (
-        bat_b.alias("x")
-        .join(
-            ref_b.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bhash") == F.col("y.bhash"))
-            & band_slices_equal(_N_HASHES // _BANDS),
-        )
+        band_join(bat_b, ref_b, _N_HASHES // _BANDS)
         .select(
             F.col("x.doc_id").alias("bid"),
             F.col("y.doc_id").alias("rid"),
-            (matches / F.lit(float(_N_HASHES))).alias("e"),
+            (sig_agreement(_N_HASHES) / F.lit(float(_N_HASHES))).alias("e"),
         )
         .dropDuplicates(["bid", "rid"])
     )
@@ -1803,19 +1794,9 @@ def crawl_increment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .distinct() already dedups — so the pair-level dedup exchange
     # (which used to carry two 16-long arrays per collision) is gone
     # entirely; only passing bid longs reach the remaining distinct.
-    matches = sum(
-        F.when(F.col("x.sig")[i] == F.col("y.sig")[i], 1).otherwise(0)
-        for i in range(_N_HASHES)
-    )
     near = (
-        bat_b.alias("x")
-        .join(
-            ref_b.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bhash") == F.col("y.bhash"))
-            & band_slices_equal(_N_HASHES // _BANDS),
-        )
-        .filter((matches / F.lit(float(_N_HASHES))) >= _MSTORE_THRESH)
+        band_join(bat_b, ref_b, _N_HASHES // _BANDS)
+        .filter((sig_agreement(_N_HASHES) / F.lit(float(_N_HASHES))) >= _MSTORE_THRESH)
         .select(F.col("x.doc_id").alias("doc_id"))
         .distinct()
         .withColumn("near", F.lit(1))

@@ -142,9 +142,10 @@ from datapipeline_scripts_spark.extensions.dedup import (
     _N_HASHES,
     _minhash_hex32_sql,
     _SHINGLE_SQL,
+    band_join,
     band_rows_hashed,
-    band_slices_equal,
     minhash_signatures,
+    sig_agreement,
 )
 from datapipeline_scripts_spark.extensions.similarity import _centroid_frame
 from datapipeline_scripts_spark.functions.text import (
@@ -803,10 +804,6 @@ def _band_tuning_report_of(sig: DataFrame) -> DataFrame:
     # them at the join output and deduping after is the identical set
     # (the r13 est-folding argument); the dedup exchange carries five
     # ints per candidate instead of two 16-long arrays
-    matches = sum(
-        F.when(F.col("x.sig")[i] == F.col("y.sig")[i], 1).otherwise(0)
-        for i in range(_N_HASHES)
-    )
     # eq2[b]: the b-th 2-row band matches in full
     eq2 = [
         (F.col("x.sig")[2 * b] == F.col("y.sig")[2 * b])
@@ -818,18 +815,11 @@ def _band_tuning_report_of(sig: DataFrame) -> DataFrame:
     in44 = eq2[0] & eq2[1] | eq2[2] & eq2[3] | eq2[4] & eq2[5] | eq2[6] & eq2[7]
     in28 = eq2[0] & eq2[1] & eq2[2] & eq2[3] | eq2[4] & eq2[5] & eq2[6] & eq2[7]
     pairs = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bhash") == F.col("y.bhash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & band_slices_equal(2),
-        )
+        band_join(bands, bands, 2, F.col("x.doc_id") < F.col("y.doc_id"))
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),
-            matches.alias("m"),
+            sig_agreement(_N_HASHES).alias("m"),
             F.when(in44, 1).otherwise(0).alias("c44"),
             F.when(in28, 1).otherwise(0).alias("c28"),
         )

@@ -215,15 +215,12 @@ def protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- multimodal_real_png ----------------------------------------------------
 #
-# VERDICT r6 item 5: nothing RUNS the stdlib PNG decoder under the
-# driver harness (the REAL_DECODE env path is outside the oracles by
-# design).
 # This key encodes a real PNG per document executor-side (grayscale
 # 8-bit, pixel values a pure function of doc_id), decodes it with the
 # REAL stdlib decoder (png_stdlib — zlib inflate, filter inversion,
 # CRC checks), and emits (width, height, dHash) that the DuckDB oracle
 # recomputes arithmetically from doc_id. A hash match proves the whole
-# encode→decode→hash chain pixel-exact, with no env flag in the way.
+# encode→decode→hash chain pixel-exact.
 
 _PNG_W = 13  # _PHASH_BITS + 1: band k == pixel k exactly, so the
 # dHash is SQL-expressible (h rows are identical, so averages collapse)
@@ -268,7 +265,7 @@ def _png_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             w, h = png_stdlib.png_size(payload)
             widths.append(w)
             heights.append(h)
-            phashes.append(mm._phash_pixels_png(payload))
+            phashes.append(mm.phash(payload))
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
@@ -304,8 +301,8 @@ def multimodal_real_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real PNG decode under the driver harness: per-document PNGs
     (pixel values a pure function of doc_id) are encoded AND decoded
     executor-side — decode via the production stdlib path
-    (png_stdlib.png_size / multimodal._phash_pixels_png, the exact
-    functions SPARK_GRAFT_REAL_DECODE=1 routes through) — and the
+    (png_stdlib.png_size / multimodal.phash, the functions every
+    payload routes through) — and the
     DuckDB oracle recomputes width/height/dHash arithmetically.
 
     Scale shape: embarrassingly parallel Arrow-batch work; only

@@ -9,8 +9,8 @@ only change this round.
 
 multimodal_real_jpeg: per-document baseline JPEGs are ENCODED and
 DECODED executor-side through the production stdlib codec
-(extensions/jpeg_stdlib.py — the exact decode path
-SPARK_GRAFT_REAL_DECODE routes JPEG payloads through, including a
+(extensions/jpeg_stdlib.py — the decode path multimodal.phash
+routes JPEG payloads through, including a
 restart marker every MCU, the path ImageIO's writer cannot emit), and
 the DuckDB oracle recomputes width/height/dHash ARITHMETICALLY from
 doc_id: the encoder takes quantized coefficients, so each decoded
@@ -80,10 +80,10 @@ def _jpeg_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             payload = js.encode_gray_baseline(
                 _W, _H, [blk(dc0, ac0), blk(dc1, ac1)], restart_interval=1
             )
-            w, h = mm._real_decode_dims("png", None, payload)
+            w, h = mm.decode_dims(payload)
             widths.append(w)
             heights.append(h)
-            phashes.append(mm._phash_pixels_jpeg(payload))
+            phashes.append(mm.phash(payload))
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
@@ -172,8 +172,8 @@ STAGED: dict[str, tuple] = {
 #
 # The GIF sibling of multimodal_real_jpeg: per-document GIFs are
 # ENCODED and DECODED executor-side through the production stdlib
-# codec (extensions/gif_stdlib.py — the exact path
-# SPARK_GRAFT_REAL_DECODE routes GIF payloads through), INTERLACED so
+# codec (extensions/gif_stdlib.py — the path multimodal.phash routes
+# GIF payloads through), INTERLACED so
 # the 4-pass row reorder sits inside the proof, with the color table
 # alternating global/local per document so both table paths decode
 # under the driver's eye. GIF is lossless, so the DuckDB oracle
@@ -220,12 +220,12 @@ def _gif_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 interlace=True,
                 local_table=bool(int(doc_id) % 2),
             )
-            w, h = mm._real_decode_dims("png", None, payload)
+            w, h = mm.decode_dims(payload)
             widths.append(w)
             heights.append(h)
             # the full routing layer, not the bander directly: proves
-            # GIF payloads reach gif_stdlib under the default backend
-            phashes.append(mm._phash_real("png", None, payload))
+            # GIF payloads reach gif_stdlib
+            phashes.append(mm.phash(payload))
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
@@ -343,10 +343,10 @@ def _tiff_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 rows_per_strip=3 if d % 16 < 8 else None,
                 big_endian=bool(d % 2),
             )
-            w, h = mm._real_decode_dims("png", None, payload)
+            w, h = mm.decode_dims(payload)
             widths.append(w)
             heights.append(h)
-            phashes.append(mm._phash_real("png", None, payload))
+            phashes.append(mm.phash(payload))
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
@@ -566,7 +566,7 @@ def _video_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 out["doc_id"].append(d)
                 out["frame_idx"].append(f)
                 out["n_frames"].append(len(got))
-                out["phash"].append(mm._phash_pixels_jpeg(frame))
+                out["phash"].append(mm.phash(frame))
         yield pd.DataFrame(out)
 
 

@@ -68,23 +68,17 @@ def _replay_to_parquet(spark: SparkSession, sdf: DataFrame, mode: str) -> DataFr
     # frozen into the checkpoint at first start — it must be sized to the
     # STATE (|open windows| × |keys|), not inherited from the batch
     # shuffle default. 8 here cuts the fixture replay ~40% (measured
-    # 2.97→1.65 s events_stream_session at sf0.1); a production job sets
-    # SPARK_GRAFT_STREAM_SHUFFLE to its cluster-appropriate width. The
-    # conf is restored after the (synchronous) replay finishes. NOTE:
+    # 2.97→1.65 s events_stream_session at sf0.1). The conf is restored
+    # after the (synchronous) replay finishes. NOTE:
     # spark.conf is session-global, so a batch query running CONCURRENTLY
     # on this SparkSession during the replay would inherit the narrow
     # setting — the harness is single-threaded per session, which is the
     # assumption this override relies on (ADVICE r03); a server-style
     # deployment must give replays their own spark.newSession() whose
     # conf overlay is isolated from sibling sessions.
-    import os as _os
-
     sess = sdf.sparkSession
     prev_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set(
-        "spark.sql.shuffle.partitions",
-        _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-    )
+    sess.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         if mode == "append":
             writer = sdf.writeStream.format("parquet").option("path", data)

@@ -122,18 +122,17 @@ def test_header_frame_size_mismatch_is_loud():
         av.avi_decode_frame_gray(bytes(bad), 0)
 
 
-def test_sample_frames_real_mjpeg(monkeypatch):
-    """With the real-decode flag, multimodal frame sampling demuxes
-    MJPEG AVIs for real: true stream indices, true byte spans, and a
-    decoded-frame dHash — sampled every _SAMPLE_EVERY frames. Other
-    payloads keep the loud gate."""
+def test_sample_frames_real_mjpeg():
+    """Multimodal frame sampling demuxes MJPEG AVIs for real: true
+    stream indices, true byte spans, and a decoded-frame dHash —
+    sampled every _SAMPLE_EVERY frames. Other payloads, a corrupt AVI
+    among them, are cut into fixed-size chunks."""
     import pandas as pd
 
     from datapipeline_scripts_spark.extensions import multimodal as mm
 
     frames = _frames(5)
     p = av.encode_avi_mjpeg(16, 8, frames)
-    monkeypatch.setenv(mm._REAL_DECODE_ENV, "1")
     batch = [pd.DataFrame({"doc_id": [7], "payload": [p]})]
     out = pd.concat(list(mm._sample_frames(iter(batch))))
     assert list(out["frame_idx"]) == [0, 2, 4]
@@ -141,13 +140,16 @@ def test_sample_frames_real_mjpeg(monkeypatch):
     assert list(out["byte_offset"]) == [spans[i][0] for i in (0, 2, 4)]
     assert list(out["frame_bytes"]) == [len(frames[i]) for i in (0, 2, 4)]
     assert list(out["frame_checksum"]) == [
-        mm._phash_pixels_jpeg(frames[i]) for i in (0, 2, 4)
+        mm.phash(frames[i]) for i in (0, 2, 4)
     ]
     # payload spans really slice back to the exact frames
     for i, off, size in zip((0, 2, 4), out["byte_offset"], out["frame_bytes"]):
         assert p[off : off + size] == frames[i]
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        list(mm._sample_frames(iter([pd.DataFrame({"doc_id": [1], "payload": [b"xx"]})])))
+    cut = p[:40]  # the RIFF signature, no movi list
+    other = pd.DataFrame({"doc_id": [1, 2], "payload": [b"xx", cut]})
+    out = pd.concat(list(mm._sample_frames(iter([other]))))
+    assert list(out["frame_bytes"]) == [2, 40]
+    assert list(out["frame_checksum"]) == [sum(b"xx"), sum(cut[:16])]
 
 
 def test_mixed_format_routing_on_executors(spark):
@@ -187,7 +189,7 @@ def test_mixed_format_routing_on_executors(spark):
         6: b"not any known format",
     }
     expect = {
-        d: (mm._real_decode_dims("png", None, p), mm._phash_real("png", None, p))
+        d: (mm.decode_dims(p), mm.phash(p))
         for d, p in payloads.items()
     }
 
@@ -199,11 +201,11 @@ def test_mixed_format_routing_on_executors(spark):
                 {
                     "doc_id": pdf["doc_id"],
                     "width": [
-                        w_mm._real_decode_dims("png", None, bytes(p))[0]
+                        w_mm.decode_dims(bytes(p))[0]
                         for p in pdf["payload"]
                     ],
                     "phash": [
-                        w_mm._phash_real("png", None, bytes(p))
+                        w_mm.phash(bytes(p))
                         for p in pdf["payload"]
                     ],
                 }
@@ -253,21 +255,21 @@ def test_real_decode_routes_avi_through_stdlib():
 
     frames = _frames(3)
     p = av.encode_avi_mjpeg(16, 8, frames)
-    assert mm._real_decode_dims("png", None, p) == (16, 8)
-    assert mm._phash_real("png", None, p) == mm._phash_pixels_jpeg(frames[0])
+    assert mm.decode_dims(p) == (16, 8)
+    assert mm.phash(p) == mm.phash(frames[0])
     # non-MJPEG handler: dims still real, phash = byte-hash fallback
     q = bytearray(p)
     h = p.index(b"strh") + 8 + 4
     q[h : h + 4] = b"XVID"
     q = bytes(q)
-    assert mm._real_decode_dims("png", None, q) == (16, 8)
-    assert mm._phash_real("png", None, q) == mm._phash_bytes(q)
+    assert mm.decode_dims(q) == (16, 8)
+    assert mm.phash(q) == mm._phash_bytes(q)
     # truncated mid-movi: dims stay real (avi_info is header-only,
     # like jpeg_size), phash falls back loud
     cut = p[: len(p) // 3]
-    assert mm._real_decode_dims("png", None, cut) == (16, 8)
-    assert mm._phash_real("png", None, cut) == mm._phash_bytes(cut)
+    assert mm.decode_dims(cut) == (16, 8)
+    assert mm.phash(cut) == mm._phash_bytes(cut)
     # truncated inside the header: both loud
     head = p[:40]
-    assert mm._real_decode_dims("png", None, head) == (-1, -1)
-    assert mm._phash_real("png", None, head) == mm._phash_bytes(head)
+    assert mm.decode_dims(head) == (-1, -1)
+    assert mm.phash(head) == mm._phash_bytes(head)

@@ -125,14 +125,21 @@ def test_cds_logging_stays_off_stdout(recorded, mapped):
 
 def test_rejected_archive_falls_back_quietly(recorded, tmp_path):
     """An archive recorded with another class path (here: another cache
-    directory, so another conf dir) is refused by the JVM, silently."""
+    directory, so another conf dir) is refused by the JVM, silently. The
+    session removes it, and the next session records a new one."""
     home, _, _ = recorded
     name = published(home)[0]
     os.makedirs(tmp_path / "spark-graft")
     os.link(os.path.join(str(home), "spark-graft", name), tmp_path / "spark-graft" / name)
     result, output = run_session(tmp_path)
     assert result["status"].startswith("rejected "), result["status"]
+    assert "removed" in result["status"]
     assert "[cds" not in output
+    assert archives(tmp_path) == []
+    assert os.path.isfile(os.path.join(str(home), "spark-graft", name))
+    result, _ = run_session(tmp_path)
+    assert result["status"].startswith("recording "), result["status"]
+    assert published(tmp_path) == [name]
 
 
 def test_torn_temp_file_is_removed_and_a_failed_recorder_publishes_nothing(recorded, tmp_path):

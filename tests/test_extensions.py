@@ -112,19 +112,19 @@ def test_capped_jaccard_window_cap_matches_joinback(spark, sf_dir):
 
 
 def test_band_rows_hashed_matches_bucket_string_form(spark):
-    """band_rows_hashed + band_slices_equal (optimization r14) must
+    """band_rows_hashed + band_join (optimization r14) must
     yield the IDENTICAL candidate pair set as the old concat_ws
     bucket-string self-join on signatures exercising every regime:
     a full duplicate (collides in all 4 bands — also the multi-band
     double-count the terminal dedup must absorb), a single-band
     collision, and an isolated doc. Also drive the collision guard
-    directly: band_slices_equal must reject a joined row whose band
-    values differ even when the join keys matched."""
+    directly: band_join must reject a pair whose band values differ
+    even when the join keys matched."""
     from datapipeline_scripts_spark.extensions.dedup import (
         _BANDS,
         _N_HASHES,
+        band_join,
         band_rows_hashed,
-        band_slices_equal,
     )
 
     rpb = _N_HASHES // _BANDS
@@ -143,14 +143,7 @@ def test_band_rows_hashed_matches_bucket_string_form(spark):
 
     new_bands = band_rows_hashed(sig, _BANDS, rpb)
     new_pairs = (
-        new_bands.alias("x")
-        .join(
-            new_bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bhash") == F.col("y.bhash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & band_slices_equal(rpb),
-        )
+        band_join(new_bands, new_bands, rpb, F.col("x.doc_id") < F.col("y.doc_id"))
         .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
         .distinct()
     )
@@ -183,16 +176,15 @@ def test_band_rows_hashed_matches_bucket_string_form(spark):
     want = sorted((r["a"], r["b"]) for r in old_pairs.collect())
     assert got == want == [(1, 2), (1, 3), (2, 3)]
 
-    # collision guard: same band id on both sides, but the band's sig
-    # values differ — the predicate must be False (an xxhash64 key
-    # collision cannot admit the pair), and True on equal slices.
-    x = spark.createDataFrame([(0, base)], "band int, sig array<long>").alias("x")
-    y_eq = spark.createDataFrame([(0, base)], "band int, sig array<long>").alias("y")
-    y_ne = spark.createDataFrame(
-        [(0, base[: rpb - 1] + [999] + base[rpb:])], "band int, sig array<long>"
-    ).alias("y")
-    assert x.crossJoin(y_eq).filter(band_slices_equal(rpb)).count() == 1
-    assert x.crossJoin(y_ne).filter(band_slices_equal(rpb)).count() == 0
+    # collision guard: same (band, bhash) key on both sides, but the
+    # band's sig values differ — an xxhash64 key collision cannot admit
+    # the pair, while equal slices pass.
+    schema = "doc_id long, band int, bhash long, sig array<long>"
+    x = spark.createDataFrame([(1, 0, 7, base)], schema)
+    y_eq = spark.createDataFrame([(2, 0, 7, base)], schema)
+    y_ne = spark.createDataFrame([(2, 0, 7, base[: rpb - 1] + [999] + base[rpb:])], schema)
+    assert band_join(x, y_eq, rpb).count() == 1
+    assert band_join(x, y_ne, rpb).count() == 0
 
 
 def test_simhash_identical_for_duplicate_token_sets(spark, sf_dir, exact_pairs):
@@ -830,37 +822,88 @@ def test_orders_duplicate_audit_finds_real_dups(spark, sf_dir):
     assert audit.filter(F.col("first_line") > F.col("last_line")).count() == 0
 
 
-def test_real_decode_extras_flag_gates(monkeypatch):
-    """SPARK_GRAFT_REAL_DECODE (VERDICT r05 item 6): the stub path is
-    the default regardless of installed codecs (an installed Pillow
-    must never silently change oracle-checked results); the flag is an
-    explicit opt-in that either decodes for real (Pillow present) or
-    fails LOUDLY with remediation (Pillow absent, this container)."""
+def test_workers_route_mixed_payloads():
+    """One pandas batch of every payload kind through the three
+    registered workers: each image reports its true dims and pixel
+    dHash, the MJPEG AVI its video dims, first-frame dHash and demuxed
+    frames; junk bytes, b"" and None report the loud values and are cut
+    into fixed-size chunks."""
     import pandas as pd
 
-    from datapipeline_scripts_spark.extensions import multimodal as mm
+    from datapipeline_scripts_spark.extensions import (
+        avi_stdlib,
+        bmp_stdlib,
+        gif_stdlib,
+        jpeg_stdlib,
+        multimodal as mm,
+        png_stdlib,
+        tiff_stdlib,
+    )
+    from datapipeline_scripts_spark.sources.staged_r8 import _encode_png_gray
 
-    monkeypatch.delenv(mm._REAL_DECODE_ENV, raising=False)
-    assert not mm._real_decode_requested()
-    monkeypatch.setenv(mm._REAL_DECODE_ENV, "0")
-    assert not mm._real_decode_requested()
+    def dhash(row):
+        return sum(1 << i for i in range(mm._PHASH_BITS) if row[i] < row[i + 1])
 
-    batch = [pd.DataFrame({"doc_id": [1], "payload": [b"not an image"]})]
-    out = pd.concat(list(mm._extract_features(iter(batch))))
-    assert list(out["width"]) == [64 + ord("n") % 64]  # stub semantics hold
+    def jblk(dc):
+        return [dc] + [0] * 63
 
-    monkeypatch.setenv(mm._REAL_DECODE_ENV, "1")
-    assert mm._real_decode_requested()
-    # frames: real sampling needs a video parser — loud gate even with Pillow
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        list(mm._sample_frames(iter(batch)))
-    # with the flag set, the real path runs on EVERY backend (Pillow if
-    # importable, stdlib PNG otherwise — r6): non-image bytes report the
-    # loud (-1,-1) dims and the byte-hash phash fallback, never raise
-    out = pd.concat(list(mm._extract_features(iter(batch))))
-    assert list(out["width"]) == [-1] and list(out["height"]) == [-1]
-    ph = pd.concat(list(mm._phash_worker(iter(batch))))
-    assert list(ph["phash"]) == [mm._phash_bytes(b"not an image")]
+    pal = bytes([9, 9, 9, 201, 202, 203])
+    idx = (b"\x00" * 8 + b"\x01" * 8) * 4
+    gray = bytes((x * 5 + y * 9) % 256 for y in range(4) for x in range(16))
+    frames = [
+        jpeg_stdlib.encode_gray_baseline(16, 8, [jblk(3 * f - 6), jblk(6 - 2 * f)])
+        for f in range(5)
+    ]
+    junk = bytes(range(40, 240)) * 3  # 600 bytes: three chunks
+    media = {
+        1: (_encode_png_gray([(x * 19) % 256 for x in range(13)], 3), (13, 3), png_stdlib.png_gray_band_row),
+        2: (jpeg_stdlib.encode_gray_baseline(16, 8, [jblk(6), jblk(-6)]), (16, 8), jpeg_stdlib.jpeg_gray_band_row),
+        3: (gif_stdlib.encode_gif(16, 4, pal, idx), (16, 4), gif_stdlib.gif_gray_band_row),
+        4: (tiff_stdlib.encode_tiff(16, 4, gray, compression=5), (16, 4), tiff_stdlib.tiff_gray_band_row),
+        5: (bmp_stdlib.encode_bmp(16, 4, idx, palette=pal), (16, 4), bmp_stdlib.bmp_gray_band_row),
+    }
+    avi = avi_stdlib.encode_avi_mjpeg(16, 8, frames)
+    rest = {7: junk, 8: b"", 9: None}
+    payloads = {**{d: m[0] for d, m in media.items()}, 6: avi, **rest}
+    batch = pd.DataFrame({"doc_id": list(payloads), "payload": list(payloads.values())})
+
+    feats = pd.concat(list(mm._extract_features(iter([batch])))).set_index("doc_id")
+    hashes = pd.concat(list(mm._phash_worker(iter([batch])))).set_index("doc_id")["phash"]
+    fr = pd.concat(list(mm._sample_frames(iter([batch]))))
+
+    for d, (p, dims, band_row) in media.items():
+        assert (feats.at[d, "width"], feats.at[d, "height"]) == dims, d
+        want = dhash(band_row(p, mm._PHASH_BITS + 1))
+        assert hashes[d] == want and want != mm._phash_bytes(p), d
+    assert (feats.at[6, "width"], feats.at[6, "height"]) == (16, 8)
+    assert hashes[6] == dhash(jpeg_stdlib.jpeg_gray_band_row(frames[0], mm._PHASH_BITS + 1))
+
+    v = fr[fr["doc_id"] == 6]
+    spans = avi_stdlib.avi_frame_spans(avi)
+    assert list(v["frame_idx"]) == [0, 2, 4]
+    assert list(v["byte_offset"]) == [spans[i][0] for i in (0, 2, 4)]
+    assert [avi[o : o + n] for o, n in zip(v["byte_offset"], v["frame_bytes"])] == [
+        frames[i] for i in (0, 2, 4)
+    ]
+    assert list(v["frame_checksum"]) == [
+        dhash(jpeg_stdlib.jpeg_gray_band_row(frames[i], mm._PHASH_BITS + 1)) for i in (0, 2, 4)
+    ]
+
+    assert (feats.at[7, "width"], feats.at[7, "height"]) == (-1, -1)
+    assert hashes[7] == mm._phash_bytes(junk)
+    for d in (8, 9):
+        assert (feats.at[d, "width"], feats.at[d, "height"], hashes[d]) == (0, 0, 0)
+        assert feats.at[d, "n_bytes"] == 0 and feats.at[d, "first_byte"] == -1
+    # every payload that is not a video is chunked: 256-byte frames,
+    # every other one kept, checksum = sum of its first 16 bytes
+    for d, p in {**{d: m[0] for d, m in media.items()}, 7: junk, 8: b"", 9: b""}.items():
+        rows = fr[fr["doc_id"] == d]
+        n = max(1, -(-len(p) // 256))
+        assert list(rows["frame_idx"]) == list(range(0, n, 2)), d
+        assert list(rows["byte_offset"]) == [256 * i for i in range(0, n, 2)], d
+        assert list(rows["frame_bytes"]) == [len(p[256 * i : 256 * i + 256]) for i in range(0, n, 2)], d
+        assert list(rows["frame_checksum"]) == [sum(p[256 * i : 256 * i + 16]) for i in range(0, n, 2)], d
+    assert list(fr[fr["doc_id"] == 7]["frame_bytes"]) == [256, 88]
 
 
 def _imageio_png(spark, w, h, rgb_fn):
@@ -903,12 +946,12 @@ def test_png_stdlib_decodes_imageio_canonical(spark):
     # dHash: left→right brightening gradient sets every bit, reversed none
     bright = _imageio_png(spark, w, h, lambda x, y: (10 * x,) * 3)
     dark = _imageio_png(spark, w, h, lambda x, y: (250 - 10 * x,) * 3)
-    assert mm._phash_pixels_png(bright) == (1 << mm._PHASH_BITS) - 1
-    assert mm._phash_pixels_png(dark) == 0
-    # and the feature path reports the true dimensions under the flag
-    assert mm._png_decode_dims(payload) == (w, h)
-    assert mm._png_decode_dims(b"") == (0, 0)
-    assert mm._png_decode_dims(b"JUNKJUNKJUNK") == (-1, -1)
+    assert mm.phash(bright) == (1 << mm._PHASH_BITS) - 1
+    assert mm.phash(dark) == 0
+    # and the feature path reports the true dimensions
+    assert mm.decode_dims(payload) == (w, h)
+    assert mm.decode_dims(b"") == (0, 0)
+    assert mm.decode_dims(b"JUNKJUNKJUNK") == (-1, -1)
 
 
 def test_png_stdlib_all_filter_types_golden():
@@ -975,51 +1018,26 @@ def test_png_stdlib_all_filter_types_golden():
         png_stdlib.png_decode_gray(png_16)
 
 
-def test_real_decode_backend_uniform_for_png(spark, monkeypatch):
-    """ADVICE r06: PNG payloads route through the stdlib decoder on
-    EVERY worker, so phash/dims are identical whether or not Pillow is
-    importable there; SPARK_GRAFT_IMAGE_BACKEND pins non-PNG handling
-    (=png forces stdlib, =pil fails loud when Pillow is absent)."""
+def test_real_decode_routes_png_through_stdlib(spark):
+    """PNG payloads route through the stdlib decoder: true dims and the
+    pixel dHash; a non-PNG payload no codec accepts gets the byte-hash
+    fallback and loud dims."""
     from datapipeline_scripts_spark.extensions import multimodal as mm
     from datapipeline_scripts_spark.extensions import png_stdlib
 
     png = _imageio_png(spark, 15, 3, lambda x, y: (17 * x, 17 * x, 17 * x))
     assert png_stdlib.is_png(png)
-    # PNG routes to the stdlib bander BEFORE the backend is consulted:
-    # identical under both backend labels, image_mod never touched
-    want = mm._phash_pixels_png(png)
-    assert mm._phash_real("png", None, png) == want
-    assert mm._phash_real("pil", None, png) == want  # would crash if pil path ran
-    assert mm._real_decode_dims("pil", None, png) == (15, 3)
-    assert mm._real_decode_dims("png", None, png) == (15, 3)
-    # non-PNG under the stdlib backend: byte-hash fallback, dims loud
+    assert mm.phash(png) == (1 << mm._PHASH_BITS) - 1  # brightening left→right
+    assert mm.decode_dims(png) == (15, 3)
     junk = b"GIF89a-not-a-png"
-    assert mm._phash_real("png", None, junk) == mm._phash_bytes(junk)
-    assert mm._real_decode_dims("png", None, junk) == (-1, -1)
-    # empty payload contract unchanged
-    assert mm._phash_real("png", None, b"") == 0
-    # the pinning knob
-    monkeypatch.setenv("SPARK_GRAFT_IMAGE_BACKEND", "png")
-    assert mm._image_backend() == ("png", None)
-    monkeypatch.setenv("SPARK_GRAFT_IMAGE_BACKEND", "pil")
-    import pytest as _pytest
-
-    with _pytest.raises(ImportError):  # Pillow absent in this container
-        mm._image_backend()
-    # ADVICE r07: a typo'd pin must fail loud, not silently fall back
-    # to per-worker auto-detection (the divergence the knob prevents)
-    for bad in ("stdlib", "pillow", "auto", "pg"):
-        monkeypatch.setenv("SPARK_GRAFT_IMAGE_BACKEND", bad)
-        with _pytest.raises(ValueError, match="SPARK_GRAFT_IMAGE_BACKEND"):
-            mm._image_backend()
-    monkeypatch.setenv("SPARK_GRAFT_IMAGE_BACKEND", " PNG ")  # normalized
-    assert mm._image_backend() == ("png", None)
-    monkeypatch.delenv("SPARK_GRAFT_IMAGE_BACKEND")
+    assert mm.phash(junk) == mm._phash_bytes(junk)
+    assert mm.decode_dims(junk) == (-1, -1)
+    assert mm.phash(b"") == 0
 
 
 def test_real_decode_routes_jpeg_through_stdlib(spark):
     """Round 8: baseline JPEGs get REAL dims + dHash on every worker
-    via jpeg_stdlib (integer IDCT → fleet-identical), no Pillow needed;
+    via jpeg_stdlib (integer IDCT → fleet-identical), no codec library needed;
     progressive files still report true dims (SOF header) with the
     byte-hash fallback for the phash; junk stays loud."""
     from datapipeline_scripts_spark.extensions import jpeg_stdlib as js
@@ -1032,13 +1050,13 @@ def test_real_decode_routes_jpeg_through_stdlib(spark):
 
     # 16x8: left block bright, right block dark → known band row
     p = js.encode_gray_baseline(16, 8, [blk(10), blk(-10)])
-    assert mm._real_decode_dims("png", None, p) == (16, 8)
+    assert mm.decode_dims(p) == (16, 8)
     want_bands = js.jpeg_gray_band_row(p, mm._PHASH_BITS + 1)
     want = 0
     for i in range(mm._PHASH_BITS):
         if want_bands[i] < want_bands[i + 1]:
             want |= 1 << i
-    assert mm._phash_real("png", None, p) == want
+    assert mm.phash(p) == want
     assert want != mm._phash_bytes(p)  # it's a pixel hash, not the fallback
     # progressive: dims from SOF, phash falls back to byte-hash
     jvm = spark._jvm
@@ -1058,14 +1076,14 @@ def test_real_decode_routes_jpeg_through_stdlib(spark):
     wr.dispose()
     ios.close()
     prog = bytes(baos.toByteArray())
-    assert mm._real_decode_dims("png", None, prog) == (20, 10)
-    assert mm._phash_real("png", None, prog) == mm._phash_bytes(prog)
+    assert mm.decode_dims(prog) == (20, 10)
+    assert mm.phash(prog) == mm._phash_bytes(prog)
 
 
 def test_real_decode_routes_gif_through_stdlib():
     """Round 8: GIFs get REAL dims + dHash on every worker via
     gif_stdlib (lossless LZW decode → fleet-identical by
-    construction), no Pillow needed; junk with a GIF signature stays
+    construction), no codec library needed; junk with a GIF signature stays
     loud via the (-1,-1) / byte-hash fallbacks."""
     from datapipeline_scripts_spark.extensions import gif_stdlib as gs
     from datapipeline_scripts_spark.extensions import multimodal as mm
@@ -1073,25 +1091,25 @@ def test_real_decode_routes_gif_through_stdlib():
     pal = bytes([10, 10, 10, 200, 200, 200])
     idx = (b"\x00" * 8 + b"\x01" * 8) * 4
     p = gs.encode_gif(16, 4, pal, idx)
-    assert mm._real_decode_dims("png", None, p) == (16, 4)
+    assert mm.decode_dims(p) == (16, 4)
     want_bands = gs.gif_gray_band_row(p, mm._PHASH_BITS + 1)
     want = 0
     for i in range(mm._PHASH_BITS):
         if want_bands[i] < want_bands[i + 1]:
             want |= 1 << i
-    assert mm._phash_real("png", None, p) == want
+    assert mm.phash(p) == want
     assert want != mm._phash_bytes(p)  # it's a pixel hash, not the fallback
     # corrupt LZW inside intact framing: dims still real (LSD + block
     # walk), phash falls back loud
     sep = p.index(0x2C, 13)
     dstart, dlen = sep + 12, p[sep + 11]  # sep+10 is the LZW mcs
     bad = p[:dstart] + b"\xff" * dlen + p[dstart + dlen :]
-    assert mm._real_decode_dims("png", None, bad) == (16, 4)
-    assert mm._phash_real("png", None, bad) == mm._phash_bytes(bad)
+    assert mm.decode_dims(bad) == (16, 4)
+    assert mm.phash(bad) == mm._phash_bytes(bad)
     # truncated framing: both loud
     cut = p[: len(p) - 6]
-    assert mm._real_decode_dims("png", None, cut) == (-1, -1)
-    assert mm._phash_real("png", None, cut) == mm._phash_bytes(cut)
+    assert mm.decode_dims(cut) == (-1, -1)
+    assert mm.phash(cut) == mm._phash_bytes(cut)
 
 
 def test_real_decode_routes_tiff_through_stdlib(spark):
@@ -1103,13 +1121,13 @@ def test_real_decode_routes_tiff_through_stdlib(spark):
 
     data = (b"\x0a" * 8 + b"\xc8" * 8) * 4
     p = ts.encode_tiff(16, 4, data, compression=5)
-    assert mm._real_decode_dims("png", None, p) == (16, 4)
+    assert mm.decode_dims(p) == (16, 4)
     want_bands = ts.tiff_gray_band_row(p, mm._PHASH_BITS + 1)
     want = 0
     for i in range(mm._PHASH_BITS):
         if want_bands[i] < want_bands[i + 1]:
             want |= 1 << i
-    assert mm._phash_real("png", None, p) == want
+    assert mm.phash(p) == want
     assert want != mm._phash_bytes(p)  # it's a pixel hash, not the fallback
     # 16-bit canonical file: dims real (IFD), phash falls back loud
     jvm = spark._jvm
@@ -1128,8 +1146,8 @@ def test_real_decode_routes_tiff_through_stdlib(spark):
     wr.dispose()
     ios.close()
     deep = bytes(baos.toByteArray())
-    assert mm._real_decode_dims("png", None, deep) == (6, 5)
-    assert mm._phash_real("png", None, deep) == mm._phash_bytes(deep)
+    assert mm.decode_dims(deep) == (6, 5)
+    assert mm.phash(deep) == mm._phash_bytes(deep)
 
 
 def test_real_decode_routes_bmp_through_stdlib():
@@ -1141,14 +1159,14 @@ def test_real_decode_routes_bmp_through_stdlib():
     pal = bytes([10, 10, 10, 200, 200, 200])
     idx = (b"\x00" * 8 + b"\x01" * 8) * 4
     p = bs.encode_bmp(16, 4, idx, palette=pal, rle=True)
-    assert mm._real_decode_dims("png", None, p) == (16, 4)
+    assert mm.decode_dims(p) == (16, 4)
     want_bands = bs.bmp_gray_band_row(p, mm._PHASH_BITS + 1)
     want = 0
     for i in range(mm._PHASH_BITS):
         if want_bands[i] < want_bands[i + 1]:
             want |= 1 << i
-    assert mm._phash_real("png", None, p) == want
+    assert mm.phash(p) == want
     assert want != mm._phash_bytes(p)
     junk = b"BM" + b"\x07" * 60
-    assert mm._real_decode_dims("png", None, junk) == (-1, -1)
-    assert mm._phash_real("png", None, junk) == mm._phash_bytes(junk)
+    assert mm.decode_dims(junk) == (-1, -1)
+    assert mm.phash(junk) == mm._phash_bytes(junk)

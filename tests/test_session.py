@@ -150,3 +150,18 @@ def test_shipped_package_zip_is_removed_at_exit(tmp_path, sf_dir):
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.split()[-1] == "1"  # the zip existed while the driver ran
     assert not list(tmp_path.glob("dps_spark_pkg_*"))
+
+
+def test_package_reads_only_the_deployment_settings():
+    """The only SPARK_GRAFT_* environment variables the package names
+    are the deployment settings (cores, driver memory, input split
+    size). A new one needs a reason to exist, not a default."""
+    import re
+
+    names = set()
+    for root, _dirs, files in os.walk(os.path.dirname(pkg.__file__)):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name), encoding="utf-8") as fh:
+                    names.update(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", fh.read()))
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_MAX_PARTITION_BYTES"}

@@ -141,7 +141,7 @@ def test_ingest_to_curation_pipeline(spark, tmp_path):
                     "key": pdf["key"],
                     "text": [bytes(f["txt"]).decode() for f in pdf["files"]],
                     "width": [
-                        mm._real_decode_dims("png", None, bytes(f["gif"]))[0]
+                        mm.decode_dims(bytes(f["gif"]))[0]
                         for f in pdf["files"]
                     ],
                 }
