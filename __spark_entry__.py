@@ -80,10 +80,11 @@ def _driver_proven_keys() -> dict[str, int]:
 
 def _ordered_keys() -> list[str]:
     """Unproven keys first (round 0), then proven keys by the round of
-    their latest green row, oldest first. The sort is stable, so
-    registry order breaks ties and the order is deterministic."""
+    their latest green row, oldest first. The key name breaks ties, so
+    the order does not depend on which module registers a key or on
+    the order the package's modules are imported."""
     proven = _driver_proven_keys()
-    return sorted(all_queries(), key=lambda k: proven.get(k, 0))
+    return sorted(all_queries(), key=lambda k: (proven.get(k, 0), k))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

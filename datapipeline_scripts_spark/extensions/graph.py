@@ -120,8 +120,8 @@ def pagerank_rounds(
 ) -> tuple[DataFrame, DataFrame]:
     """The shared integer-exact PageRank iteration over any (src, dst)
     edge DataFrame — THE one implementation every graph-ranking key
-    runs (the registered nation-trade key and the staged host-graph
-    key), so rankings can never fork formula or scale constants.
+    runs (the nation-trade key and the host-graph key
+    web_host_pagerank), so rankings can never fork formula or scale constants.
     Returns (rank: (k, r), deg: (src, outdeg)).
 
     Scale notes unchanged from graph_pagerank's docstring: the edge

@@ -14,7 +14,7 @@ bytes on every worker) and ORACLE-EXPRESSIBLE — for divisor
 geometries (tw | w, th | h) each output pixel is literally
 floor(block_sum / block_size), which DuckDB can recompute from a
 pixel formula, so the resize chain sits under the driver's hash gate
-like the codecs do (sources/staged_r10.py `multimodal_resize`).
+like the codecs do (`multimodal_resize` in extensions/multimodal.py).
 
 Scale shape: per-image CPU inside an Arrow worker, embarrassingly
 parallel like the decode family; only (doc_id, output pixels) cross

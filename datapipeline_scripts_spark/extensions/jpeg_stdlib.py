@@ -466,7 +466,7 @@ def jpeg_gray_band_row(payload: bytes, n: int) -> list[int]:
 # `multimodal_real_jpeg` payloads — callers hand over QUANTIZED
 # coefficients, so the decoded pixels are an exact integer function of
 # those coefficients (DC-only/low-AC blocks make that function
-# SQL-expressible; see sources/staged_r9.py). Encoder correctness is
+# SQL-expressible; see `multimodal_real_jpeg` in extensions/multimodal.py). Encoder correctness is
 # itself proven against the canonical decoder: tests decode these
 # bytes with JVM ImageIO and compare raster samples.
 

@@ -14,20 +14,27 @@ result on every worker.
 
 The keys registered here feed the utf-8 bytes of `documents.text`,
 which sniff as no media format, and their DuckDB oracles recompute the
-loud values and the byte dHash. The `multimodal_real_*` keys
-(`sources/staged_r8.py`, `sources/staged_r9.py`) run real media through
-the same two functions.
+loud values and the byte dHash. The `multimodal_real_*` keys further
+down run real media through the same two functions: each synthesizes a
+payload per document executor-side (PNG, JPEG, GIF, TIFF, WAV, MJPEG
+AVI), decodes it on the production path, and its oracle recomputes the
+features from the synthesis formula in closed form. The frame- and
+tile-grain keys (`multimodal_audio_frames`, `multimodal_scene_cuts`,
+`multimodal_image_tiles`) and `multimodal_resize` do the same one row
+per frame, tile or resized image.
 """
 
 from __future__ import annotations
 
+import struct
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
-from datapipeline_scripts_spark.catalog import load_table
+from datapipeline_scripts_spark.catalog import load_table, scan_spread
 from datapipeline_scripts_spark.extensions import (
     avi_stdlib,
     bmp_stdlib,
@@ -431,4 +438,1202 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "phash",
         F.count("*").over(w).alias("n_same"),
         (F.count("*").over(w) > 1).alias("is_dup"),
+    )
+
+
+# ---- multimodal_real_png ----------------------------------------------------
+#
+# This key encodes a real PNG per document executor-side (grayscale
+# 8-bit, pixel values a pure function of doc_id), decodes it with the
+# REAL stdlib decoder (png_stdlib — zlib inflate, filter inversion,
+# CRC checks), and emits (width, height, dHash) that the DuckDB oracle
+# recomputes arithmetically from doc_id. A hash match proves the whole
+# encode→decode→hash chain pixel-exact.
+
+_PNG_W = 13  # _PHASH_BITS + 1: band k == pixel k exactly, so the
+# dHash is SQL-expressible (h rows are identical, so averages collapse)
+
+
+def _png_pixel(doc_id: int, x: int) -> int:
+    return (doc_id * 37 + x * x * 11) % 251
+
+
+def _encode_png_gray(px_row: list[int], h: int) -> bytes:
+    """Minimal spec-valid PNG: 8-bit grayscale, filter 0 rows."""
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", len(px_row), h, 8, 0, 0, 0, 0)
+    raw = (b"\x00" + bytes(px_row)) * h
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
+
+
+def _png_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    for pdf in batches:
+        widths, heights, phashes = [], [], []
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            payload = _encode_png_gray(
+                [_png_pixel(d, x) for x in range(_PNG_W)], 1 + d % 3
+            )
+            w, h = png_stdlib.png_size(payload)
+            widths.append(w)
+            heights.append(h)
+            phashes.append(phash(payload))
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "width": widths,
+                "height": heights,
+                "phash": phashes,
+            }
+        )
+
+
+def _real_png_oracle() -> str:
+    px = lambda x: f"((doc_id * 37 + {x * x * 11}) % 251)"  # noqa: E731
+    bits = " + ".join(
+        f"(CASE WHEN {px(i)} < {px(i + 1)} THEN {1 << i} ELSE 0 END)"
+        for i in range(_PNG_W - 1)
+    )
+    return f"""
+        SELECT doc_id,
+               {_PNG_W} AS width,
+               CAST(1 + doc_id % 3 AS INTEGER) AS height,
+               CAST({bits} AS INTEGER) AS phash
+        FROM documents
+        WHERE doc_id % 3 = 0
+        ORDER BY doc_id
+    """
+
+
+MULTIMODAL_REAL_PNG_ORACLE = _real_png_oracle()
+
+
+@query("multimodal_real_png", oracle=MULTIMODAL_REAL_PNG_ORACLE)
+def multimodal_real_png(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real PNG decode under the driver harness: per-document PNGs
+    (pixel values a pure function of doc_id) are encoded AND decoded
+    executor-side — decode via the production stdlib path
+    (png_stdlib.png_size / multimodal.phash, the functions every
+    payload routes through) — and the
+    DuckDB oracle recomputes width/height/dHash arithmetically.
+
+    Scale shape: embarrassingly parallel Arrow-batch work; only
+    (doc_id, 3 ints) leave the worker, never the image bytes."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 0)
+        .select("doc_id")
+    )
+    return docs.mapInPandas(
+        _png_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("width", T.IntegerType()),
+                T.StructField("height", T.IntegerType()),
+                T.StructField("phash", T.IntegerType()),
+            ]
+        ),
+    ).orderBy("doc_id")
+
+_W, _H = 16, 8  # two 8×8 blocks side by side
+_Q00, _Q01 = 16, 11  # STD_LUMA_QUANT[0], [1] — asserted in the worker
+
+
+def _coefs(doc_id: int) -> tuple[int, int, int, int]:
+    """(dc0, ac0, dc1, ac1) from doc_id — ranges keep every decoded
+    pixel inside [0, 255] so the oracle needs no clamp arithmetic."""
+    return (
+        (doc_id % 37) - 18,
+        (doc_id % 5) - 2,
+        ((doc_id * 7) % 41) - 20,
+        ((doc_id * 3) % 7) - 3,
+    )
+
+
+def _jpeg_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    # NOT an assert: the oracle SQL bakes _Q00/_Q01 into its integer
+    # arithmetic, so a quant-table edit must fail loudly even under
+    # ``python -O`` (ADVICE r08 item 3).
+    if jpeg_stdlib.STD_LUMA_QUANT[0] != _Q00 or jpeg_stdlib.STD_LUMA_QUANT[1] != _Q01:
+        raise ValueError(
+            "jpeg_stdlib.STD_LUMA_QUANT[0:2] diverged from the oracle "
+            f"constants ({_Q00}, {_Q01}); regenerate "
+            "MULTIMODAL_REAL_JPEG_ORACLE / the video oracle to match."
+        )
+
+    def blk(dc: int, ac01: int) -> list[int]:
+        b = [0] * 64
+        b[0], b[1] = dc, ac01
+        return b
+
+    for pdf in batches:
+        widths, heights, phashes = [], [], []
+        for doc_id in pdf["doc_id"]:
+            dc0, ac0, dc1, ac1 = _coefs(int(doc_id))
+            payload = jpeg_stdlib.encode_gray_baseline(
+                _W, _H, [blk(dc0, ac0), blk(dc1, ac1)], restart_interval=1
+            )
+            w, h = decode_dims(payload)
+            widths.append(w)
+            heights.append(h)
+            phashes.append(phash(payload))
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "width": widths,
+                "height": heights,
+                "phash": phashes,
+            }
+        )
+
+
+def _real_jpeg_oracle() -> str:
+
+    b01 = [jpeg_stdlib._IDCT_BASIS[x][1] for x in range(8)]  # column (u=0,v=1)
+    dc = ["((doc_id % 37) - 18)", "(((doc_id * 7) % 41) - 20)"]
+    ac = ["((doc_id % 5) - 2)", "(((doc_id * 3) % 7) - 3)"]
+
+    def val(x: int) -> str:
+        blk, col = x // 8, x % 8
+        return (
+            f"((16384 * {dc[blk]} + {b01[col] * _Q01} * {ac[blk]}"
+            f" + 1052672) // 8192)"
+        )
+
+    bands = []
+    for k in range(_PHASH_BITS + 1):
+        x0 = k * _W // (_PHASH_BITS + 1)
+        x1 = max((k + 1) * _W // (_PHASH_BITS + 1), x0 + 1)
+        total = " + ".join(val(x) for x in range(x0, x1))
+        bands.append(f"(({total}) // {x1 - x0})")
+    bits = " + ".join(
+        f"(CASE WHEN {bands[i]} < {bands[i + 1]} THEN {1 << i} ELSE 0 END)"
+        for i in range(_PHASH_BITS)
+    )
+    return f"""
+        SELECT doc_id,
+               {_W} AS width,
+               {_H} AS height,
+               CAST({bits} AS INTEGER) AS phash
+        FROM documents
+        WHERE doc_id % 4 = 0
+        ORDER BY doc_id
+    """
+
+
+MULTIMODAL_REAL_JPEG_ORACLE = _real_jpeg_oracle()
+
+
+@query("multimodal_real_jpeg", oracle=MULTIMODAL_REAL_JPEG_ORACLE)
+def multimodal_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real baseline-JPEG decode under the driver harness — see the
+    module docstring for the proof structure. Scale shape:
+    embarrassingly parallel Arrow-batch work; only (doc_id, 3 ints)
+    leave the worker, never image bytes (same as multimodal_real_png).
+    """
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 0)
+        .select("doc_id")
+        # the fixture parquet loads as ONE partition, which would
+        # serialize the per-row codec work — scan_spread spreads it
+        # across cores, and skips the exchange outright once the scan
+        # splits feed the cores itself (optimization r14)
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _jpeg_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("width", T.IntegerType()),
+                T.StructField("height", T.IntegerType()),
+                T.StructField("phash", T.IntegerType()),
+            ]
+        ),
+    ).orderBy("doc_id")
+
+
+# ---- multimodal_real_gif ----------------------------------------------------
+#
+# The GIF sibling of multimodal_real_jpeg: per-document GIFs are
+# ENCODED and DECODED executor-side through the production stdlib
+# codec (extensions/gif_stdlib.py — the path multimodal.phash routes
+# GIF payloads through), INTERLACED so
+# the 4-pass row reorder sits inside the proof, with the color table
+# alternating global/local per document so both table paths decode
+# under the driver's eye. GIF is lossless, so the DuckDB oracle
+# recomputes every band average ARITHMETICALLY: pixel (x, y) of
+# doc d is gray(lut[(d + 3x + 7y + xy) % 4]) where each lut entry is
+# an integer formula of d — no codec latitude anywhere, a hash match
+# proves the LZW bitstream, interlace reorder, palette lookup and
+# band/dHash chain bit-exact.
+
+_GW, _GH = 16, 8
+
+
+def _gif_pixels(doc_id: int) -> tuple[bytes, bytes]:
+    """(palette, indices) for one document — mirrored by the oracle."""
+    d = int(doc_id)
+    palette = bytes(
+        c
+        for i in range(4)
+        for c in (
+            (d * 3 + 53 * i) % 256,
+            (d * 5 + 97 * i) % 256,
+            (d * 7 + 29 * i) % 256,
+        )
+    )
+    indices = bytes(
+        (d + 3 * x + 7 * y + x * y) % 4 for y in range(_GH) for x in range(_GW)
+    )
+    return palette, indices
+
+
+def _gif_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    for pdf in batches:
+        widths, heights, phashes = [], [], []
+        for doc_id in pdf["doc_id"]:
+            palette, indices = _gif_pixels(int(doc_id))
+            payload = gif_stdlib.encode_gif(
+                _GW,
+                _GH,
+                palette,
+                indices,
+                interlace=True,
+                local_table=bool(int(doc_id) % 2),
+            )
+            w, h = decode_dims(payload)
+            widths.append(w)
+            heights.append(h)
+            # the full routing layer, not the bander directly: proves
+            # GIF payloads reach gif_stdlib
+            phashes.append(phash(payload))
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "width": widths,
+                "height": heights,
+                "phash": phashes,
+            }
+        )
+
+
+def _real_gif_oracle() -> str:
+
+    def gray(x: int, y: int) -> str:
+        m = f"((doc_id + {3 * x + 7 * y + x * y}) % 4)"
+        return (
+            f"((299 * ((doc_id * 3 + 53 * {m}) % 256)"
+            f" + 587 * ((doc_id * 5 + 97 * {m}) % 256)"
+            f" + 114 * ((doc_id * 7 + 29 * {m}) % 256)) // 1000)"
+        )
+
+    bands = []
+    for k in range(_PHASH_BITS + 1):
+        x0 = k * _GW // (_PHASH_BITS + 1)
+        x1 = max((k + 1) * _GW // (_PHASH_BITS + 1), x0 + 1)
+        total = " + ".join(gray(x, y) for x in range(x0, x1) for y in range(_GH))
+        bands.append(f"(({total}) // {(x1 - x0) * _GH})")
+    bits = " + ".join(
+        f"(CASE WHEN {bands[i]} < {bands[i + 1]} THEN {1 << i} ELSE 0 END)"
+        for i in range(_PHASH_BITS)
+    )
+    return f"""
+        SELECT doc_id,
+               {_GW} AS width,
+               {_GH} AS height,
+               CAST({bits} AS INTEGER) AS phash
+        FROM documents
+        WHERE doc_id % 4 = 1
+        ORDER BY doc_id
+    """
+
+
+MULTIMODAL_REAL_GIF_ORACLE = _real_gif_oracle()
+
+
+@query("multimodal_real_gif", oracle=MULTIMODAL_REAL_GIF_ORACLE)
+def multimodal_real_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real GIF decode under the driver harness — see the section
+    comment above for the proof structure. Scale shape: identical to
+    multimodal_real_jpeg (embarrassingly parallel Arrow-batch work,
+    only (doc_id, 3 ints) ever leave the worker)."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 1)
+        .select("doc_id")
+        # the fixture parquet loads as ONE partition, which would
+        # serialize the per-row codec work — scan_spread spreads it
+        # across cores, and skips the exchange outright once the scan
+        # splits feed the cores itself (optimization r14)
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _gif_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("width", T.IntegerType()),
+                T.StructField("height", T.IntegerType()),
+                T.StructField("phash", T.IntegerType()),
+            ]
+        ),
+    ).orderBy("doc_id")
+
+
+# ---- multimodal_real_tiff ---------------------------------------------------
+#
+# The TIFF sibling: per-document gray TIFFs are encoded and decoded
+# executor-side through the production stdlib codec
+# (extensions/tiff_stdlib.py), with the codec (None/LZW/Deflate/
+# PackBits), horizontal predictor, byte order and strip height all
+# ROTATING per doc_id — so one driver-green row covers every
+# compression path, both endiannesses, the predictor and the
+# multi-strip reassembly. The profile is lossless, so the DuckDB
+# oracle recomputes the band averages directly from the sample
+# formula pixel(x, y) = (d*3 + 5x + 11y + xy) % 256 — identical
+# regardless of which codec a given document drew.
+
+_TW, _TH = 16, 8
+_TIFF_CODECS = (1, 5, 8, 32773)
+
+
+def _tiff_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    for pdf in batches:
+        widths, heights, phashes = [], [], []
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            samples = bytes(
+                (d * 3 + 5 * x + 11 * y + x * y) % 256
+                for y in range(_TH)
+                for x in range(_TW)
+            )
+            comp = _TIFF_CODECS[(d // 4) % 4]
+            payload = tiff_stdlib.encode_tiff(
+                _TW,
+                _TH,
+                samples,
+                compression=comp,
+                predictor=comp in (5, 8) and d % 8 < 4,
+                rows_per_strip=3 if d % 16 < 8 else None,
+                big_endian=bool(d % 2),
+            )
+            w, h = decode_dims(payload)
+            widths.append(w)
+            heights.append(h)
+            phashes.append(phash(payload))
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "width": widths,
+                "height": heights,
+                "phash": phashes,
+            }
+        )
+
+
+def _real_tiff_oracle() -> str:
+
+    def gray(x: int, y: int) -> str:
+        return f"((doc_id * 3 + {5 * x + 11 * y + x * y}) % 256)"
+
+    bands = []
+    for k in range(_PHASH_BITS + 1):
+        x0 = k * _TW // (_PHASH_BITS + 1)
+        x1 = max((k + 1) * _TW // (_PHASH_BITS + 1), x0 + 1)
+        total = " + ".join(gray(x, y) for x in range(x0, x1) for y in range(_TH))
+        bands.append(f"(({total}) // {(x1 - x0) * _TH})")
+    bits = " + ".join(
+        f"(CASE WHEN {bands[i]} < {bands[i + 1]} THEN {1 << i} ELSE 0 END)"
+        for i in range(_PHASH_BITS)
+    )
+    return f"""
+        SELECT doc_id,
+               {_TW} AS width,
+               {_TH} AS height,
+               CAST({bits} AS INTEGER) AS phash
+        FROM documents
+        WHERE doc_id % 4 = 2
+        ORDER BY doc_id
+    """
+
+
+MULTIMODAL_REAL_TIFF_ORACLE = _real_tiff_oracle()
+
+
+@query("multimodal_real_tiff", oracle=MULTIMODAL_REAL_TIFF_ORACLE)
+def multimodal_real_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real TIFF decode under the driver harness — see the section
+    comment above for the rotation. Scale shape: identical to the
+    JPEG/GIF siblings (embarrassingly parallel Arrow-batch work)."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 2)
+        .select("doc_id")
+        # the fixture parquet loads as ONE partition, which would
+        # serialize the per-row codec work — scan_spread spreads it
+        # across cores, and skips the exchange outright once the scan
+        # splits feed the cores itself (optimization r14)
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _tiff_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("width", T.IntegerType()),
+                T.StructField("height", T.IntegerType()),
+                T.StructField("phash", T.IntegerType()),
+            ]
+        ),
+    ).orderBy("doc_id")
+
+
+# ---- multimodal_real_wav ----------------------------------------------------
+#
+# The AUDIO sibling: per-document PCM WAVs are encoded and decoded
+# executor-side through the production stdlib codec
+# (extensions/wav_stdlib.py), with channel count (1/2) and bit depth
+# (8/16/24/32) rotating per doc_id so every sample-width decode path
+# and the channel-interleave metadata sit under the driver's eye.
+# Every doc carries the same 96 interleaved samples
+# s_i = ((d·7 + 11i + i²) % 201) − 100 (fits the 8-bit range, so one
+# formula serves all depths); PCM is exact integers, so the DuckDB
+# oracle recomputes n_frames/peak/energy as flat arithmetic —
+# GREATEST over 96 terms and a 96-term squared sum, no codec
+# latitude anywhere.
+
+_WAV_N = 96
+_WAV_BITS = (8, 16, 24, 32)
+
+
+def _wav_samples(doc_id: int) -> list[int]:
+    d = int(doc_id)
+    return [((d * 7 + 11 * i + i * i) % 201) - 100 for i in range(_WAV_N)]
+
+
+def _wav_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from datapipeline_scripts_spark.extensions import wav_stdlib as ws
+
+    for pdf in batches:
+        out = {"doc_id": pdf["doc_id"], "channels": [], "n_frames": [], "peak": [], "energy": []}
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            payload = ws.encode_wav(
+                1 + d % 2, 16000, _WAV_BITS[(d // 4) % 4], _wav_samples(d)
+            )
+            channels, _rate, n_frames, peak, energy = ws.wav_features(payload)
+            out["channels"].append(channels)
+            out["n_frames"].append(n_frames)
+            out["peak"].append(peak)
+            out["energy"].append(energy)
+        yield pd.DataFrame(out)
+
+
+def _real_wav_oracle() -> str:
+    def s(i: int) -> str:
+        return f"(((doc_id * 7 + {11 * i + i * i}) % 201) - 100)"
+
+    peak = "GREATEST(" + ", ".join(f"abs({s(i)})" for i in range(_WAV_N)) + ")"
+    energy = " + ".join(f"{s(i)} * {s(i)}" for i in range(_WAV_N))
+    return f"""
+        SELECT doc_id,
+               CAST(1 + doc_id % 2 AS INTEGER) AS channels,
+               CAST({_WAV_N} // (1 + doc_id % 2) AS INTEGER) AS n_frames,
+               CAST({peak} AS INTEGER) AS peak,
+               CAST({energy} AS BIGINT) AS energy
+        FROM documents
+        WHERE doc_id % 4 = 3
+        ORDER BY doc_id
+    """
+
+
+MULTIMODAL_REAL_WAV_ORACLE = _real_wav_oracle()
+
+
+@query("multimodal_real_wav", oracle=MULTIMODAL_REAL_WAV_ORACLE)
+def multimodal_real_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real PCM-WAV decode under the driver harness — see the section
+    comment above. Scale shape: identical to the image siblings
+    (embarrassingly parallel Arrow-batch work, integers only across
+    the worker boundary); at corpus scale the energy column feeds
+    silence/clipping quality filters whose aggregation must run in
+    DECIMAL(38,0) (32-bit samples square to ~4.6e18 per term)."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 3)
+        .select("doc_id")
+        # the fixture parquet loads as ONE partition, which would
+        # serialize the per-row codec work — scan_spread spreads it
+        # across cores, and skips the exchange outright once the scan
+        # splits feed the cores itself (optimization r14)
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _wav_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("channels", T.IntegerType()),
+                T.StructField("n_frames", T.IntegerType()),
+                T.StructField("peak", T.IntegerType()),
+                T.StructField("energy", T.LongType()),
+            ]
+        ),
+    ).orderBy("doc_id")
+
+
+# ---- multimodal_real_video --------------------------------------------------
+#
+# The VIDEO sibling: per-document MJPEG AVIs (1-3 frames, count
+# rotating with doc_id) are MUXED executor-side, then DEMUXED and
+# frame-decoded through the production path (extensions/avi_stdlib.py
+# container walk → jpeg_stdlib pixels → the shared band/dHash) — one
+# row per frame. The frame coefficients derive from (doc_id,
+# frame_idx), so the DuckDB oracle is the JPEG key's arithmetic with
+# the frame index joined in as a column (a VALUES table bounded by
+# doc_id % 3) — a hash match proves the container framing, the frame
+# extraction order AND the per-frame entropy/IDCT chain at once.
+
+_VW, _VH = 16, 8
+
+
+def _video_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    def blk(dc: int, ac01: int) -> list[int]:
+        b = [0] * 64
+        b[0], b[1] = dc, ac01
+        return b
+
+    for pdf in batches:
+        out = {"doc_id": [], "frame_idx": [], "n_frames": [], "phash": []}
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            n = 1 + d % 3
+            frames = [
+                jpeg_stdlib.encode_gray_baseline(
+                    _VW,
+                    _VH,
+                    [
+                        blk(((d + 11 * f) % 37) - 18, ((d + f) % 5) - 2),
+                        blk(((d * 7 + 13 * f) % 41) - 20, ((d * 3 + 5 * f) % 7) - 3),
+                    ],
+                    restart_interval=1,
+                )
+                for f in range(n)
+            ]
+            payload = avi_stdlib.encode_avi_mjpeg(_VW, _VH, frames, us_per_frame=40000)
+            got = avi_stdlib.avi_frames(payload)
+            for f, frame in enumerate(got):
+                # production per-frame pixel path (size cross-check
+                # included), then the shared dHash family
+                avi_stdlib.avi_decode_frame_gray(payload, f)
+                out["doc_id"].append(d)
+                out["frame_idx"].append(f)
+                out["n_frames"].append(len(got))
+                out["phash"].append(phash(frame))
+        yield pd.DataFrame(out)
+
+
+def _real_video_oracle() -> str:
+
+    b01 = [jpeg_stdlib._IDCT_BASIS[x][1] for x in range(8)]
+    dc = [
+        "(((doc_id + 11 * f.i) % 37) - 18)",
+        "(((doc_id * 7 + 13 * f.i) % 41) - 20)",
+    ]
+    ac = ["(((doc_id + f.i) % 5) - 2)", "(((doc_id * 3 + 5 * f.i) % 7) - 3)"]
+
+    def val(x: int) -> str:
+        blk, col = x // 8, x % 8
+        return (
+            f"((16384 * {dc[blk]} + {b01[col] * _Q01} * {ac[blk]}"
+            f" + 1052672) // 8192)"
+        )
+
+    bands = []
+    for k in range(_PHASH_BITS + 1):
+        x0 = k * _VW // (_PHASH_BITS + 1)
+        x1 = max((k + 1) * _VW // (_PHASH_BITS + 1), x0 + 1)
+        total = " + ".join(val(x) for x in range(x0, x1))
+        bands.append(f"(({total}) // {x1 - x0})")
+    bits = " + ".join(
+        f"(CASE WHEN {bands[i]} < {bands[i + 1]} THEN {1 << i} ELSE 0 END)"
+        for i in range(_PHASH_BITS)
+    )
+    return f"""
+        SELECT doc_id,
+               CAST(f.i AS INTEGER) AS frame_idx,
+               CAST(1 + doc_id % 3 AS INTEGER) AS n_frames,
+               CAST({bits} AS INTEGER) AS phash
+        FROM documents, (VALUES (0), (1), (2)) f(i)
+        WHERE doc_id % 3 = 0 AND f.i <= doc_id % 3
+        ORDER BY doc_id, frame_idx
+    """
+
+
+MULTIMODAL_REAL_VIDEO_ORACLE = _real_video_oracle()
+
+
+@query("multimodal_real_video", oracle=MULTIMODAL_REAL_VIDEO_ORACLE)
+def multimodal_real_video(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real MJPEG-AVI demux + frame decode under the driver harness —
+    see the section comment above. Scale shape: demux is O(file) per
+    payload inside mapInPandas; frame decode fans out per frame (the
+    output grain), and only (doc_id, 3 ints) per frame crosses the
+    worker boundary — the shape a 100 TB video-frame extraction would
+    parallelize the same way."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 0)
+        .select("doc_id")
+        # the fixture parquet loads as ONE partition, which would
+        # serialize the per-row codec work — scan_spread spreads it
+        # across cores, and skips the exchange outright once the scan
+        # splits feed the cores itself (optimization r14)
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _video_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("frame_idx", T.IntegerType()),
+                T.StructField("n_frames", T.IntegerType()),
+                T.StructField("phash", T.IntegerType()),
+            ]
+        ),
+    ).orderBy("doc_id", "frame_idx")
+
+
+# ---- multimodal_resize -----------------------------------------------------
+#
+# The RESIZE step of the multimodal chain under the driver harness
+# (SURVEY §2.E4 names decode / feature-extract / resize /
+# frame-sample; the first, second and fourth are driver-gated since
+# r2/r8/r9 — this closes the set): per-document 8-bit palette BMPs
+# (identity grayscale palette, so decoded gray == palette index
+# exactly; RLE8 rotating on odd doc_ids) are encoded and decoded
+# through the production stdlib codec, then box-resized 16×8 → 4×2 by
+# the EXACT integer area resample (extensions/imageops.py). For the
+# 4×4 divisor geometry every output pixel is floor(block_sum/16) of
+# the pixel formula (d·3 + 5x + 11y + xy) % 256, which the DuckDB
+# oracle recomputes term by term — decode, resize arithmetic and
+# pixel order all inside the hash gate.
+
+_RZ_W, _RZ_H, _RZ_TW, _RZ_TH = 16, 8, 4, 2
+
+
+def _resize_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from datapipeline_scripts_spark.extensions.imageops import box_resize_gray
+
+    identity = bytes(c for i in range(256) for c in (i, i, i))
+    for pdf in batches:
+        out: dict[str, list] = {"doc_id": []}
+        for i in range(_RZ_TW * _RZ_TH):
+            out[f"p{i}"] = []
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            indices = bytes(
+                (d * 3 + 5 * x + 11 * y + x * y) % 256
+                for y in range(_RZ_H)
+                for x in range(_RZ_W)
+            )
+            payload = bmp_stdlib.encode_bmp(
+                _RZ_W, _RZ_H, indices, palette=identity, rle=bool(d % 2)
+            )
+            w, h, gray = bmp_stdlib.bmp_decode_gray(payload)
+            small = box_resize_gray(bytes(gray), w, h, _RZ_TW, _RZ_TH)
+            out["doc_id"].append(d)
+            for i, px in enumerate(small):
+                out[f"p{i}"].append(px)
+        yield pd.DataFrame(out)
+
+
+def _resize_oracle() -> str:
+    cols = []
+    bw, bh = _RZ_W // _RZ_TW, _RZ_H // _RZ_TH
+    for ty in range(_RZ_TH):
+        for tx in range(_RZ_TW):
+            terms = " + ".join(
+                f"((doc_id * 3 + {5 * (tx * bw + dx) + 11 * (ty * bh + dy) + (tx * bw + dx) * (ty * bh + dy)}) % 256)"
+                for dy in range(bh)
+                for dx in range(bw)
+            )
+            cols.append(
+                f"CAST(({terms}) // {bw * bh} AS INTEGER) AS p{ty * _RZ_TW + tx}"
+            )
+    sel = ",\n           ".join(cols)
+    return f"""
+        SELECT doc_id,
+           {sel}
+        FROM documents
+        WHERE doc_id % 7 = 1
+        ORDER BY doc_id
+    """
+
+
+MULTIMODAL_RESIZE_ORACLE = _resize_oracle()
+
+
+@query("multimodal_resize", oracle=MULTIMODAL_RESIZE_ORACLE)
+def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real decode → exact box resize under the driver harness — see
+    the section comment above. Scale shape: identical to the codec
+    siblings (embarrassingly parallel Arrow-batch work, only (doc_id,
+    8 ints) across the worker boundary — the thumbnail-extraction
+    shape at corpus scale)."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 7 == 1)
+        .select("doc_id")
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    fields = [T.StructField("doc_id", T.LongType())] + [
+        T.StructField(f"p{i}", T.IntegerType()) for i in range(_RZ_TW * _RZ_TH)
+    ]
+    return docs.mapInPandas(
+        _resize_worker, schema=T.StructType(fields)
+    ).orderBy("doc_id")
+
+
+# ---- multimodal_audio_frames --------------------------------------------------
+
+_AF_N = 96  # samples per clip
+_AF_L = 24  # samples per frame → 4 frames
+
+
+def _af_sample(d: int, i: int) -> int:
+    return ((d * 13 + 7 * i + i * i) % 199) - 99
+
+
+def _audio_frames_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from datapipeline_scripts_spark.extensions import wav_stdlib as ws
+
+    for pdf in batches:
+        out: dict[str, list] = {
+            "doc_id": [],
+            "frame_idx": [],
+            "energy": [],
+            "zero_crossings": [],
+            "peak": [],
+        }
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            samples = [_af_sample(d, i) for i in range(_AF_N)]
+            payload = ws.encode_wav(1, 16000, 16, samples)
+            _ch, _rate, _bits, got = ws.wav_decode(payload)
+            if got != samples:
+                raise ValueError(f"doc{d}: WAV roundtrip drift")
+            for f in range(_AF_N // _AF_L):
+                fr = got[f * _AF_L : (f + 1) * _AF_L]
+                out["doc_id"].append(d)
+                out["frame_idx"].append(f)
+                out["energy"].append(sum(s * s for s in fr))
+                out["zero_crossings"].append(
+                    sum(1 for j in range(_AF_L - 1) if fr[j] * fr[j + 1] < 0)
+                )
+                out["peak"].append(max(abs(s) for s in fr))
+        yield pd.DataFrame(out)
+
+
+def _audio_frames_oracle() -> str:
+    def s(i: int) -> str:
+        return f"(((doc_id * 13 + {7 * i + i * i}) % 199) - 99)"
+
+    rows = []
+    for f in range(_AF_N // _AF_L):
+        lo = f * _AF_L
+        energy = " + ".join(f"{s(i)} * {s(i)}" for i in range(lo, lo + _AF_L))
+        zc = " + ".join(
+            f"(CASE WHEN {s(i)} * {s(i + 1)} < 0 THEN 1 ELSE 0 END)"
+            for i in range(lo, lo + _AF_L - 1)
+        )
+        peak = "GREATEST(" + ", ".join(f"abs({s(i)})" for i in range(lo, lo + _AF_L)) + ")"
+        rows.append(
+            f"SELECT doc_id, CAST({f} AS INTEGER) AS frame_idx,"
+            f" CAST({energy} AS BIGINT) AS energy,"
+            f" CAST({zc} AS INTEGER) AS zero_crossings,"
+            f" CAST({peak} AS INTEGER) AS peak"
+            f" FROM documents WHERE doc_id % 4 = 1"
+        )
+    return " UNION ALL ".join(rows) + " ORDER BY doc_id, frame_idx"
+
+
+MULTIMODAL_AUDIO_FRAMES_ORACLE = _audio_frames_oracle()
+
+
+@query("multimodal_audio_frames", oracle=MULTIMODAL_AUDIO_FRAMES_ORACLE)
+def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame-level audio features through the real WAV codec — see the
+    module docstring. Scale shape: per-row codec + O(N) integer
+    feature math inside mapInPandas; output grain is (doc, frame) —
+    the rows a silence/clipping gate filters on. Only integers cross
+    the worker boundary."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 1)
+        .select("doc_id")
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _audio_frames_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("frame_idx", T.IntegerType()),
+                T.StructField("energy", T.LongType()),
+                T.StructField("zero_crossings", T.IntegerType()),
+                T.StructField("peak", T.IntegerType()),
+            ]
+        ),
+    ).orderBy("doc_id", "frame_idx")
+
+
+# ---- multimodal_scene_cuts ----------------------------------------------------
+
+_SC_W, _SC_H = 16, 8
+_SC_Q00, _SC_Q01 = 16, 11  # STD_LUMA_QUANT[0], [1] — guarded in the worker
+_SC_THRESHOLD = 4500  # |Δpixel| sum over the frame ⇒ cut (splits the fixture)
+
+
+def _sc_coefs(d: int, f: int) -> tuple[int, int, int, int]:
+    """(dc0, ac0, dc1, ac1) for frame f of doc d — the video key's
+    exact coefficient formulas (`multimodal_real_video`), so the per-pixel oracle
+    arithmetic is already proven."""
+    return (
+        ((d + 11 * f) % 37) - 18,
+        ((d + f) % 5) - 2,
+        ((d * 7 + 13 * f) % 41) - 20,
+        ((d * 3 + 5 * f) % 7) - 3,
+    )
+
+
+def _scene_cuts_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    if jpeg_stdlib.STD_LUMA_QUANT[0] != _SC_Q00 or jpeg_stdlib.STD_LUMA_QUANT[1] != _SC_Q01:
+        raise ValueError(
+            "jpeg_stdlib quant table drifted from the oracle constants "
+            f"({_SC_Q00}, {_SC_Q01}); regenerate the scene-cut oracle"
+        )
+
+    def blk(dc: int, ac01: int) -> list[int]:
+        b = [0] * 64
+        b[0], b[1] = dc, ac01
+        return b
+
+    for pdf in batches:
+        out: dict[str, list] = {
+            "doc_id": [],
+            "pair_idx": [],
+            "diff_sum": [],
+            "is_cut": [],
+        }
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            n = 1 + d % 3
+            frames = []
+            for f in range(n):
+                dc0, ac0, dc1, ac1 = _sc_coefs(d, f)
+                frames.append(
+                    jpeg_stdlib.encode_gray_baseline(
+                        _SC_W,
+                        _SC_H,
+                        [blk(dc0, ac0), blk(dc1, ac1)],
+                        restart_interval=1,
+                    )
+                )
+            payload = avi_stdlib.encode_avi_mjpeg(_SC_W, _SC_H, frames, us_per_frame=40000)
+            pixels = [
+                avi_stdlib.avi_decode_frame_gray(payload, f)[2] for f in range(n)
+            ]
+            for p in range(n - 1):
+                a, b = pixels[p], pixels[p + 1]
+                diff = sum(abs(a[i] - b[i]) for i in range(_SC_W * _SC_H))
+                out["doc_id"].append(d)
+                out["pair_idx"].append(p)
+                out["diff_sum"].append(diff)
+                out["is_cut"].append(diff > _SC_THRESHOLD)
+        yield pd.DataFrame(out)
+
+
+def _scene_cuts_oracle() -> str:
+
+    b01 = [jpeg_stdlib._IDCT_BASIS[x][1] for x in range(8)]
+
+    def val(x: int, f: str) -> str:
+        blk, col = x // 8, x % 8
+        dc = [
+            f"(((doc_id + 11 * {f}) % 37) - 18)",
+            f"(((doc_id * 7 + 13 * {f}) % 41) - 20)",
+        ][blk]
+        ac = [
+            f"(((doc_id + {f}) % 5) - 2)",
+            f"(((doc_id * 3 + 5 * {f}) % 7) - 3)",
+        ][blk]
+        return f"((16384 * {dc} + {b01[col] * _SC_Q01} * {ac} + 1052672) // 8192)"
+
+    # frames are constant down columns, so the frame diff is
+    # h × Σ_x |val(x, f) − val(x, f+1)|
+    diff = " + ".join(
+        f"abs({val(x, 'p.i')} - {val(x, '(p.i + 1)')})" for x in range(_SC_W)
+    )
+    return f"""
+    SELECT doc_id,
+           CAST(p.i AS INTEGER) AS pair_idx,
+           CAST({_SC_H} * ({diff}) AS BIGINT) AS diff_sum,
+           ({_SC_H} * ({diff}) > {_SC_THRESHOLD}) AS is_cut
+    FROM documents, (VALUES (0), (1)) p(i)
+    WHERE doc_id % 3 <> 0 AND p.i < doc_id % 3
+    ORDER BY doc_id, pair_idx
+    """
+
+
+MULTIMODAL_SCENE_CUTS_ORACLE = _scene_cuts_oracle()
+
+
+@query("multimodal_scene_cuts", oracle=MULTIMODAL_SCENE_CUTS_ORACLE)
+def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shot-boundary detection on real MJPEG video — see the module
+    docstring. Scale shape: demux + per-frame decode + O(pixels)
+    integer diff inside mapInPandas; output grain is the frame PAIR
+    (what a sampling pipeline keys on to pick one representative
+    frame per shot). Only integers cross the worker boundary."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 != 0)
+        .select("doc_id")
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _scene_cuts_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("pair_idx", T.IntegerType()),
+                T.StructField("diff_sum", T.LongType()),
+                T.StructField("is_cut", T.BooleanType()),
+            ]
+        ),
+    ).orderBy("doc_id", "pair_idx")
+
+
+# ---- multimodal_real_tiff16 ---------------------------------------------------
+
+_T16_W, _T16_H = 8, 5
+_T16_COMPS = (1, 5, 8, 32773)
+
+
+def _t16_sample(d: int, x: int, y: int) -> int:
+    return (d * 257 + x * 4099 + y * 1031) % 65536
+
+
+def _tiff16_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    for pdf in batches:
+        out: dict[str, list] = {
+            "doc_id": [],
+            "compression": [],
+            "s_min": [],
+            "s_max": [],
+            "s_sum": [],
+        }
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            samples = [
+                _t16_sample(d, x, y) for y in range(_T16_H) for x in range(_T16_W)
+            ]
+            comp = _T16_COMPS[(d // 4) % 4]
+            payload = tiff_stdlib.encode_tiff_gray16(
+                _T16_W,
+                _T16_H,
+                samples,
+                compression=comp,
+                predictor=comp in (5, 8) and d % 8 >= 4,
+                rows_per_strip=2,
+                big_endian=d % 2 == 1,
+            )
+            w, h, got = tiff_stdlib.tiff_decode_gray16(payload)
+            if (w, h) != (_T16_W, _T16_H) or got != samples:
+                raise ValueError(f"doc{d}: 16-bit TIFF roundtrip drift")
+            out["doc_id"].append(d)
+            out["compression"].append(comp)
+            out["s_min"].append(min(got))
+            out["s_max"].append(max(got))
+            out["s_sum"].append(sum(got))
+        yield pd.DataFrame(out)
+
+
+def _tiff16_oracle() -> str:
+    terms = [
+        f"((doc_id * 257 + {x * 4099 + y * 1031}) % 65536)"
+        for y in range(_T16_H)
+        for x in range(_T16_W)
+    ]
+    return f"""
+    SELECT doc_id,
+           CAST([{", ".join(str(c) for c in _T16_COMPS)}]
+                [(doc_id // 4) % 4 + 1] AS INTEGER) AS compression,
+           CAST(LEAST({", ".join(terms)}) AS INTEGER) AS s_min,
+           CAST(GREATEST({", ".join(terms)}) AS INTEGER) AS s_max,
+           CAST({" + ".join(terms)} AS BIGINT) AS s_sum
+    FROM documents
+    WHERE doc_id % 4 = 2
+    ORDER BY doc_id
+    """
+
+
+MULTIMODAL_REAL_TIFF16_ORACLE = _tiff16_oracle()
+
+
+@query("multimodal_real_tiff16", oracle=MULTIMODAL_REAL_TIFF16_ORACLE)
+def multimodal_real_tiff16(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit gray TIFF roundtrip under the driver harness — see the
+    module docstring. Scale shape: identical to the 8-bit TIFF key
+    (embarrassingly parallel Arrow-batch codec work); the min/max/sum
+    columns are the dynamic-range stats a scientific-imagery quality
+    gate keys on."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 4 == 2)
+        .select("doc_id")
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    return docs.mapInPandas(
+        _tiff16_worker,
+        schema=T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("compression", T.IntegerType()),
+                T.StructField("s_min", T.IntegerType()),
+                T.StructField("s_max", T.IntegerType()),
+                T.StructField("s_sum", T.LongType()),
+            ]
+        ),
+    ).orderBy("doc_id")
+
+
+# ---- multimodal_image_tiles -------------------------------------------------
+#
+# ViT-style patch extraction — the step between image decode and a
+# vision encoder: the decoded image splits into a fixed tile grid and
+# each tile ships as a unit (here: per-tile min/max/sum features, the
+# same decode-proven integers the resize key established). The codec
+# path is REAL end-to-end: per-doc 8-bit palette BMP (identity
+# grayscale palette; RLE8 rotating on odd doc_ids) encoded and
+# decoded through the production stdlib codec, then tiled 16×8 →
+# eight 4×4 patches. The DuckDB oracle recomputes every tile's
+# min/max/sum from the pixel formula (d·3 + 5x + 11y + xy) % 256 in
+# closed form — decode, tiling arithmetic and tile order all inside
+# the hash gate.
+
+_TILE_W, _TILE_H = 4, 4
+_TILE_IMG_W, _TILE_IMG_H = 16, 8
+
+
+def _tiles_worker(batches):
+
+
+    identity = bytes(c for i in range(256) for c in (i, i, i))
+    cols = ("doc_id", "tile_id", "t_min", "t_max", "t_sum")
+    for pdf in batches:
+        out: dict[str, list] = {c: [] for c in cols}
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            indices = bytes(
+                (d * 3 + 5 * x + 11 * y + x * y) % 256
+                for y in range(_TILE_IMG_H)
+                for x in range(_TILE_IMG_W)
+            )
+            payload = bmp_stdlib.encode_bmp(
+                _TILE_IMG_W, _TILE_IMG_H, indices, palette=identity, rle=bool(d % 2)
+            )
+            w, h, gray = bmp_stdlib.bmp_decode_gray(payload)
+            tiles_x, tiles_y = w // _TILE_W, h // _TILE_H
+            for ty in range(tiles_y):
+                for tx in range(tiles_x):
+                    px = [
+                        gray[(ty * _TILE_H + dy) * w + tx * _TILE_W + dx]
+                        for dy in range(_TILE_H)
+                        for dx in range(_TILE_W)
+                    ]
+                    out["doc_id"].append(d)
+                    out["tile_id"].append(ty * tiles_x + tx)
+                    out["t_min"].append(min(px))
+                    out["t_max"].append(max(px))
+                    out["t_sum"].append(sum(px))
+        yield pd.DataFrame(out)
+
+
+def _tiles_oracle() -> str:
+    tiles_x = _TILE_IMG_W // _TILE_W
+    tiles_y = _TILE_IMG_H // _TILE_H
+    parts = []
+    for ty in range(tiles_y):
+        for tx in range(tiles_x):
+            terms = [
+                f"((doc_id * 3 + {5 * (tx * _TILE_W + dx) + 11 * (ty * _TILE_H + dy) + (tx * _TILE_W + dx) * (ty * _TILE_H + dy)}) % 256)"
+                for dy in range(_TILE_H)
+                for dx in range(_TILE_W)
+            ]
+            parts.append(
+                f"SELECT doc_id, CAST({ty * tiles_x + tx} AS BIGINT) AS tile_id,"
+                f" CAST(least({', '.join(terms)}) AS BIGINT) AS t_min,"
+                f" CAST(greatest({', '.join(terms)}) AS BIGINT) AS t_max,"
+                f" CAST(({' + '.join(terms)}) AS BIGINT) AS t_sum"
+                f" FROM documents WHERE doc_id % 7 = 3"
+            )
+    union = "\nUNION ALL\n".join(parts)
+    return f"SELECT * FROM (\n{union}\n) ORDER BY doc_id, tile_id"
+
+
+MULTIMODAL_IMAGE_TILES_ORACLE = _tiles_oracle()
+
+
+@query("multimodal_image_tiles", oracle=MULTIMODAL_IMAGE_TILES_ORACLE)
+def multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real decode → fixed-grid patch extraction; one row per
+    (doc_id, tile): (doc_id, tile_id, t_min, t_max, t_sum).
+
+    Scale shape: identical to the codec siblings — embarrassingly
+    parallel Arrow-batch work, only (doc_id, 8 tiles × 3 ints)
+    across the worker boundary; at corpus scale the tiles would carry
+    patch bytes to the encoder, same partitioning, bigger payload."""
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 7 == 3)
+        .select("doc_id")
+        .transform(scan_spread(spark, sf_dir, "documents"))
+    )
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("tile_id", T.LongType()),
+            T.StructField("t_min", T.LongType()),
+            T.StructField("t_max", T.LongType()),
+            T.StructField("t_sum", T.LongType()),
+        ]
+    )
+    return docs.mapInPandas(_tiles_worker, schema=schema).orderBy(
+        "doc_id", "tile_id"
     )

@@ -85,6 +85,9 @@ from datapipeline_scripts_spark.extensions.curation import (
 from datapipeline_scripts_spark.extensions.dedup import (
     _BANDS,
     _N_HASHES,
+    PW_CAP,
+    PW_MIN_SHARED,
+    PW_WINDOW,
     _minhash_hex32_sql,
     band_join,
     band_rows_hashed,
@@ -92,7 +95,6 @@ from datapipeline_scripts_spark.extensions.dedup import (
 )
 from datapipeline_scripts_spark.functions.text import md5_48, md5_48_sql, shingles, tokens
 from datapipeline_scripts_spark.registry import query
-from datapipeline_scripts_spark.sources.staged_r10 import _PW_CAP, _PW_MIN_SHARED, _PW_WINDOW
 
 _REP_BP_MAX = 3000  # text_repetition's boilerplate line (30%)
 _MIX_MOD = 10000  # mixture weights and sample buckets in basis points
@@ -186,7 +188,7 @@ def _winnow_drop(gated: DataFrame, pin) -> DataFrame:
 
     fps = pin(
         gated.select(
-            "doc_id", F.explode(winnow_fps(F.col("toks"), _PW_WINDOW)).alias("fp")
+            "doc_id", F.explode(winnow_fps(F.col("toks"), PW_WINDOW)).alias("fp")
         )
     )
     # doc-frequency cap as a WINDOW count over fp instead of
@@ -196,7 +198,7 @@ def _winnow_drop(gated: DataFrame, pin) -> DataFrame:
     wfp = W.partitionBy("fp")
     indexed = (
         fps.withColumn("n_docs", F.count("*").over(wfp))
-        .filter((F.col("n_docs") >= 2) & (F.col("n_docs") <= _PW_CAP))
+        .filter((F.col("n_docs") >= 2) & (F.col("n_docs") <= PW_CAP))
         .select("fp", "doc_id")
     )
     a = indexed.select("fp", F.col("doc_id").alias("doc_a"))
@@ -206,7 +208,7 @@ def _winnow_drop(gated: DataFrame, pin) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= _PW_MIN_SHARED)
+        .filter(F.col("shared") >= PW_MIN_SHARED)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -351,15 +353,15 @@ pw_fps AS (
   SELECT DISTINCT doc_id, fp FROM (
     SELECT doc_id, pos,
            min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND {_PW_WINDOW - 1} FOLLOWING) AS fp,
+                        ROWS BETWEEN CURRENT ROW AND {PW_WINDOW - 1} FOLLOWING) AS fp,
            count(*) OVER (PARTITION BY doc_id) AS n
     FROM pw_hashed
   )
-  WHERE pos <= greatest(n - {_PW_WINDOW}, 0)
+  WHERE pos <= greatest(n - {PW_WINDOW}, 0)
 ),
 pw_capped AS (
   SELECT fp FROM pw_fps GROUP BY fp
-  HAVING count(*) BETWEEN 2 AND {_PW_CAP}
+  HAVING count(*) BETWEEN 2 AND {PW_CAP}
 ),
 pw_drop AS (
   SELECT DISTINCT doc_b AS doc_id FROM (
@@ -367,7 +369,7 @@ pw_drop AS (
     FROM pw_fps a JOIN pw_capped USING (fp) JOIN pw_fps b USING (fp)
     WHERE a.doc_id < b.doc_id
     GROUP BY 1, 2
-  ) WHERE shared >= {_PW_MIN_SHARED}
+  ) WHERE shared >= {PW_MIN_SHARED}
 ),
 s3 AS (
   SELECT doc_id, source, text, length(text) AS nc

@@ -20,12 +20,19 @@ raw-cosine comparisons are cross-engine bit-stable because the
 sequential `aggregate` fold evaluates in the same order as DuckDB's
 list_dot_product; displayed scores rank on the 4-dp-rounded cosine with
 a deterministic id tie-break (functions/vectors.py).
+
+Further down: the index evaluations and maintenance built on these
+operators (`knn_recall_report`, `embedding_prefix_recall`,
+`knn_ivf_append`, `knn_ivf_rebalance`) and the integer PCA pair
+(`embedding_pca_power`, `embedding_pca_project`).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from datapipeline_scripts_spark.catalog import load_table, scan_spread
 from datapipeline_scripts_spark.functions.vectors import cosine, sign_bucket
@@ -945,3 +952,691 @@ def embedding_outlier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("outlier_score_u6"), "vec_id")
         .limit(20)
     )
+
+
+# ---- knn_recall_report -----------------------------------------------------
+#
+# Evaluate the approximate index IN-ENGINE: recall@5 of knn_ivf
+# against the exact knn_brute top-5, per query — the acceptance gate
+# every ANN deployment runs before switching retrieval paths. Both
+# legs are the registered builders themselves (and the oracle wraps
+# their registered SQL twins), so the report can never drift from
+# the operators it grades.
+
+
+KNN_RECALL_REPORT_ORACLE = f"""
+WITH exact AS (
+  SELECT qid, cid FROM (
+    WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
+               FROM embeddings WHERE vec_id < 5),
+         c AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
+               FROM embeddings),
+         sims AS (
+           SELECT qid, cid,
+                  round(list_dot_product(qe, ce) /
+                        (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ce, ce))),
+                        4) AS cos_sim
+           FROM q CROSS JOIN c
+           WHERE qid <> cid
+         ),
+         ranked AS (
+           SELECT qid, cid,
+                  row_number() OVER (PARTITION BY qid ORDER BY cos_sim DESC, cid) AS rn
+           FROM sims
+         )
+    SELECT qid, cid FROM ranked WHERE rn <= 5
+  )
+),
+approx AS (
+  SELECT qid, cid FROM ({_IVF_ORACLE}) WHERE qid < 5
+),
+base AS (SELECT qid, count(*) AS k FROM exact GROUP BY qid),
+inter AS (
+  SELECT e.qid, count(*) AS n_hits
+  FROM exact e JOIN approx a ON e.qid = a.qid AND e.cid = a.cid
+  GROUP BY e.qid
+)
+SELECT b.qid,
+       CAST(coalesce(i.n_hits, 0) AS BIGINT) AS n_hits,
+       CAST(coalesce(i.n_hits, 0) * 10000 // b.k AS BIGINT) AS recall_bp
+FROM base b LEFT JOIN inter i ON b.qid = i.qid
+ORDER BY b.qid
+"""
+
+
+@query("knn_recall_report", oracle=KNN_RECALL_REPORT_ORACLE)
+def knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query ANN recall: (qid, n_hits, recall_bp) for the 5
+    shared query vectors, recall@5 in basis points.
+
+    Scale shape: both legs bound their candidate sets before ranking
+    (brute broadcasts the query block; IVF probes NPROBE lists), the
+    intersection is an equi-join on (qid, cid) — |Q|·k rows a side —
+    and the rollup is partial-aggregable. At real scale the exact leg
+    runs on a held-out sample of queries (recall estimation), which
+    changes only the qid filter."""
+    exact = knn_brute(spark, sf_dir).filter(F.col("rn") <= 5).select("qid", "cid")
+    approx = knn_ivf(spark, sf_dir).filter(F.col("qid") < 5).select("qid", "cid")
+    inter = (
+        exact.join(approx, ["qid", "cid"])
+        .groupBy("qid")
+        .agg(F.count("*").alias("n_hits"))
+    )
+    base = exact.groupBy("qid").agg(F.count("*").alias("k"))
+    return (
+        base.join(inter, "qid", "left")
+        .select(
+            "qid",
+            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
+            F.expr("CAST(coalesce(n_hits, 0) * 10000 div k AS BIGINT)").alias(
+                "recall_bp"
+            ),
+        )
+        .orderBy("qid")
+    )
+
+
+# ---- embedding_pca_power ---------------------------------------------------
+#
+# Top principal direction of the embedding table by POWER ITERATION,
+# entirely in-engine and integer-exact: embeddings are int8-quantized
+# (the proven knn_int8 expression), the 64×64 Gram matrix G = QᵀQ is
+# one combiner-bounded outer-product aggregate (exact BIGINTs), and
+# each iteration is v ← rescale(G·v) with an abs-split integer
+# rescale (sign(w)·(|w|·1024 ÷ max|w|)) — floor-on-nonnegative equals
+# truncation, so Spark's `div` and DuckDB's `//` agree exactly. G is
+# PSD by construction, so the iteration converges toward the top
+# eigenvector; the OUTPUT is the whole per-dimension trajectory
+# (v1, v2, v3), hash-exact like the perceptron's weight trajectory.
+# This is the whitening/decorrelation step an embedding pipeline runs
+# before dimensionality reduction or calibrated cosine thresholds.
+
+_PCA_ITERS = 3
+_PCA_VSCALE = 1024
+_PCA_DIMS = 64
+
+
+def _pca_learn(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[DataFrame], DataFrame, DataFrame, list[list[int]]]:
+    """Shared PCA chain: ([v after each iteration], quantized vectors
+    (vec_id, qv), dims frame, [raw iterate values]). The power key
+    reads the trajectory; the projection key reuses the quantized
+    table and the final iterate — shared code, so the pair cannot
+    fork. The raw Python-int iterates (last element) let consumers
+    fold the final direction into literal expressions (optimization
+    r14: the projection becomes an in-row dot product, no explode /
+    broadcast join / corpus-sized groupBy)."""
+    e = load_table(spark, sf_dir, "embeddings")
+    sc = F.greatest(
+        F.array_max(F.transform(F.col("embedding"), lambda v: F.abs(v.cast("double")))),
+        F.lit(1e-30),
+    ) / F.lit(127.0)
+    qz = e.select("vec_id", "embedding", sc.alias("sc")).select(
+        "vec_id",
+        F.transform(
+            F.col("embedding"),
+            lambda v: F.floor(v.cast("double") / F.col("sc") + F.lit(0.5)).cast("long"),
+        ).alias("qv"),
+    )
+
+    # Optimization round 13 (guide §4.2, §5, §7.2). The Gram build was
+    # a DOUBLE posexplode (N·dim² = 8.2M rows at sf0.1 through a
+    # partial aggregate); it is now one `mapInArrow` pass that hands
+    # each Arrow batch of quantized vectors to a NumPy int64 matmul —
+    # X.T @ X per batch, one 4096-row partial Gram per task, summed by
+    # a dim²-group aggregate. Exact: the quantized entries are int64
+    # (|q| <= 127 plus the 0.5-rounding headroom), NumPy int64 matmul
+    # is exact integer arithmetic, and the cross-task sum is the same
+    # BIGINT sum as before. Only `qv` crosses the Python boundary
+    # (guide §4.1: project first).
+    #
+    # The power iteration then runs DRIVER-SIDE on the collected Gram:
+    # G is dim² = 4,096 longs — bounded by the embedding width, never
+    # by corpus size, at ANY scale (the canonical production shape:
+    # distributed Gram fan-in, local eigensolve). The old form chained
+    # each iterate through crossJoin(broadcast(m)) joins, nesting
+    # broadcast subtrees exactly like the perceptron loop (1,636 plan
+    # lines — plans/r13/embedding_pca_power_before.txt). Python-int
+    # arithmetic reproduces the engines' BIGINT trajectory exactly
+    # inside the documented overflow headroom (|w| <= 64·|G|·1024,
+    # see the key docstring); the iterates become literal 64-row
+    # frames. Oracle hashes of both PCA keys are unchanged.
+    gram_rows = (
+        qz.select("qv")
+        .mapInArrow(_pca_gram_worker, schema="i int, j int, gij long")
+        .groupBy("i", "j")
+        .agg(F.sum("gij").alias("gij"))
+        .collect()
+    )
+    G = [[0] * _PCA_DIMS for _ in range(_PCA_DIMS)]
+    for r in gram_rows:
+        G[r["i"] - 1][r["j"] - 1] = int(r["gij"])
+
+    dims = spark.range(1, _PCA_DIMS + 1).select(F.col("id").cast("int").alias("dim"))
+    v = [_PCA_VSCALE if d == 0 else 0 for d in range(_PCA_DIMS)]
+    vs = []
+    v_lists: list[list[int]] = []
+    for _t in range(1, _PCA_ITERS + 1):
+        w = [sum(G[i][j] * v[j] for j in range(_PCA_DIMS)) for i in range(_PCA_DIMS)]
+        m = max(max(abs(x) for x in w), 1)
+        v = [
+            -((-x) * _PCA_VSCALE // m) if x < 0 else (x * _PCA_VSCALE) // m
+            for x in w
+        ]
+        v_lists.append(list(v))
+        vs.append(
+            spark.createDataFrame(
+                [(d + 1, v[d]) for d in range(_PCA_DIMS)],
+                schema=T.StructType(
+                    [
+                        T.StructField("dim", T.IntegerType(), False),
+                        T.StructField("vj", T.LongType(), False),
+                    ]
+                ),
+            )
+        )
+    return vs, qz, dims, v_lists
+
+
+def _pca_gram_worker(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    """Per-task partial Gram: NumPy int64 X.T @ X over each Arrow
+    batch of quantized vectors (one 4,096-row partial per task; exact
+    integer arithmetic — see the _pca_learn comment). A ragged or
+    null-carrying batch fails loudly at the reshape."""
+    import numpy as np
+    import pyarrow as pa
+
+    acc = None
+    for batch in batches:
+        col = batch.column(0)
+        n = len(col)
+        if n == 0:
+            continue
+        flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+        X = flat.reshape(n, _PCA_DIMS)
+        p = X.T @ X
+        acc = p if acc is None else acc + p
+    if acc is not None:
+        idx = np.arange(_PCA_DIMS, dtype=np.int32) + 1
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(idx, _PCA_DIMS)),
+                pa.array(np.tile(idx, _PCA_DIMS)),
+                pa.array(acc.ravel()),
+            ],
+            names=["i", "j", "gij"],
+        )
+
+
+def _pca_chain_sql() -> str:
+    """Shared WITH-body for the PCA oracles: q (vec_id, qv), the Gram
+    build, and v0..v{_PCA_ITERS}. DuckDB prunes unreferenced CTEs, so
+    each consumer pays only for what it reads."""
+    its = []
+    for t in range(1, _PCA_ITERS + 1):
+        its.append(f"""w{t} AS (
+  SELECT g.i AS dim, sum(g.gij * v{t - 1}.vj) AS w
+  FROM g JOIN v{t - 1} ON g.j = v{t - 1}.dim GROUP BY g.i
+),
+m{t} AS (SELECT greatest(max(abs(w)), 1) AS m FROM w{t}),
+v{t} AS (
+  SELECT dim,
+         CASE WHEN w < 0 THEN -((-w * {_PCA_VSCALE}) // m)
+              ELSE (w * {_PCA_VSCALE}) // m END AS vj
+  FROM w{t}, m{t}
+)""")
+    its_sql = ",\n".join(its)
+    return f"""q AS (
+  SELECT vec_id,
+         list_transform(v, x -> CAST(floor(x / sc + 0.5) AS BIGINT)) AS qv
+  FROM (
+    SELECT vec_id, v,
+           greatest(list_max(list_transform(v, x -> abs(x))), 1e-30) / 127.0 AS sc
+    FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+  )
+),
+e1 AS (
+  SELECT u.i AS i, u.qi AS qi, qv FROM (
+    SELECT qv,
+           unnest(list_transform(generate_series(1, len(qv)),
+                                 i -> {{'i': i, 'qi': qv[i]}})) AS u
+    FROM q)
+),
+e2 AS (
+  SELECT i, u2.j AS j, qi * u2.qj AS prod FROM (
+    SELECT i, qi,
+           unnest(list_transform(generate_series(1, len(qv)),
+                                 j -> {{'j': j, 'qj': qv[j]}})) AS u2
+    FROM e1)
+),
+g AS (SELECT i, j, sum(prod) AS gij FROM e2 GROUP BY i, j),
+v0 AS (
+  SELECT CAST(unnest(generate_series(1, {_PCA_DIMS})) AS INTEGER) AS dim,
+         CASE WHEN unnest(generate_series(1, {_PCA_DIMS})) = 1
+              THEN {_PCA_VSCALE} ELSE 0 END AS vj
+),
+{its_sql}"""
+
+
+def _pca_oracle() -> str:
+    sel = ", ".join(f"CAST(v{t}.vj AS BIGINT) AS v{t}" for t in range(1, _PCA_ITERS + 1))
+    joins = " ".join(f"JOIN v{t} ON v{t}.dim = d.dim" for t in range(1, _PCA_ITERS + 1))
+    return f"""
+WITH {_pca_chain_sql()}
+SELECT CAST(d.dim AS INTEGER) AS dim, {sel}
+FROM v0 d {joins}
+ORDER BY d.dim
+"""
+
+
+EMBEDDING_PCA_POWER_ORACLE = _pca_oracle()
+
+
+@query("embedding_pca_power", oracle=EMBEDDING_PCA_POWER_ORACLE)
+def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer power iteration on the int8 Gram matrix; 64 rows:
+    (dim, v1, v2, v3) — the iterate after each of three steps,
+    v scaled to max-abs = 1024.
+
+    Scale shape: the ONLY corpus-sized work is the Gram build — a
+    map-side outer-product explode whose partial aggregation is
+    bounded at dim² = 4096 groups per partition (the exchange carries
+    ≤ 4096 rows per map task regardless of N). G is eagerly
+    localCheckpoint'ed; every iteration then runs on 64–4096-row
+    tables with the 64-row iterate broadcast. Overflow headroom:
+    |G| ≤ 127²·N and |w| ≤ 64·|G|·1024, safe in BIGINT to N ≈ 10⁹
+    vectors per partition-group; beyond that production scales G
+    down by a power of two first (same integer semantics)."""
+    vs, _qz, dims, _v_lists = _pca_learn(spark, sf_dir)
+    out = dims
+    for t, vt in enumerate(vs, start=1):
+        out = out.join(vt.withColumnRenamed("vj", f"v{t}"), "dim")
+    return out.orderBy("dim")
+
+
+# ---- embedding_pca_project -------------------------------------------------
+#
+# The APPLY half of the PCA story (the bpe train→compression idiom):
+# project every embedding onto the learned dominant direction and
+# report the top-|projection| outliers — what an embedding-quality
+# pass actually inspects (vectors dominated by the corpus's principal
+# axis are the cluster-collapsed / boilerplate embeddings worth
+# auditing before dedup thresholds are calibrated). Integer-exact end
+# to end: the projection is Σ qv_i · v3_i over the int8 codes and the
+# scaled integer iterate (|proj| ≤ 64·127·1024 — no overflow), shared
+# `_pca_learn`/`_pca_chain_sql` so the pair cannot fork.
+
+_PCA_TOPK = 20
+
+
+EMBEDDING_PCA_PROJECT_ORACLE = f"""
+WITH {{chain}},
+pe AS (
+  SELECT vec_id, u.i AS dim, u.qi AS qi FROM (
+    SELECT vec_id,
+           unnest(list_transform(generate_series(1, len(qv)),
+                                 i -> {{{{'i': i, 'qi': qv[i]}}}})) AS u
+    FROM q)
+),
+proj AS (
+  SELECT pe.vec_id, sum(pe.qi * v{_PCA_ITERS}.vj) AS projection
+  FROM pe JOIN v{_PCA_ITERS} ON v{_PCA_ITERS}.dim = pe.dim
+  GROUP BY pe.vec_id
+),
+ranked AS (
+  SELECT vec_id, projection,
+         row_number() OVER (ORDER BY abs(projection) DESC, vec_id) AS rn
+  FROM proj
+)
+SELECT CAST(rn AS INTEGER) AS out_rank, vec_id,
+       CAST(projection AS BIGINT) AS projection
+FROM ranked WHERE rn <= {_PCA_TOPK}
+ORDER BY out_rank
+""".format(chain=_pca_chain_sql())
+
+
+@query("embedding_pca_project", oracle=EMBEDDING_PCA_PROJECT_ORACLE)
+def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 dominant-direction outliers; (out_rank, vec_id,
+    projection) ordered by |projection| DESC, vec_id tiebreak.
+
+    Scale shape (optimization r14, guide §2.4 — remove shuffles
+    outright): the final iterate is 64 Python ints already on the
+    driver (_pca_learn's power iteration runs there), so the
+    projection is an IN-ROW dot product — 64 codegen'd
+    element_at(qv, i) * literal terms per vector, no posexplode, no
+    broadcast join, no corpus-sized groupBy exchange (the r13 form
+    shuffled N·64 (vec_id, qi, vj) rows through a per-vector sum).
+    BIGINT addition is exact and order-independent, so the in-row
+    left-to-right sum equals the old groupBy sum bit-for-bit (oracle
+    hashes unchanged). The top-k is orderBy+limit (TakeOrdered —
+    per-partition heaps, no global sort materialization), then a
+    20-row window for the rank."""
+
+    _vs, qz, _dims, v_lists = _pca_learn(spark, sf_dir)
+    v_final = v_lists[-1]
+    terms = [
+        F.element_at(F.col("qv"), d + 1) * F.lit(int(v_final[d]))
+        for d in range(_PCA_DIMS)
+    ]
+    proj = qz.select(
+        "vec_id", sum(terms[1:], terms[0]).cast("long").alias("projection")
+    )
+    top = proj.orderBy(F.abs(F.col("projection")).desc(), "vec_id").limit(_PCA_TOPK)
+    w = W.orderBy(F.abs(F.col("projection")).desc(), "vec_id")
+    return top.select(
+        F.row_number().over(w).cast("int").alias("out_rank"),
+        "vec_id",
+        F.col("projection").cast("long").alias("projection"),
+    ).orderBy("out_rank")
+
+
+# ---- knn_ivf_append ---------------------------------------------------------
+
+_APPEND_SEED_MAX = 21  # vec_id < 21 ∧ vec_id % 4 != 3 → exactly 16 old seeds
+
+
+KNN_IVF_APPEND_ORACLE = f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+cent AS (
+  SELECT vec_id AS ccid, v AS cv FROM e
+  WHERE vec_id < {_APPEND_SEED_MAX} AND vec_id % 4 <> 3
+),
+asg AS (
+  SELECT vec_id, ccid AS list_id FROM (
+    SELECT e.vec_id, c.ccid,
+           row_number() OVER (PARTITION BY e.vec_id
+             ORDER BY list_dot_product(e.v, c.cv)
+               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+               c.ccid) AS rn
+    FROM e CROSS JOIN cent c
+  ) WHERE rn = 1
+)
+SELECT list_id,
+       CAST(sum(CASE WHEN vec_id % 4 <> 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_old,
+       CAST(sum(CASE WHEN vec_id % 4 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
+       CAST(CASE WHEN sum(CASE WHEN vec_id % 4 <> 3 THEN 1 ELSE 0 END) = 0
+            THEN NULL
+            ELSE sum(CASE WHEN vec_id % 4 = 3 THEN 1 ELSE 0 END) * 10000
+                 // sum(CASE WHEN vec_id % 4 <> 3 THEN 1 ELSE 0 END) END
+            AS BIGINT) AS growth_bp
+FROM asg
+GROUP BY list_id
+ORDER BY list_id
+"""
+
+
+@query("knn_ivf_append", oracle=KNN_IVF_APPEND_ORACLE)
+def knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental IVF index maintenance; one row per inverted list:
+    (list_id, n_old, n_new, growth_bp).
+
+    The existing index: centroids frozen from the OLD corpus
+    (vec_id % 4 != 3; seeds are the registered knn_ivf deterministic
+    quantizer restricted to old ids). Appending the NEW batch
+    (vec_id % 4 == 3) retrains NOTHING: each new vector broadcasts
+    against the 16-row centroid table and joins its argmax list —
+    `_centroid_frame`, the exact registered assignment helper, so the
+    append and the index cannot fork semantics.
+
+    Scale shape: assignment is map-side only (centroids ≤ 2^16 rows
+    broadcast; one row_number over the per-vector K candidates), and
+    the growth report is a partial-aggregable groupBy over K lists —
+    appending a day of vectors to a 10⁹-vector index costs
+    O(batch · K) comparisons and shuffles K counter rows. The report
+    is the re-balance trigger: growth_bp spread across lists tells
+    the owner when the frozen quantizer has drifted from the data."""
+    e = load_table(spark, sf_dir, "embeddings")
+    cent = e.filter(
+        (F.col("vec_id") < _APPEND_SEED_MAX) & (F.col("vec_id") % 4 != 3)
+    ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+    asg = _centroid_frame(e, cent)
+    return (
+        asg.groupBy(F.col("cid").alias("list_id"))
+        .agg(
+            F.sum(F.when(F.col("vec_id") % 4 != 3, 1).otherwise(0))
+            .cast("long")
+            .alias("n_old"),
+            F.sum(F.when(F.col("vec_id") % 4 == 3, 1).otherwise(0))
+            .cast("long")
+            .alias("n_new"),
+            # explicit zero-old guard: a list seeded only by new
+            # vectors is unreachable under the current seed-self-
+            # assignment tiebreak, but Spark's `div` and DuckDB's `//`
+            # disagree on /0 (NULL vs error) — make the NULL contract
+            # explicit on BOTH engines so a future quantizer change
+            # cannot silently diverge (ADVICE r11).
+            F.expr(
+                "CAST(CASE WHEN sum(CASE WHEN vec_id % 4 != 3 THEN 1 ELSE 0 END) = 0"
+                " THEN NULL"
+                " ELSE sum(CASE WHEN vec_id % 4 = 3 THEN 1 ELSE 0 END) * 10000"
+                " div sum(CASE WHEN vec_id % 4 != 3 THEN 1 ELSE 0 END) END"
+                " AS BIGINT)"
+            ).alias("growth_bp"),
+        )
+        .orderBy("list_id")
+    )
+
+
+# ---- embedding_prefix_recall ------------------------------------------------
+#
+# Matryoshka-style truncated-dimension retrieval audit: score the
+# corpus with only the FIRST 16 of 64 embedding dimensions (the
+# prefix an MRL-trained encoder makes usable at 1/4 the float cost)
+# and report per-query recall@5 against the registered exact
+# full-dimension top-5 (knn_brute, the same grading harness
+# knn_recall_report established for IVF). The prefix leg reuses the
+# brute key's broadcast-queries shape — only the slice differs — so
+# the report grades exactly the tradeoff a retrieval owner would
+# ship: scan cost /4 vs recall lost.
+
+_PREFIX_DIMS = 16
+
+
+EMBEDDING_PREFIX_RECALL_ORACLE = f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+exact AS (
+  SELECT qid, cid FROM (
+    SELECT q.vec_id AS qid, c.vec_id AS cid,
+           row_number() OVER (PARTITION BY q.vec_id
+             ORDER BY round(list_dot_product(q.v, c.v) /
+                 (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 4) DESC,
+               c.vec_id) AS rn
+    FROM e q CROSS JOIN e c
+    WHERE q.vec_id < 5 AND q.vec_id <> c.vec_id
+  ) WHERE rn <= 5
+),
+p AS (SELECT vec_id, v[1:{_PREFIX_DIMS}] AS pv FROM e),
+approx AS (
+  SELECT qid, cid FROM (
+    SELECT q.vec_id AS qid, c.vec_id AS cid,
+           row_number() OVER (PARTITION BY q.vec_id
+             ORDER BY round(list_dot_product(q.pv, c.pv) /
+                 (sqrt(list_dot_product(q.pv, q.pv)) * sqrt(list_dot_product(c.pv, c.pv))), 4) DESC,
+               c.vec_id) AS rn
+    FROM p q CROSS JOIN p c
+    WHERE q.vec_id < 5 AND q.vec_id <> c.vec_id
+  ) WHERE rn <= 5
+),
+base AS (SELECT qid, count(*) AS k FROM exact GROUP BY qid),
+inter AS (
+  SELECT e.qid, count(*) AS n_hits
+  FROM exact e JOIN approx a ON e.qid = a.qid AND e.cid = a.cid
+  GROUP BY e.qid
+)
+SELECT b.qid,
+       CAST(coalesce(i.n_hits, 0) AS BIGINT) AS n_hits,
+       CAST(coalesce(i.n_hits, 0) * 10000 // b.k AS BIGINT) AS recall_bp
+FROM base b LEFT JOIN inter i ON b.qid = i.qid
+ORDER BY b.qid
+"""
+
+
+@query("embedding_prefix_recall", oracle=EMBEDDING_PREFIX_RECALL_ORACLE)
+def embedding_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query truncated-dim recall: (qid, n_hits, recall_bp) for
+    the 5 shared query vectors, recall@5 in basis points.
+
+    Scale shape: both legs broadcast the |Q|-row query block and
+    score map-side; the prefix leg reads 1/4 of the vector bytes (at
+    real scale: a 16-dim column pruned from the store, i.e. a true
+    I/O cut, the production MRL first-pass). The intersection is an
+    equi-join on (qid, cid) over |Q|·5 rows a side."""
+
+    e = load_table(spark, sf_dir, "embeddings")
+    pre = F.slice(F.col("embedding"), 1, _PREFIX_DIMS)
+    q = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), pre.alias("qe")
+    )
+    c = e.transform(scan_spread(spark, sf_dir, "embeddings")).select(
+        F.col("vec_id").alias("cid"), pre.alias("ce")
+    )
+    sims = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("qid") != F.col("cid"))
+        .select(
+            "qid",
+            "cid",
+            F.round(cosine(F.col("qe"), F.col("ce")), 4).alias("cos_sim"),
+        )
+    )
+    w = W.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("cid"))
+    approx = (
+        sims.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 5)
+        .select("qid", "cid")
+    )
+    exact = knn_brute(spark, sf_dir).filter(F.col("rn") <= 5).select("qid", "cid")
+    inter = (
+        exact.join(approx, ["qid", "cid"])
+        .groupBy("qid")
+        .agg(F.count("*").alias("n_hits"))
+    )
+    base = exact.groupBy("qid").agg(F.count("*").alias("k"))
+    return (
+        base.join(inter, "qid", "left")
+        .select(
+            "qid",
+            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
+            F.expr("CAST(coalesce(n_hits, 0) * 10000 div k AS BIGINT)").alias(
+                "recall_bp"
+            ),
+        )
+        .orderBy("qid")
+    )
+
+
+# ---- knn_ivf_rebalance ---------------------------------------------------------
+
+_RB_SEED_MAX = 21  # the frozen quantizer: vec_id < 21 AND vec_id % 4 != 3 -> 16 seeds
+
+
+KNN_IVF_REBALANCE_ORACLE = f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+cent AS (
+  SELECT vec_id AS ccid, v AS cv FROM e
+  WHERE vec_id < {_RB_SEED_MAX} AND vec_id % 4 <> 3
+),
+asg AS (
+  SELECT vec_id, ccid AS cid, v FROM (
+    SELECT e.vec_id, c.ccid, e.v,
+           row_number() OVER (PARTITION BY e.vec_id
+             ORDER BY list_dot_product(e.v, c.cv)
+               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+               c.ccid) AS rn
+    FROM e CROSS JOIN cent c
+  ) WHERE rn = 1
+),
+counts AS (SELECT cid, count(*) AS n_before FROM asg GROUP BY cid),
+hot AS (
+  SELECT cid AS hot_cid, n_before AS hot_n FROM counts
+  ORDER BY n_before DESC, cid LIMIT 1
+),
+members AS (
+  SELECT a.vec_id, a.v FROM asg a JOIN hot h ON a.cid = h.hot_cid
+),
+seeds AS (
+  SELECT vec_id AS scid, v AS sv FROM members ORDER BY vec_id LIMIT 2
+),
+re_asg AS (
+  SELECT vec_id, scid FROM (
+    SELECT m.vec_id, s.scid,
+           row_number() OVER (PARTITION BY m.vec_id
+             ORDER BY list_dot_product(m.v, s.sv)
+               / (sqrt(list_dot_product(m.v, m.v)) * sqrt(list_dot_product(s.sv, s.sv))) DESC,
+               s.scid) AS rn
+    FROM members m CROSS JOIN seeds s
+  ) WHERE rn = 1
+),
+split AS (
+  SELECT scid AS list_id, (SELECT hot_n FROM hot) AS n_before,
+         count(*) AS n_after, 'split' AS status
+  FROM re_asg GROUP BY scid
+),
+kept AS (
+  SELECT cid AS list_id, n_before, n_before AS n_after, 'kept' AS status
+  FROM counts WHERE cid <> (SELECT hot_cid FROM hot)
+)
+SELECT list_id, CAST(n_before AS BIGINT) AS n_before,
+       CAST(n_after AS BIGINT) AS n_after, status
+FROM (SELECT * FROM kept UNION ALL SELECT * FROM split)
+ORDER BY status, list_id
+"""
+
+
+@query("knn_ivf_rebalance", oracle=KNN_IVF_REBALANCE_ORACLE)
+def knn_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hot-list split — the maintenance move knn_ivf_append's growth
+    report triggers: the fullest inverted list (tiebreak: lower cid)
+    splits between its two lowest member vec_ids as sub-seeds; ONLY
+    that list's members reassign (argmax over a broadcast 2-row
+    centroid table, the registered _centroid_frame). One row per
+    resulting list: (list_id, n_before, n_after, status), status in
+    {'kept', 'split'}.
+
+    Scale shape: the full assignment is the registered append path
+    (broadcast 16 centroids, map-side argmax); the split touches
+    O(|hot list|) rows against 2 broadcast rows — rebalancing a
+    10^9-vector index costs one list's reassignment, not a retrain."""
+    e = load_table(spark, sf_dir, "embeddings")
+    cent = e.filter(
+        (F.col("vec_id") < _RB_SEED_MAX) & (F.col("vec_id") % 4 != 3)
+    ).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+    asg = _centroid_frame(e, cent).localCheckpoint(eager=True)
+    counts = asg.groupBy("cid").agg(F.count("*").alias("n_before"))
+    hot = (
+        counts.orderBy(F.col("n_before").desc(), F.col("cid"))
+        .limit(1)
+        .select(F.col("cid").alias("hot_cid"), F.col("n_before").alias("hot_n"))
+    )
+    members = asg.join(F.broadcast(hot), F.col("cid") == F.col("hot_cid")).select(
+        "vec_id", "embedding", "hot_cid", "hot_n"
+    )
+    seeds = (
+        members.orderBy("vec_id")
+        .limit(2)
+        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+    )
+    re_asg = _centroid_frame(members.select("vec_id", "embedding"), seeds)
+    split = (
+        re_asg.groupBy(F.col("cid").alias("list_id"))
+        .agg(F.count("*").cast("long").alias("n_after"))
+        .crossJoin(F.broadcast(hot))
+        .select(
+            "list_id",
+            F.col("hot_n").cast("long").alias("n_before"),
+            "n_after",
+            F.lit("split").alias("status"),
+        )
+    )
+    kept = (
+        counts.join(F.broadcast(hot), F.col("cid") == F.col("hot_cid"), "left_anti")
+        .select(
+            F.col("cid").alias("list_id"),
+            F.col("n_before").cast("long").alias("n_before"),
+            F.col("n_before").cast("long").alias("n_after"),
+            F.lit("kept").alias("status"),
+        )
+    )
+    return kept.unionByName(split).orderBy("status", "list_id")

@@ -18,6 +18,11 @@ Scale notes: in production the source is kafka/files with
 `withWatermark` bounding state; `availableNow` here keeps the fixture
 replay deterministic. State-store sizing = #open windows × #event
 types — both tiny.
+
+The `docs_stream_*` gates replay `documents` through the same sink
+topology and apply a frozen batch model to what arrives: the quality
+perceptron (extensions/quality_model.py), the exact-fingerprint store,
+and the DSIR importance model (extensions/selection.py).
 """
 
 from __future__ import annotations
@@ -29,6 +34,27 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datapipeline_scripts_spark.catalog import load_table, table_path
+from datapipeline_scripts_spark.extensions.dedup import NORM_SQL
+from datapipeline_scripts_spark.extensions.quality_model import (
+    PE_FEATS_SQL,
+    PE_ITERS,
+    PE_SCORE_SQL,
+    pe_score,
+    pe_train_sql,
+    pe_weights,
+    perceptron_features,
+    perceptron_features_of,
+)
+from datapipeline_scripts_spark.extensions.selection import (
+    DSIR_B,
+    DSIR_SHIFT,
+    dsir_ctes_sql,
+    dsir_doc_scores_of,
+    dsir_grams_of,
+    dsir_lambda_of,
+    dsir_resample_tail_sql,
+)
+from datapipeline_scripts_spark.functions.text import fingerprint_md5, md5_48, md5_48_sql, ngram_join, tokens
 from datapipeline_scripts_spark.registry import query
 
 
@@ -845,3 +871,334 @@ def events_stream_join_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+# ---- docs_stream_quality_gate -----------------------------------------------
+#
+# STREAMING model inference — the continuous-crawl deployment shape of
+# the quality gate: the arriving batch (odd doc_ids) flows through a
+# real Structured Streaming replay (availableNow → foreachBatch
+# parquet sink, complete mode — the registered events_stream harness),
+# scored against weights trained batch-side on the HISTORICAL evens
+# and joined in as a broadcast static side. The report is the per-
+# source acceptance of the arriving stream. The batch/stream split
+# mirrors production exactly: the model is fitted offline, frozen,
+# and applied to the live feed; Spark's stream-static join is the
+# mechanism that makes the frozen model visible to every micro-batch.
+
+
+DOCS_STREAM_QUALITY_GATE_ORACLE = f"""
+WITH {PE_FEATS_SQL},
+{pe_train_sql()},
+scored AS (
+  SELECT f.source, {PE_SCORE_SQL} AS margin
+  FROM feats f CROSS JOIN w{PE_ITERS}
+  WHERE f.doc_id % 2 = 1
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_arrived,
+       CAST(sum(CASE WHEN margin > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_accept,
+       CAST(sum(CASE WHEN margin > 0 THEN 1 ELSE 0 END) * 10000 // count(*)
+            AS BIGINT) AS accept_bp
+FROM scored
+GROUP BY source
+ORDER BY source
+"""
+
+
+@query("docs_stream_quality_gate", oracle=DOCS_STREAM_QUALITY_GATE_ORACLE)
+def docs_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream the arriving (odd doc_id) documents through the frozen
+    quality model; one row per source: (source, n_arrived, n_accept,
+    accept_bp).
+
+    Scale shape: the static side is the 1-row weight table
+    (materialized once, broadcast into each micro-batch); the
+    streaming side computes features and margin as codegen'd
+    projections per micro-batch and the complete-mode aggregate
+    carries |sources| counters of state. This is the exact shape a
+    Kafka-fed quality gate runs: no corpus-sized state, no
+    per-batch retrain."""
+    import os
+
+
+    # EAGER train checkpoint (optimization r13, guide §5 compute-once):
+    # pe_weights runs one aggregate job per iteration over `train`;
+    # without the checkpoint each job re-ran the corpus scan + the x3
+    # shingle-distinct feature build (the expensive column). The
+    # checkpointed rows are five longs per train doc. w itself is a
+    # literal 1-row frame (see pe_weights), so no further checkpoint
+    # is needed — jk rides along for the stream-static join key.
+    train = (
+        perceptron_features(spark, sf_dir)
+        .filter(F.col("doc_id") % 2 == 0)
+        .localCheckpoint(eager=True)
+    )
+    w = pe_weights(spark, train).withColumn("jk", F.lit(1))
+
+
+    path = table_path(sf_dir, "documents")
+    raw_schema = spark.read.parquet(path).schema
+    if os.path.isdir(path):
+        stream = spark.readStream.schema(raw_schema).parquet(path)
+    else:
+        stream = (
+            spark.readStream.schema(raw_schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(sf_dir)
+        )
+    # the shared feature expressions work unchanged on a streaming
+    # frame (pure projections — nothing stateful), so the stream key
+    # reuses perceptron_features_of and cannot fork features from
+    # the batch train/eval keys (ADVICE r11).
+    sfeat = perceptron_features_of(
+        stream.filter(F.col("doc_id") % 2 == 1), extra=("source",)
+    ).select("source", "x1", "x2", "x3", F.lit(1).alias("jk"))
+    scored = sfeat.join(F.broadcast(w), "jk").select(
+        "source", pe_score().alias("margin")
+    )
+    agg = (
+        scored.groupBy("source")
+        .agg(
+            F.count("*").cast("long").alias("n_arrived"),
+            F.sum(F.when(F.col("margin") > 0, 1).otherwise(0))
+            .cast("long")
+            .alias("n_accept"),
+        )
+    )
+    out = _replay_to_parquet(spark, agg, mode="complete")
+    return out.select(
+        "source",
+        "n_arrived",
+        "n_accept",
+        F.expr("CAST(n_accept * 10000 div n_arrived AS BIGINT)").alias("accept_bp"),
+    ).orderBy("source")
+
+
+# ---- docs_stream_dedup_gate ---------------------------------------------------
+#
+# STREAMING incremental dedup — the deployment twin of the registered
+# dedup_incremental exactly as docs_stream_quality_gate is the
+# deployment twin of the inference key: the arriving batch
+# (doc_id % 10 >= 7, dedup_incremental's split) flows through a real
+# Structured Streaming replay and probes the HISTORICAL fingerprint
+# store (distinct fps of the % 10 < 7 reference corpus) via a
+# stream-static left join on the 32-byte fp. Together the two
+# streaming gates are the continuous-crawl front door: dedup the
+# feed against the store, quality-score what survives.
+
+
+DOCS_STREAM_DEDUP_GATE_ORACLE = """
+WITH fps AS (
+  SELECT doc_id, source,
+         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
+  FROM documents
+),
+store AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 10 < 7),
+arriving AS (
+  SELECT o.source, s.fp
+  FROM fps o
+  JOIN fps s
+    ON s.doc_id = CASE WHEN o.doc_id % 10 = 7 THEN o.doc_id - 1 ELSE o.doc_id END
+  WHERE o.doc_id % 10 >= 7
+)
+SELECT a.source,
+       CAST(count(*) AS BIGINT) AS n_arrived,
+       CAST(sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_dup_ref,
+       CAST(sum(CASE WHEN s.fp IS NOT NULL THEN 1 ELSE 0 END) * 10000
+            // count(*) AS BIGINT) AS dup_bp
+FROM arriving a LEFT JOIN store s ON a.fp = s.fp
+GROUP BY a.source
+ORDER BY a.source
+"""
+
+
+@query("docs_stream_dedup_gate", oracle=DOCS_STREAM_DEDUP_GATE_ORACLE)
+def docs_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream the arriving documents against the frozen fingerprint
+    store; one row per source: (source, n_arrived, n_dup_ref,
+    dup_bp).
+
+    Scale shape: the static side is the persisted fp store — at
+    continuous-crawl scale it is loaded once per micro-batch planning
+    cycle and joined by fp hash (Spark broadcasts it when small,
+    shuffles the MICRO-BATCH, never the store, when not); per-batch
+    state is |sources| counters in the complete-mode aggregate. The
+    fingerprint projection on the stream is codegen'd per
+    micro-batch."""
+    import os
+
+
+    batch_docs = load_table(spark, sf_dir, "documents")
+    store = (
+        batch_docs.filter(F.col("doc_id") % 10 < 7)
+        .select(fingerprint_md5(F.col("text")).alias("fp"))
+        .distinct()
+        .withColumn("in_ref", F.lit(1))
+        .localCheckpoint(eager=True)
+    )
+    path = table_path(sf_dir, "documents")
+    raw_schema = spark.read.parquet(path).schema
+    if os.path.isdir(path):
+        stream = spark.readStream.schema(raw_schema).parquet(path)
+    else:
+        stream = (
+            spark.readStream.schema(raw_schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(sf_dir)
+        )
+    # the fixtures hold 500 distinct texts, so without refetches the
+    # store probe would never fire (the store-merge lesson): docs with
+    # doc_id % 10 == 7 arrive carrying their predecessor's text — a
+    # % 10 == 6 doc, i.e. guaranteed IN the reference store. The
+    # refetch text rides in via a static lookup joined on doc_id
+    # (stream-static, the same mechanism as the store itself).
+    refetch = (
+        batch_docs.filter(F.col("doc_id") % 10 == 6)
+        .select(
+            (F.col("doc_id") + 1).alias("doc_id"),
+            fingerprint_md5(F.col("text")).alias("refetch_fp"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    arriving = (
+        stream.filter(F.col("doc_id") % 10 >= 7)
+        .select("doc_id", "source", fingerprint_md5(F.col("text")).alias("own_fp"))
+        .join(refetch, "doc_id", "left")
+        .select("source", F.coalesce("refetch_fp", "own_fp").alias("fp"))
+    )
+    probed = arriving.join(store, "fp", "left")
+    agg = probed.groupBy("source").agg(
+        F.count("*").cast("long").alias("n_arrived"),
+        F.sum(F.coalesce(F.col("in_ref"), F.lit(0))).cast("long").alias("n_dup_ref"),
+    )
+    out = _replay_to_parquet(spark, agg, mode="complete")
+    return out.select(
+        "source",
+        "n_arrived",
+        "n_dup_ref",
+        F.expr("CAST(n_dup_ref * 10000 div n_arrived AS BIGINT)").alias("dup_bp"),
+    ).orderBy("source")
+
+
+# ---- docs_stream_dsir_gate -------------------------------------------------------
+
+
+DOCS_STREAM_DSIR_GATE_ORACLE = f"""
+WITH ref AS (SELECT * FROM documents WHERE doc_id % 10 < 7),
+{dsir_ctes_sql(src="ref", p="r_")},
+{dsir_resample_tail_sql(p="r_", doc_src="ref")},
+arriving AS (SELECT * FROM documents WHERE doc_id % 10 >= 7),
+a_tok AS (
+  SELECT doc_id, lang, toks, len(toks) AS n_words
+  FROM (SELECT doc_id, lang, string_split({NORM_SQL}, ' ') AS toks FROM arriving)
+),
+a_grams AS (
+  SELECT doc_id, lang,
+         ({md5_48_sql("concat(toks[pos + 1], ' ', toks[pos + 2])")}) % {DSIR_B} AS b
+  FROM (SELECT doc_id, lang, toks, unnest(range(n_words - 1)) AS pos
+        FROM a_tok WHERE n_words >= 2)
+),
+a_doc_s AS (
+  SELECT doc_id, (sum(l.lam + {DSIR_SHIFT}) * 100) // count(*) AS s_shift
+  FROM a_grams g JOIN r_lam l USING (b)
+  GROUP BY doc_id
+),
+a_scored AS (
+  SELECT a.doc_id, a.lang, coalesce(s.s_shift, {100 * DSIR_SHIFT}) AS s_shift
+  FROM arriving a LEFT JOIN a_doc_s s USING (doc_id)
+)
+SELECT lang, CAST(count(*) AS BIGINT) AS n_arrived,
+       CAST(sum(CASE WHEN s_shift > (SELECT m FROM r_mean_s) THEN 1 ELSE 0 END) AS BIGINT) AS n_accept,
+       CAST(sum(CASE WHEN s_shift > (SELECT m FROM r_mean_s) THEN 1 ELSE 0 END) * 10000
+            // count(*) AS BIGINT) AS accept_bp
+FROM a_scored GROUP BY lang ORDER BY lang
+"""
+
+
+@query("docs_stream_dsir_gate", oracle=DOCS_STREAM_DSIR_GATE_ORACLE)
+def docs_stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The continuous-crawl deployment shape of DSIR selection — the
+    streaming twin of corpus_dsir_resample's scoring half, beside the
+    registered docs_stream_quality_gate / docs_stream_dedup_gate in
+    the crawl front door: the DSIR model is fitted OFFLINE on the
+    reference corpus (doc_id % 10 < 7) and FROZEN (the 1024-row
+    lambda table and the scalar mean threshold), then the arriving
+    batch (doc_id % 10 >= 7) flows through a REAL Structured
+    Streaming replay: per-micro-batch codegen'd bigram explode,
+    stream-static broadcast join against the frozen lambdas, and ONE
+    streaming aggregation (complete mode) holding per-arriving-doc
+    (gram count, lambda sum) state. The accept decision (score above
+    the FROZEN reference mean) and the per-lang rollup read the
+    materialized replay batch-side. One row per lang: (lang,
+    n_arrived, n_accept, accept_bp).
+
+    Scale shape: the model is ~8 KB broadcast; streaming state is
+    |arriving docs| 3-long rows (the per-doc partial sums), the exact
+    shape a Kafka-fed selection gate holds; nothing corpus-sized
+    crosses micro-batch boundaries."""
+    import os
+
+
+    d = load_table(spark, sf_dir, "documents")
+    ref = d.filter(F.col("doc_id") % 10 < 7)
+    lam = dsir_lambda_of(dsir_grams_of(ref)).select("b", "lam").localCheckpoint(
+        eager=True
+    )
+    ref_mean = (
+        dsir_doc_scores_of(ref)
+        .agg(F.expr("sum(s_shift) div count(*)").alias("m"))
+        .localCheckpoint(eager=True)
+    )
+
+    path = table_path(sf_dir, "documents")
+    raw_schema = spark.read.parquet(path).schema
+    if os.path.isdir(path):
+        stream = spark.readStream.schema(raw_schema).parquet(path)
+    else:
+        stream = (
+            spark.readStream.schema(raw_schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(sf_dir)
+        )
+    toks = tokens(F.col("text"))
+    sgrams = (
+        stream.filter(F.col("doc_id") % 10 >= 7)
+        .select("doc_id", "lang", toks.alias("toks"))
+        .filter(F.size("toks") >= 2)
+        .select("doc_id", "lang", F.explode(ngram_join(F.col("toks"), 2)).alias("g"))
+        .select("doc_id", "lang", (md5_48(F.col("g")) % DSIR_B).alias("b"))
+    )
+    per_doc = (
+        sgrams.join(F.broadcast(lam), "b")
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.count("*").alias("n_grams"),
+            F.sum(F.col("lam") + DSIR_SHIFT).alias("lam_sum"),
+        )
+    )
+    scored = _replay_to_parquet(spark, per_doc, mode="complete")
+    # batch-side: docs too short to gram (n_words < 2) never reach the
+    # stream aggregate — re-join the arriving roster so they report
+    # with the neutral score, exactly as the batch twin treats them
+    roster = d.filter(F.col("doc_id") % 10 >= 7).select("doc_id", "lang")
+    s_shift = F.coalesce(
+        F.expr("(lam_sum * 100) div n_grams"), F.lit(100 * DSIR_SHIFT)
+    )
+    out = (
+        roster.join(scored.drop("lang"), "doc_id", "left")
+        .crossJoin(F.broadcast(ref_mean))
+        .select("lang", (s_shift > F.col("m")).cast("int").alias("accept"))
+        .groupBy("lang")
+        .agg(
+            F.count("*").cast("long").alias("n_arrived"),
+            F.sum("accept").cast("long").alias("n_accept"),
+        )
+    )
+    return out.select(
+        "lang",
+        "n_arrived",
+        "n_accept",
+        F.expr("CAST(n_accept * 10000 div n_arrived AS BIGINT)").alias("accept_bp"),
+    ).orderBy("lang")

@@ -9,13 +9,15 @@ this mode; the default row-collect mode stays the exact-repr gate.
 
 The summary ends with the session's generated-code compile count and
 Janino compile time, the number of persistent RDDs the session
-still holds (a builder that never releases its cached or checkpointed
-frames shows up there), and the class-data archive the driver JVM
+still holds after a forced Python and JVM garbage collection (a builder
+that never releases its cached or checkpointed frames shows up there),
+and the class-data archive the driver JVM
 started from, or why it started without one (a machine that lost the
 faster start shows up there)."""
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import time
@@ -26,6 +28,28 @@ from datapipeline_scripts_spark import cds
 from datapipeline_scripts_spark.oracle import agg_hash_check, check_query
 from datapipeline_scripts_spark.registry import all_queries
 from datapipeline_scripts_spark.session import CODEGEN_CACHE_ENTRIES, codegen_stats, get_spark
+
+
+def settled_persistent_rdds(spark, timeout_s: float = 30.0, poll_s: float = 0.5) -> int:
+    """The number of persistent RDDs the session holds once unreferenced
+    frames are gone. The JVM keeps persistent RDDs by weak reference, so
+    the raw count depends on when the Python proxies and the JVM heap
+    were last collected. Collect both until the number of cached RDDs
+    holds for three polls in a row or ``timeout_s`` passes, then count
+    once. The polls read storage info, which refers to no RDD: the map
+    ``getPersistentRDDs()`` returns holds every RDD it lists until py4j
+    releases it, so polling with it kept alive what it counted."""
+    sc = spark.sparkContext
+    deadline = time.monotonic() + timeout_s
+    last, same = -1, 0
+    while same < 2 and time.monotonic() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(poll_s)
+        n = len(sc._jsc.sc().getRDDStorageInfo())
+        same = same + 1 if n == last else 0
+        last = n
+    return sc._jsc.getPersistentRDDs().size()
 
 
 def main() -> int:
@@ -65,7 +89,7 @@ def main() -> int:
         f" (cache holds {CODEGEN_CACHE_ENTRIES})",
         flush=True,
     )
-    print(f"persistent RDDs held: {spark.sparkContext._jsc.getPersistentRDDs().size()}", flush=True)
+    print(f"persistent RDDs held: {settled_persistent_rdds(spark)}", flush=True)
     print(f"cds: {cds.status()}", flush=True)
     return 1 if failures else 0
 

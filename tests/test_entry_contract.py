@@ -6,14 +6,19 @@ round's worth of driver budget, so lock the contract here."""
 from __future__ import annotations
 
 import hashlib
+import importlib
 import importlib.util
 import json
 import os
+import pkgutil
+import random
+import re
 import subprocess
 import sys
 
 import pytest
 
+import datapipeline_scripts_spark
 from datapipeline_scripts_spark.registry import all_queries, query
 
 
@@ -51,6 +56,39 @@ def test_registry_imports_every_package_module():
     assert got["missing"] == []
     assert len(got["keys"]) == 379
     assert hashlib.sha256("\n".join(got["keys"]).encode()).hexdigest() == _KEYSET_SHA256
+
+
+def test_keys_live_in_domain_modules():
+    """A key lives and registers in its domain module: no registered
+    builder is defined in a module named after a round (``_r<digits>``),
+    and no package module keeps a module-level ``STAGED`` table beside
+    the registry (a second way into the catalog)."""
+    round_named = sorted(
+        key for key, spec in all_queries().items() if re.search(r"_r\d+", spec.build.__module__)
+    )
+    assert round_named == []
+    pkg = datapipeline_scripts_spark
+    staged = [
+        mod.name
+        for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+        if "STAGED" in vars(importlib.import_module(mod.name))
+    ]
+    assert staged == []
+
+
+def test_driver_order_ignores_registration_order():
+    """Moving a key to another module changes the registry's insertion
+    order; the order `__spark_entry__` exports must not move with it.
+    Ties in evidence age break by key name, so any registration order
+    gives one list."""
+    mod = _entry_module()
+    specs = all_queries()
+    want = mod._ordered_keys()
+    for seed in range(3):
+        keys = list(specs)
+        random.Random(seed).shuffle(keys)
+        mod.all_queries = lambda keys=keys: {k: specs[k] for k in keys}
+        assert mod._ordered_keys() == want, seed
 
 
 def test_query_without_an_oracle_is_refused():

@@ -839,7 +839,7 @@ def test_workers_route_mixed_payloads():
         png_stdlib,
         tiff_stdlib,
     )
-    from datapipeline_scripts_spark.sources.staged_r8 import _encode_png_gray
+    from datapipeline_scripts_spark.extensions.multimodal import _encode_png_gray
 
     def dhash(row):
         return sum(1 << i for i in range(mm._PHASH_BITS) if row[i] < row[i + 1])

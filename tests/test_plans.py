@@ -949,13 +949,11 @@ def test_r3_join_keys_product_join_budget(spark, sf_dir, key, max_bnlj):
 
 
 def test_r9_media_ingest_keys_prune_and_stay_shuffle_light(spark, sf_dir):
-    """The eight round-9 keys + the staged r10 keys: the parquet scan
+    """The eight round-9 keys + the round-10 keys: the parquet scan
     must read ONLY the columns the worker consumes (doc_id, or
     doc_id+text — never the embedding/meta columns), and the only
     exchange is the explicit spread-the-codec-work repartition
     (RoundRobin), never a key shuffle or a cartesian."""
-    from datapipeline_scripts_spark.sources.staged_r10 import STAGED as R10
-
     keys = {
         "multimodal_real_jpeg": ["doc_id"],
         "multimodal_real_gif": ["doc_id"],
@@ -973,16 +971,22 @@ def test_r9_media_ingest_keys_prune_and_stay_shuffle_light(spark, sf_dir):
         assert schemas and sorted(schemas[0]) == want_cols, (key, schemas)
         assert "CartesianProduct" not in plan, key
         assert "hashpartitioning" not in plan, (key, "unexpected key shuffle")
-    # staged r10: same contract, built from the STAGED dict (the keys
-    # register next round; the plan shape must already be right).
-    # Only the per-row ingest key must be key-shuffle-free;
+    # The round-10 keys: same contract. Only the per-row ingest key must be key-shuffle-free;
     # dedup_passage_winnow shuffles on fp/(doc_a,doc_b) by design and
     # the tfexample composite is a write-then-read (scan shape covered
     # by its r10 proofs) — both still must be cartesian-free.
-    for key, (build, _oracle) in R10.items():
+    r10_keys = (
+        "dedup_passage_winnow",
+        "jsonl_export_roundtrip",
+        "multimodal_resize",
+        "tfexample_dataset_roundtrip",
+        "tfrecord_roundtrip",
+        "webdataset_export_roundtrip",
+    )
+    for key in r10_keys:
         if key == "tfexample_dataset_roundtrip":
             continue
-        df = build(spark, sf_dir)
+        df = get(key).build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, key
         if key == "tfrecord_roundtrip":
@@ -1010,8 +1014,7 @@ def test_knn_pq_shortlist_is_two_level_topk(spark, sf_dir):
 
 
 def test_staged_r11_plan_shapes(spark, sf_dir):
-    """Staged r11 contract (the keys register next round; the plan
-    shape must already be right): every builder cartesian-free; the
+    """The round-11 keys' plan contract: every builder cartesian-free; the
     pure per-row codec keys (federated ingest, audio frames, scene
     cuts, tiff16) additionally key-shuffle-free — one Arrow pass over
     the scan, nothing else. The perceptron is an iterative aggregate
@@ -1019,8 +1022,6 @@ def test_staged_r11_plan_shapes(spark, sf_dir):
     partial aggregation shuffles on no key, so it too must carry no
     hashpartitioning — and no CartesianProduct despite three
     broadcast crossJoins of 1-row weight tables."""
-    from datapipeline_scripts_spark.sources.staged_r11 import STAGED as R11
-
     per_row = {
         "federated_ingest_union",
         "multimodal_audio_frames",
@@ -1063,8 +1064,34 @@ def test_staged_r11_plan_shapes(spark, sf_dir):
         "corpus_pack_offsets": [("doc_id", "n_chars", "source")],
         "text_char_entropy": [("doc_id", "text")],
     }
-    for key, (build, _oracle) in R11.items():
-        df = build(spark, sf_dir)
+    r11_keys = (
+        "arrow_ipc_roundtrip",
+        "corpus_curriculum_order",
+        "corpus_pack_offsets",
+        "corpus_token_budget_mixture",
+        "crawl_frontier_schedule",
+        "crawl_pipeline",
+        "dedup_bloom_incremental",
+        "dedup_survivorship",
+        "embedding_pca_power",
+        "embedding_pca_project",
+        "federated_ingest_union",
+        "knn_recall_report",
+        "multimodal_audio_frames",
+        "multimodal_real_tiff16",
+        "multimodal_scene_cuts",
+        "quality_eval_perceptron",
+        "quality_train_perceptron",
+        "text_bigram_heldout",
+        "text_bpe_compression",
+        "text_bpe_train",
+        "text_char_entropy",
+        "text_html_extract",
+        "web_robots_filter",
+        "web_url_canonical_dedup",
+    )
+    for key in r11_keys:
+        df = get(key).build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, key
         if key in per_row or key == "quality_train_perceptron":

@@ -435,15 +435,15 @@ def _py_bpe_merge(syms: list[str], left: str, right: str) -> list[str]:
     st.sampled_from([("a", "b"), ("b", "a"), ("c", "a"), ("ab", "c")]),
 )
 def test_bpe_apply_merge_matches_python_model(spark, sym_lists, pair):
-    """The shared trainer/apply merge expression (`_bpe_apply_merge`,
-    staged_r11 — imported by the r13 fertility key) against a direct
+    """The shared trainer/apply merge expression (`_bpe_apply_merge`
+    in extensions/textstats.py, also run by the fertility key) against a direct
     scan-left Python model on arbitrary symbol sequences, including
     repeated and overlapping-looking runs (aaab, abab, …). Also pins
     the two invariants the fertility accounting rests on: symbol count
     never increases, and concatenation is preserved."""
     from pyspark.sql import Row
 
-    from datapipeline_scripts_spark.sources.staged_r11 import _bpe_apply_merge
+    from datapipeline_scripts_spark.extensions.textstats import _bpe_apply_merge
 
     left, right = pair
     df = spark.createDataFrame(

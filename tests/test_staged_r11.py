@@ -1,44 +1,67 @@
-"""Oracle proofs for the STAGED round-11 keys (sources/staged_r11.py).
+"""Oracle proofs for the 24 keys registered in round 11.
 
-Round 10's driver window was committed to the keys registered in round
-10 plus stalest-evidence re-proofs, so the round-10-built surface
-stages through this round exactly as r9/r10 keys staged before it —
-held to the registration bar (the driver's own `oracle.compare` hash
-gate, both fixture SFs) without touching the registry."""
+Each key lives and registers in its domain module; this file runs every
+builder against its DuckDB oracle at both fixture SFs (the
+`oracle.compare` hash gate) and pins where each builder is defined."""
 
 from __future__ import annotations
 
 import pytest
 
 from datapipeline_scripts_spark.oracle import compare, duck_connection
-from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.sources.staged_r11 import STAGED
+from datapipeline_scripts_spark.registry import all_queries, get
+
+# key -> the package module that defines and registers its builder
+KEYS = {
+    "arrow_ipc_roundtrip": "sources.format_queries",
+    "corpus_curriculum_order": "extensions.mixture",
+    "corpus_pack_offsets": "extensions.mixture",
+    "corpus_token_budget_mixture": "extensions.mixture",
+    "crawl_frontier_schedule": "extensions.crawl",
+    "crawl_pipeline": "extensions.crawl",
+    "dedup_bloom_incremental": "extensions.dedup",
+    "dedup_survivorship": "extensions.dedup",
+    "embedding_pca_power": "extensions.similarity",
+    "embedding_pca_project": "extensions.similarity",
+    "federated_ingest_union": "sources.format_queries",
+    "knn_recall_report": "extensions.similarity",
+    "multimodal_audio_frames": "extensions.multimodal",
+    "multimodal_real_tiff16": "extensions.multimodal",
+    "multimodal_scene_cuts": "extensions.multimodal",
+    "quality_eval_perceptron": "extensions.quality_model",
+    "quality_train_perceptron": "extensions.quality_model",
+    "text_bigram_heldout": "extensions.textstats",
+    "text_bpe_compression": "extensions.textstats",
+    "text_bpe_train": "extensions.textstats",
+    "text_char_entropy": "extensions.textstats",
+    "text_html_extract": "extensions.textstats",
+    "web_robots_filter": "extensions.crawl",
+    "web_url_canonical_dedup": "extensions.crawl",
+}
 
 
-@pytest.mark.parametrize("key", sorted(STAGED))
+@pytest.mark.parametrize("key", sorted(KEYS))
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_staged_key_matches_oracle(spark, key, sf_dir):
-    build, oracle = STAGED[key]
-    sdf = build(spark, sf_dir)
+    spec = get(key)
+    sdf = spec.build(spark, sf_dir)
     with duck_connection(sf_dir) as con:
-        opdf = con.execute(oracle).fetch_df()
+        opdf = con.execute(spec.oracle).fetch_df()
     report = compare(key, sdf, opdf)
     assert report.ok, str(report)
     assert report.spark_rows > 0
 
 
 def test_r11_keys_registered_with_correct_builders():
-    """Round 11 flipped the staged keys live: every STAGED key must be
-    in the registry, bound to the SAME builder and oracle the proofs
-    above ran (the decorating-the-wrong-function failure mode breaks
-    the driver contract silently), and the catalog is 379 (368 + the
-    eleven round-13 registrations)."""
+    """Every key here is registered with the builder of the same name
+    that its domain module defines (the decorating-the-wrong-function
+    failure mode breaks `__spark_entry__.queries()` silently), and the catalog
+    is 379."""
     specs = all_queries()
     assert len(specs) == 379
-    for key, (fn, oracle) in STAGED.items():
-        assert key in specs, key
-        assert specs[key].build is fn, key
-        assert specs[key].oracle == oracle, key
+    for key, module in KEYS.items():
+        assert specs[key].build.__name__ == key, key
+        assert specs[key].build.__module__ == f"datapipeline_scripts_spark.{module}", key
 
 
 def test_canonical_url_edge_cases(spark):
@@ -48,7 +71,7 @@ def test_canonical_url_edge_cases(spark):
     port suffix."""
     from pyspark.sql import types as T
 
-    from datapipeline_scripts_spark.sources.staged_r11 import canonical_url
+    from datapipeline_scripts_spark.extensions.crawl import canonical_url
 
     cases = [
         ("HTTPS://Host.COM:443/a/b///?utm_source=x", "https://host.com/a/b"),
@@ -130,9 +153,9 @@ def test_bloom_has_no_false_negatives_and_pca_rescale_invariant():
     non-empty; (2) the PCA iterate is rescaled to max-abs EXACTLY
     _PCA_VSCALE after every iteration (the invariant that keeps the
     integer arithmetic in BIGINT range)."""
-    from datapipeline_scripts_spark.sources.staged_r11 import (
+    from datapipeline_scripts_spark.extensions.dedup import DEDUP_BLOOM_INCREMENTAL_ORACLE
+    from datapipeline_scripts_spark.extensions.similarity import (
         _PCA_VSCALE,
-        DEDUP_BLOOM_INCREMENTAL_ORACLE,
         EMBEDDING_PCA_POWER_ORACLE,
     )
 
@@ -153,7 +176,7 @@ def test_crawl_pipeline_stage_fire_checks():
     load-bearing in the hash gate, none is dead weight the compare
     would miss. DuckDB-only (cheap): the Spark side is already
     hash-locked to the unmutated oracle by the staged proofs."""
-    from datapipeline_scripts_spark.sources.staged_r11 import CRAWL_PIPELINE_ORACLE
+    from datapipeline_scripts_spark.extensions.crawl import CRAWL_PIPELINE_ORACLE
 
     mutations = {
         "canonical: keep utm params": (
@@ -196,10 +219,10 @@ def test_bloom_sizing_tracks_data_and_false_positive_band():
     ~= 1.2% at 10 bits/key), and (c) that the bloom leg actually
     FILTERS — a majority of incoming docs are clean misses, which is
     exactly what the saturated sketch could not deliver."""
-    from datapipeline_scripts_spark.sources.staged_r11 import (
+    from datapipeline_scripts_spark.extensions.dedup import (
         _BLOOM_BITS_PER_KEY,
         _BLOOM_M_FLOOR,
-        _BLOOM_NORM,
+        _NORM_SAFE_SQL,
         DEDUP_BLOOM_INCREMENTAL_ORACLE,
     )
 
@@ -213,7 +236,7 @@ def test_bloom_sizing_tracks_data_and_false_positive_band():
     ):
         with duck_connection(sf_dir) as con:
             n = con.execute(
-                f"SELECT count(DISTINCT md5({_BLOOM_NORM})) FROM documents "
+                f"SELECT count(DISTINCT md5({_NORM_SAFE_SQL})) FROM documents "
                 "WHERE doc_id % 2 = 0"
             ).fetchone()[0]
             b = con.execute(DEDUP_BLOOM_INCREMENTAL_ORACLE).fetch_df()
@@ -266,15 +289,15 @@ def test_bloom_null_text_classifies_identically_cross_engine(spark, tmp_path):
         pa.concat_tables([t.cast(schema), extra]), d / "documents.parquet"
     )
 
-    build, oracle = STAGED["dedup_bloom_incremental"]
-    sdf = build(spark, str(d))
+    spec = get("dedup_bloom_incremental")
+    sdf = spec.build(spark, str(d))
     import duckdb
 
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')"
     )
-    opdf = con.execute(oracle).fetch_df()
+    opdf = con.execute(spec.oracle).fetch_df()
     con.close()
     report = compare("dedup_bloom_incremental", sdf, opdf)
     assert report.ok, str(report)

@@ -1,74 +1,88 @@
-"""Oracle proofs for the STAGED round-12 keys (sources/staged_r12.py).
+"""Oracle proofs for the 18 keys registered in round 12.
 
-Round 11's driver window was committed to the keys registered in round
-11 plus stalest-evidence re-proofs, so the round-11-built surface
-stages through this round exactly as r10/r11 keys staged before it —
-held to the registration bar (the driver's own `oracle.compare` hash
-gate, both fixture SFs) without touching the registry."""
+Each key lives and registers in its domain module; this file runs every
+builder against its DuckDB oracle at both fixture SFs (the
+`oracle.compare` hash gate) and pins where each builder is defined."""
 
 from __future__ import annotations
 
 import pytest
 
 from datapipeline_scripts_spark.oracle import compare, duck_connection
-from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.sources.staged_r12 import STAGED
+from datapipeline_scripts_spark.registry import all_queries, get
+
+# key -> the package module that defines and registers its builder
+KEYS = {
+    "corpus_epoch_upsample": "extensions.mixture",
+    "corpus_mixture_temperature": "extensions.mixture",
+    "corpus_seqlen_histogram": "extensions.mixture",
+    "crawl_increment_pipeline": "extensions.crawl",
+    "dedup_embedding_store_incremental": "extensions.dedup",
+    "dedup_minhash_store_incremental": "extensions.dedup",
+    "dedup_store_merge": "extensions.dedup",
+    "docs_stream_dedup_gate": "streaming.stream_jobs",
+    "docs_stream_quality_gate": "streaming.stream_jobs",
+    "embedding_prefix_recall": "extensions.similarity",
+    "knn_ivf_append": "extensions.similarity",
+    "multimodal_image_tiles": "extensions.multimodal",
+    "quality_margin_drift": "extensions.quality_model",
+    "quality_score_calibration": "extensions.quality_model",
+    "quality_score_inference": "extensions.quality_model",
+    "text_chunk_spans": "extensions.textstats",
+    "text_code_detect": "extensions.textstats",
+    "web_host_pagerank": "extensions.crawl",
+}
 
 
-@pytest.mark.parametrize("key", sorted(STAGED))
+@pytest.mark.parametrize("key", sorted(KEYS))
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_staged_key_matches_oracle(spark, key, sf_dir):
-    build, oracle = STAGED[key]
-    sdf = build(spark, sf_dir)
+    spec = get(key)
+    sdf = spec.build(spark, sf_dir)
     with duck_connection(sf_dir) as con:
-        opdf = con.execute(oracle).fetch_df()
+        opdf = con.execute(spec.oracle).fetch_df()
     report = compare(key, sdf, opdf)
     assert report.ok, str(report)
     assert report.spark_rows > 0
 
 
 def test_r12_keys_registered_with_correct_builders():
-    """Round 12 flipped the staged keys live: every STAGED key must be
-    in the registry, bound to the SAME builder and oracle the proofs
-    above ran (the decorating-the-wrong-function failure mode breaks
-    the driver contract silently), and the catalog is 379 (368 + the
-    eleven round-13 registrations)."""
+    """Every key here is registered with the builder of the same name
+    that its domain module defines (the decorating-the-wrong-function
+    failure mode breaks `__spark_entry__.queries()` silently), and the catalog
+    is 379."""
     specs = all_queries()
     assert len(specs) == 379
-    for key, (fn, oracle) in STAGED.items():
-        assert key in specs, key
-        assert specs[key].build is fn, key
-        assert specs[key].oracle == oracle, key
+    for key, module in KEYS.items():
+        assert specs[key].build.__name__ == key, key
+        assert specs[key].build.__module__ == f"datapipeline_scripts_spark.{module}", key
 
 
 def test_inference_weights_match_registered_eval_trajectory(spark, sf_dir):
-    """The shared-chain guarantee: `_pe_weights` over the even split
+    """The shared-chain guarantee: `pe_weights` over the even split
     must land on the same final weight vector the REGISTERED
-    quality_eval_perceptron trains (same _PE_ITERS, same features,
+    quality_eval_perceptron trains (same PE_ITERS, same features,
     same update rule) — if either side drifts, the inference report
     is grading a different model than the eval key published."""
     from pyspark.sql import functions as F
 
-    from datapipeline_scripts_spark.sources.staged_r11 import (
-        _perceptron_features,
-    )
-    from datapipeline_scripts_spark.sources.staged_r12 import _pe_weights
+    from datapipeline_scripts_spark.extensions.quality_model import pe_weights, perceptron_features
 
-    feats = _perceptron_features(spark, sf_dir)
+    feats = perceptron_features(spark, sf_dir)
     train = feats.filter(F.col("doc_id") % 2 == 0)
-    w = _pe_weights(spark, train).collect()[0].asDict()
+    w = pe_weights(spark, train).collect()[0].asDict()
 
     # the registered eval key's oracle-proven weights, recomputed via
     # its own DuckDB train CTEs
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        _PE_FEATS_SQL,
-        _PE_ITERS,
-        _pe_train_sql,
+    from datapipeline_scripts_spark.extensions.quality_model import (
+        PE_FEATS_SQL,
+        PE_ITERS,
+        pe_train_sql,
     )
 
     with duck_connection(sf_dir) as con:
         got = con.execute(
-            f"WITH {_PE_FEATS_SQL}, {_pe_train_sql()} SELECT * FROM w{_PE_ITERS}"
+            f"WITH {PE_FEATS_SQL}, {pe_train_sql()} SELECT * FROM w{PE_ITERS}"
         ).fetch_df()
     duck_w = {k: int(got[k][0]) for k in ("w0", "w1", "w2", "w3")}
     assert {k: int(v) for k, v in w.items()} == duck_w
@@ -79,7 +93,7 @@ def test_calibration_monotone_and_covers_both_classes():
     the lowest bin is (near-)pure negative, the highest (near-)pure
     positive, and pos_bp is non-decreasing across bins — the margin
     orders the held-out labels. DuckDB-side (both SFs), cheap."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
+    from datapipeline_scripts_spark.extensions.quality_model import (
         QUALITY_SCORE_CALIBRATION_ORACLE,
     )
 
@@ -102,10 +116,7 @@ def test_store_merge_novelty_accounting():
     is first-seen exactly once)."""
     import duckdb
 
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        DEDUP_STORE_MERGE_ORACLE,
-        _STORE_NORM,
-    )
+    from datapipeline_scripts_spark.extensions.dedup import DEDUP_STORE_MERGE_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -132,9 +143,7 @@ def test_code_detect_labels_exactly_the_synthetic_class():
     """The injected code bodies (doc_id % 5 == 0) must all classify
     as code and the untouched prose must all classify as prose — the
     detector separates the classes with margin at the fixture scale."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        TEXT_CODE_DETECT_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.textstats import TEXT_CODE_DETECT_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -152,9 +161,7 @@ def test_ivf_append_covers_all_lists_and_balances():
     """Every one of the 16 frozen lists must receive its own centroid
     (n_old >= 1 — a centroid is its own argmax) and the full old+new
     populations must be conserved across lists."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        KNN_IVF_APPEND_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.similarity import KNN_IVF_APPEND_ORACLE
 
     for sf_dir, n in (("/root/testdata/sf0.001", 500), ("/root/testdata/sf0.01", 500)):
         with duck_connection(sf_dir) as con:
@@ -170,16 +177,13 @@ def test_ivf_append_covers_all_lists_and_balances():
 
 
 def test_staged_r12_plan_shapes(spark, sf_dir):
-    """Staged r12 contract (keys register next round; the plan shape
-    must already be right): every builder cartesian-free; the pure
+    """The round-12 keys' plan contract: every builder cartesian-free; the pure
     per-row detector key additionally key-shuffle-free; exact per-scan
     schema pinning (the r11 multiset discipline). Keys whose corpus
     scan hides behind an eager localCheckpoint (the perceptron
     precedent: both quality keys, the minhash signature store, the
     fingerprint store) pin the scans that REMAIN in the final plan."""
     from datapipeline_scripts_spark.plans.audit import read_schemas
-    from datapipeline_scripts_spark.sources.staged_r12 import STAGED as R12
-
     want_scans = {
         # train + score legs read the eager feature checkpoint
         "quality_score_inference": [],
@@ -233,8 +237,8 @@ def test_staged_r12_plan_shapes(spark, sf_dir):
             ("doc_id", "source"),  # totals leg (tiny agg, re-reads 2 cols)
         ],
     }
-    for key, (build, _oracle) in R12.items():
-        df = build(spark, sf_dir)
+    for key in KEYS:
+        df = get(key).build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, key
         if key in ("text_code_detect", "multimodal_image_tiles", "text_chunk_spans"):
@@ -278,13 +282,13 @@ def test_mstore_no_signature_verdict_surfaces_loudly(spark, tmp_path):
     )
     pq.write_table(pa.concat_tables([t.cast(schema), extra]), d / "documents.parquet")
 
-    build, oracle = STAGED["dedup_minhash_store_incremental"]
-    sdf = build(spark, str(d))
+    spec = get("dedup_minhash_store_incremental")
+    sdf = spec.build(spark, str(d))
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')"
     )
-    opdf = con.execute(oracle).fetch_df()
+    opdf = con.execute(spec.oracle).fetch_df()
     con.close()
     report = compare("dedup_minhash_store_incremental", sdf, opdf)
     assert report.ok, str(report)
@@ -301,9 +305,7 @@ def test_mstore_probe_agrees_with_registered_minhash_on_cross_split_pairs():
     import duckdb
 
     from datapipeline_scripts_spark.extensions.dedup import _minhash_oracle
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        DEDUP_MINHASH_STORE_INCREMENTAL_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.dedup import DEDUP_MINHASH_STORE_INCREMENTAL_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         con = duckdb.connect()
@@ -328,9 +330,7 @@ def test_prefix_recall_is_lossy_but_informative():
     fixtures: recall strictly below perfect for at least one query
     (16 of 64 uniform-random dims lose information) but nonzero
     overall (the prefix is not noise). DuckDB-side, both SFs."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        EMBEDDING_PREFIX_RECALL_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.similarity import EMBEDDING_PREFIX_RECALL_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -346,9 +346,7 @@ def test_margin_drift_shares_account_to_totals():
     is the exact |share difference|, and the bin scheme matches the
     calibration key's (same width, same clamp), pinned by comparing
     occupied-bin sets on the odd/even-agnostic full population."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        QUALITY_MARGIN_DRIFT_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.quality_model import QUALITY_MARGIN_DRIFT_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -368,26 +366,18 @@ def test_stream_gate_agrees_with_batch_inference_on_odds(spark, sf_dir):
     semantics."""
     from pyspark.sql import functions as F
 
-    from datapipeline_scripts_spark.sources.staged_r11 import (
-        _perceptron_features,
-    )
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        STAGED as R12,
-        _pe_score,
-        _pe_weights,
-    )
-
+    from datapipeline_scripts_spark.extensions.quality_model import pe_score, pe_weights, perceptron_features
     stream_rows = {
         r["source"]: (r["n_arrived"], r["n_accept"])
-        for r in R12["docs_stream_quality_gate"][0](spark, sf_dir).collect()
+        for r in get("docs_stream_quality_gate").build(spark, sf_dir).collect()
     }
-    feats = _perceptron_features(spark, sf_dir, extra=("source",))
+    feats = perceptron_features(spark, sf_dir, extra=("source",))
     train = feats.filter(F.col("doc_id") % 2 == 0).drop("source")
-    w = _pe_weights(spark, train)
+    w = pe_weights(spark, train)
     batch = (
         feats.filter(F.col("doc_id") % 2 == 1)
         .crossJoin(F.broadcast(w))
-        .select("source", _pe_score().alias("m"))
+        .select("source", pe_score().alias("m"))
         .groupBy("source")
         .agg(
             F.count("*").alias("n"),
@@ -402,9 +392,7 @@ def test_stream_gate_agrees_with_batch_inference_on_odds(spark, sf_dir):
 def test_image_tiles_shape_invariants():
     """Every selected doc yields the full 4×2 tile grid; per-tile
     min ≤ max and the sum sits inside [16·min, 16·max]."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        MULTIMODAL_IMAGE_TILES_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.multimodal import MULTIMODAL_IMAGE_TILES_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -449,10 +437,7 @@ def test_host_pagerank_conserves_mass_and_ranks_all_hosts():
     loses < |V| + 2 micro-units to truncation); authority actually
     varies (the graph is not regular)."""
     from datapipeline_scripts_spark.extensions.graph import _SCALE
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        _HOST_N,
-        WEB_HOST_PAGERANK_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.crawl import _HOST_N, WEB_HOST_PAGERANK_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -468,7 +453,7 @@ def test_epoch_upsample_multiplies_exactly():
     """n_samples must equal factor × n_docs per source, factors span
     the configured band, and shares sum to ~10000 (within per-source
     truncation)."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
+    from datapipeline_scripts_spark.extensions.mixture import (
         _UPSAMPLE_MAX_EXTRA,
         CORPUS_EPOCH_UPSAMPLE_ORACLE,
     )
@@ -488,11 +473,9 @@ def test_r12_stage_fire_checks():
     assert the report CHANGES — every stage is load-bearing in the
     hash gate. DuckDB-only (cheap): the Spark sides are already
     hash-locked to the unmutated oracles by the staged proofs."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        DEDUP_STORE_MERGE_ORACLE,
-        QUALITY_SCORE_INFERENCE_ORACLE,
-        WEB_HOST_PAGERANK_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.crawl import WEB_HOST_PAGERANK_ORACLE
+    from datapipeline_scripts_spark.extensions.dedup import DEDUP_STORE_MERGE_ORACLE
+    from datapipeline_scripts_spark.extensions.quality_model import QUALITY_SCORE_INFERENCE_ORACLE
 
     drills = {
         "inference: train split flipped": (
@@ -555,7 +538,7 @@ def test_chunk_spans_cover_every_token_exactly():
     one is_last chunk; chunk starts advance by exactly the stride;
     the last chunk ends at the token count (full coverage, no token
     beyond any chunk); every chunk holds 1..window tokens."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
+    from datapipeline_scripts_spark.extensions.textstats import (
         _CHUNK_STRIDE,
         _CHUNK_WINDOW,
         TEXT_CHUNK_SPANS_ORACLE,
@@ -583,11 +566,9 @@ def test_stream_dedup_gate_agrees_with_batch_probe(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from datapipeline_scripts_spark.functions.text import fingerprint_md5
-    from datapipeline_scripts_spark.sources.staged_r12 import STAGED as R12
-
     stream_rows = {
         r["source"]: (r["n_arrived"], r["n_dup_ref"])
-        for r in R12["docs_stream_dedup_gate"][0](spark, sf_dir).collect()
+        for r in get("docs_stream_dedup_gate").build(spark, sf_dir).collect()
     }
     assert sum(v[1] for v in stream_rows.values()) > 0, "probe never fired"
 
@@ -623,9 +604,7 @@ def test_increment_funnel_conserves_and_every_stage_fires():
     four verdicts are disjoint by precedence and sum to n_arrived)
     and every stage must actually fire at fixture scale — a funnel
     with a dead stage is grading composition the gate cannot see."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        CRAWL_INCREMENT_PIPELINE_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.crawl import CRAWL_INCREMENT_PIPELINE_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -642,9 +621,7 @@ def test_increment_stage_fire_drills():
     """Per-stage tamper drills for the increment flagship (the
     crawl/pretraining discipline): mutate one stage at a time, the
     funnel must change."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        CRAWL_INCREMENT_PIPELINE_ORACLE as O,
-    )
+    from datapipeline_scripts_spark.extensions.crawl import CRAWL_INCREMENT_PIPELINE_ORACLE as O
 
     drills = {
         "refetch mapping disabled": (
@@ -674,8 +651,7 @@ def test_embedding_store_probe_matches_registered_pairs():
     fires at all."""
     import duckdb
 
-    from datapipeline_scripts_spark.registry import get
-    from datapipeline_scripts_spark.sources.staged_r12 import (
+    from datapipeline_scripts_spark.extensions.dedup import (
         DEDUP_EMBEDDING_STORE_INCREMENTAL_ORACLE,
     )
 
@@ -703,9 +679,7 @@ def test_seqlen_histogram_accounting():
     """Shares sum to ~10000 within per-bucket truncation; tokens and
     docs are conserved against the corpus; padding waste is a valid
     basis-point fraction everywhere."""
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        CORPUS_SEQLEN_HISTOGRAM_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.mixture import CORPUS_SEQLEN_HISTOGRAM_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -729,9 +703,7 @@ def test_temperature_mixture_flattens_in_the_right_direction():
     correctly-rounded IEEE sqrt."""
     import math
 
-    from datapipeline_scripts_spark.sources.staged_r12 import (
-        CORPUS_MIXTURE_TEMPERATURE_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.mixture import CORPUS_MIXTURE_TEMPERATURE_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:

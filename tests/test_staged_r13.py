@@ -1,44 +1,54 @@
-"""Oracle proofs for the round-13 keys (sources/staged_r13.py).
+"""Oracle proofs for the 11 keys registered in round 13.
 
-Built and staged during round 12 (held to the registration bar — the
-driver's own `oracle.compare` hash gate, both fixture SFs — without
-touching the registry), then flipped live in round 13: the STAGED
-dict stays authoritative, and the registration test below pins that
-the registry carries exactly these (builder, oracle) pairs."""
+Each key lives and registers in its domain module; this file runs every
+builder against its DuckDB oracle at both fixture SFs (the
+`oracle.compare` hash gate) and pins where each builder is defined."""
 
 from __future__ import annotations
 
 import pytest
 
 from datapipeline_scripts_spark.oracle import compare, duck_connection
-from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.sources.staged_r13 import STAGED
+from datapipeline_scripts_spark.registry import all_queries, get
+
+# key -> the package module that defines and registers its builder
+KEYS = {
+    "corpus_dsir_resample": "extensions.selection",
+    "corpus_dsir_weights": "extensions.selection",
+    "corpus_selection_pipeline": "extensions.selection",
+    "dedup_minhash_band_tuning": "extensions.dedup",
+    "dedup_substring_excise": "extensions.dedup",
+    "dedup_substring_families": "extensions.dedup",
+    "dedup_substring_spans": "extensions.dedup",
+    "docs_stream_dsir_gate": "streaming.stream_jobs",
+    "knn_ivf_rebalance": "extensions.similarity",
+    "quality_dsir_agreement": "extensions.quality_model",
+    "text_bpe_fertility": "extensions.textstats",
+}
 
 
-@pytest.mark.parametrize("key", sorted(STAGED))
+@pytest.mark.parametrize("key", sorted(KEYS))
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_staged_key_matches_oracle(spark, key, sf_dir):
-    build, oracle = STAGED[key]
-    sdf = build(spark, sf_dir)
+    spec = get(key)
+    sdf = spec.build(spark, sf_dir)
     with duck_connection(sf_dir) as con:
-        opdf = con.execute(oracle).fetch_df()
+        opdf = con.execute(spec.oracle).fetch_df()
     report = compare(key, sdf, opdf)
     assert report.ok, str(report)
     assert report.spark_rows > 0
 
 
 def test_r13_keys_registered_with_correct_builders():
-    """Round 13 flipped the staged keys live: every STAGED key must be
-    in the registry, bound to the SAME builder and oracle the proofs
-    above ran (the decorating-the-wrong-function failure mode breaks
-    the driver contract silently), and the catalog is 379 (368 + the
-    eleven round-13 registrations)."""
+    """Every key here is registered with the builder of the same name
+    that its domain module defines (the decorating-the-wrong-function
+    failure mode breaks `__spark_entry__.queries()` silently), and the catalog
+    is 379."""
     specs = all_queries()
     assert len(specs) == 379
-    for key, (fn, oracle) in STAGED.items():
-        assert key in specs, key
-        assert specs[key].build is fn, key
-        assert specs[key].oracle == oracle, key
+    for key, module in KEYS.items():
+        assert specs[key].build.__name__ == key, key
+        assert specs[key].build.__module__ == f"datapipeline_scripts_spark.{module}", key
 
 
 def test_sel_fused_toks_identities(spark):
@@ -52,10 +62,8 @@ def test_sel_fused_toks_identities(spark):
 
     from datapipeline_scripts_spark.catalog import load_table
     from datapipeline_scripts_spark.functions.text import tokens
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        _sel_fused_toks,
-        _span_bodies,
-    )
+    from datapipeline_scripts_spark.extensions.dedup import _span_bodies
+    from datapipeline_scripts_spark.extensions.selection import _sel_fused_toks
 
     sf_dir = "/root/testdata/sf0.001"
     fused = _sel_fused_toks(spark, sf_dir)
@@ -93,10 +101,7 @@ def test_substring_spans_both_classes_fire():
     covering most of the 16-token injected prefix; the natural class —
     the generator's planted near-duplicates must surface as pairs far
     longer than any injection."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        _SS_INJ,
-        DEDUP_SUBSTRING_SPANS_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.dedup import SS_INJ, DEDUP_SUBSTRING_SPANS_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -117,13 +122,13 @@ def test_substring_spans_both_classes_fire():
         by_b = d.groupby("doc_b").max_span_tokens.max()
         fired = {i for i in inj_ids if i in by_b.index and by_b[i] >= 10}
         assert fired == inj_ids, (sf_dir, inj_ids - fired)
-        full = sum(1 for i in inj_ids if by_b[i] >= _SS_INJ)
+        full = sum(1 for i in inj_ids if by_b[i] >= SS_INJ)
         assert full > len(inj_ids) // 2, (sf_dir, full, len(inj_ids))
         # the natural class: planted near-duplicates yield spans far
         # longer than any injection
         nat = d[~d.doc_b.isin(inj_ids)]
         assert len(nat) > 0, sf_dir
-        assert d.max_span_tokens.max() > 2 * _SS_INJ, (
+        assert d.max_span_tokens.max() > 2 * SS_INJ, (
             sf_dir,
             "planted near-duplicates should yield long natural spans",
         )
@@ -133,9 +138,7 @@ def test_substring_excise_accounting():
     """Every doc reports; duplicated positions never exceed the doc;
     both classes (clean docs, excised docs) fire; keep_bp is exact
     integer accounting of the other two columns."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        DEDUP_SUBSTRING_EXCISE_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.dedup import DEDUP_SUBSTRING_EXCISE_ORACLE
 
     for sf_dir, n in (("/root/testdata/sf0.001", 500), ("/root/testdata/sf0.01", 500)):
         with duck_connection(sf_dir) as con:
@@ -149,7 +152,7 @@ def test_substring_excise_accounting():
 
 
 def test_excise_interval_union_matches_explode_distinct(spark):
-    """_excise_of computes dup_tokens as an interval-union sum over
+    """excise_of computes dup_tokens as an interval-union sum over
     pos-sorted occurrences (optimization r14) instead of
     explode(sequence)->distinct->count. Pin the equivalence on a
     synthetic frame exercising every regime: touching intervals
@@ -159,7 +162,7 @@ def test_excise_interval_union_matches_explode_distinct(spark):
     single-occurrence doc."""
     from pyspark.sql import functions as F
 
-    from datapipeline_scripts_spark.sources.staged_r13 import _SS_K, _excise_of
+    from datapipeline_scripts_spark.extensions.dedup import _SS_K, excise_of
 
     occ = [
         # doc 1: overlapping + touching + disjoint: 0..7, 3..10, 11..18, 40..47
@@ -177,7 +180,7 @@ def test_excise_interval_union_matches_explode_distinct(spark):
     )
     got = {
         r["doc_id"]: r["dup_tokens"]
-        for r in _excise_of(ntok, dup).select("doc_id", "dup_tokens").collect()
+        for r in excise_of(ntok, dup).select("doc_id", "dup_tokens").collect()
     }
     # reference: the old explode->distinct->count construction
     ref_rows = (
@@ -200,9 +203,7 @@ def test_dsir_lambda_not_degenerate():
     model collapses to lam in {-1, 0} and the key grades dead
     machinery. Pin the signal: >= 3 distinct lambda values and both
     signs present at both SFs."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        CORPUS_DSIR_WEIGHTS_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.selection import CORPUS_DSIR_WEIGHTS_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -220,14 +221,14 @@ def test_dsir_resample_provable_uplift():
     is the provable-uplift idiom (corpus_mixture_temperature
     precedent): if a future edit breaks the weighting direction, the
     mapping, or the draw, this trips before any oracle does."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        _dsir_ctes_sql,
-        _dsir_resample_tail_sql,
+    from datapipeline_scripts_spark.extensions.selection import (
+        dsir_ctes_sql,
+        dsir_resample_tail_sql,
     )
 
     uplift_sql = f"""
-WITH {_dsir_ctes_sql()},
-{_dsir_resample_tail_sql()},
+WITH {dsir_ctes_sql()},
+{dsir_resample_tail_sql()},
 tgt AS (SELECT b, count(*) AS c FROM grams WHERE is_t = 1 GROUP BY b),
 rawd AS (SELECT b, count(*) AS c FROM grams GROUP BY b),
 doc_copies AS (
@@ -263,9 +264,7 @@ def test_dsir_resample_upweights_target_lang():
     """Direction check on the report itself: en docs draw more copies
     per doc than every other lang (the target-matching behavior the
     uplift test proves distributionally)."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        CORPUS_DSIR_RESAMPLE_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.selection import CORPUS_DSIR_RESAMPLE_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -285,9 +284,7 @@ def test_band_tuning_nesting_monotonicity():
     non-decreasing in band count, precision non-increasing, and the
     8-band row's recall_bp exactly 10000 (it IS the reference set);
     nothing may be NULL at fixture scale."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        DEDUP_MINHASH_BAND_TUNING_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.dedup import DEDUP_MINHASH_BAND_TUNING_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -317,7 +314,7 @@ def test_band_tuning_single_join_matches_per_config(spark):
     candidates those configs report n_candidates=0, n_verified=NULL."""
     from pyspark.sql import functions as F
 
-    from datapipeline_scripts_spark.sources.staged_r13 import (
+    from datapipeline_scripts_spark.extensions.dedup import (
         _BT_CONFIGS,
         _BT_MIN_MATCH,
         _band_tuning_report_of,
@@ -443,9 +440,7 @@ def test_ivf_rebalance_conservation_and_split():
     """15 kept lists + 2 split halves; the halves partition the hot
     list exactly; kept lists are untouched; the split actually
     improves balance (each half strictly smaller than the hot list)."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        KNN_IVF_REBALANCE_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.similarity import KNN_IVF_REBALANCE_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -472,9 +467,7 @@ def test_dsir_agreement_all_cells_fire():
     that the margin column behaves (accepted cells carry positive
     summed margins, rejected negative) so a regression in either
     chain still trips."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        QUALITY_DSIR_AGREEMENT_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.quality_model import QUALITY_DSIR_AGREEMENT_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -488,15 +481,12 @@ def test_dsir_agreement_all_cells_fire():
 
 
 def test_staged_r13_plan_shapes(spark, sf_dir):
-    """Staged r13 contract (keys register next round; the plan shape
-    must already be right): every builder cartesian-free; exact
+    """The round-13 keys' plan contract: every builder cartesian-free; exact
     per-scan schema pinning (the r11/r12 multiset discipline). Keys
     whose corpus scan hides behind an eager localCheckpoint (the
     gram table, the DSIR bucket model, the signature table, the IVF
     assignment) pin the scans that REMAIN in the final plan."""
     from datapipeline_scripts_spark.plans.audit import read_schemas
-    from datapipeline_scripts_spark.sources.staged_r13 import STAGED as R13
-
     want_scans = {
         # the gram checkpoint hides every corpus scan
         "dedup_substring_spans": [],
@@ -536,8 +526,8 @@ def test_staged_r13_plan_shapes(spark, sf_dir):
         # is the one remaining corpus scan
         "text_bpe_fertility": [("source", "text")],
     }
-    for key, (build, _oracle) in R13.items():
-        df = build(spark, sf_dir)
+    for key in KEYS:
+        df = get(key).build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, key
         schemas = read_schemas(df)
@@ -552,7 +542,7 @@ def test_selection_pipeline_funnel_accounting():
     threshold is live: re-running the oracle with the gate at 0 bp
     (nothing dropped) must change the report (the per-stage tamper
     drill)."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
+    from datapipeline_scripts_spark.extensions.selection import (
         _SEL_KEEP_BP,
         CORPUS_SELECTION_PIPELINE_ORACLE,
     )
@@ -584,24 +574,23 @@ def test_selection_pipeline_fits_model_on_survivors():
     on the SURVIVORS, not the raw corpus — fitting on raw (the
     tempting shortcut) must produce a DIFFERENT report at both SFs,
     or the dedup-first ordering claim is untested."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
+    from datapipeline_scripts_spark.extensions.dedup import excise_ctes_sql, span_ctes_sql
+    from datapipeline_scripts_spark.extensions.selection import (
         _SEL_KEEP_BP,
-        _dsir_ctes_sql,
-        _dsir_resample_tail_sql,
-        _excise_ctes_sql,
-        _span_ctes_sql,
+        dsir_ctes_sql,
+        dsir_resample_tail_sql,
     )
 
     raw_fit = f"""
-WITH {_span_ctes_sql()},
-{_excise_ctes_sql()},
+WITH {span_ctes_sql()},
+{excise_ctes_sql()},
 survivors AS (
   SELECT d.doc_id, d.lang, d.source, d.text, d.n_chars
   FROM documents d JOIN excise e USING (doc_id)
   WHERE e.keep_bp >= {_SEL_KEEP_BP}
 ),
-{_dsir_ctes_sql(src="documents", p="d_")},
-{_dsir_resample_tail_sql(p="d_", doc_src="survivors")},
+{dsir_ctes_sql(src="documents", p="d_")},
+{dsir_resample_tail_sql(p="d_", doc_src="survivors")},
 rep AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
          CAST(sum(CASE WHEN n_copies > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_drawn,
@@ -618,7 +607,7 @@ SELECT a.lang, a.n_arrived,
 FROM arrived a LEFT JOIN rep r USING (lang)
 ORDER BY a.lang
 """
-    from datapipeline_scripts_spark.sources.staged_r13 import (
+    from datapipeline_scripts_spark.extensions.selection import (
         CORPUS_SELECTION_PIPELINE_ORACLE as REAL,
     )
 
@@ -633,7 +622,7 @@ def test_substring_families_consistent_with_spans():
     """The family rollup must account for exactly the span report's
     rows: per-canonical n_spans/dup_grams sum to the pair report's,
     and every family has at least one repeater."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
+    from datapipeline_scripts_spark.extensions.dedup import (
         DEDUP_SUBSTRING_FAMILIES_ORACLE,
         DEDUP_SUBSTRING_SPANS_ORACLE,
     )
@@ -656,9 +645,7 @@ def test_stream_dsir_gate_mix_not_degenerate():
     splits the arriving distribution), and the arriving roster is
     conserved — including docs too short to gram (they score neutral,
     never vanish)."""
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        DOCS_STREAM_DSIR_GATE_ORACLE,
-    )
+    from datapipeline_scripts_spark.streaming.stream_jobs import DOCS_STREAM_DSIR_GATE_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:
@@ -678,12 +665,8 @@ def test_bpe_fertility_consistent_with_corpus_compression():
     text_bpe_compression totals exactly (same merges, same apply
     expression — factored sharing, proven here), and the tokenizer
     must actually compress every source (symbols < chars)."""
-    from datapipeline_scripts_spark.sources.staged_r11 import (
-        TEXT_BPE_COMPRESSION_ORACLE,
-    )
-    from datapipeline_scripts_spark.sources.staged_r13 import (
-        TEXT_BPE_FERTILITY_ORACLE,
-    )
+    from datapipeline_scripts_spark.extensions.textstats import TEXT_BPE_COMPRESSION_ORACLE
+    from datapipeline_scripts_spark.extensions.textstats import TEXT_BPE_FERTILITY_ORACLE
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         with duck_connection(sf_dir) as con:

@@ -1,40 +1,45 @@
-"""Oracle proofs for the round-8 keys (sources/staged_r8.py).
+"""Oracle proofs for the 5 keys registered in round 8.
 
-Staged through the r6/r7 catalog freeze, registered in round 8 after
-CORRECTNESS_r07 closed the gate 306/306 (VERDICT r7 item 1). The
-oracle proofs predate registration: the same `oracle.compare` hash
-gate the driver uses, at both fixture SFs."""
+Each key lives and registers in its domain module; this file runs every
+builder against its DuckDB oracle at both fixture SFs (the
+`oracle.compare` hash gate) and pins where each builder is defined."""
 
 from __future__ import annotations
 
 import pytest
 
 from datapipeline_scripts_spark.oracle import compare, duck_connection
-from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.sources.staged_r8 import STAGED
+from datapipeline_scripts_spark.registry import all_queries, get
+
+# key -> the package module that defines and registers its builder
+KEYS = {
+    "avro_logical_roundtrip": "sources.format_queries",
+    "avro_roundtrip": "sources.format_queries",
+    "jdbc_roundtrip": "sources.format_queries",
+    "multimodal_real_png": "extensions.multimodal",
+    "protobuf_roundtrip": "sources.format_queries",
+}
 
 
-@pytest.mark.parametrize("key", sorted(STAGED))
+@pytest.mark.parametrize("key", sorted(KEYS))
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_staged_key_matches_oracle(spark, key, sf_dir):
-    build, oracle = STAGED[key]
-    sdf = build(spark, sf_dir)
+    spec = get(key)
+    sdf = spec.build(spark, sf_dir)
     with duck_connection(sf_dir) as con:
-        opdf = con.execute(oracle).fetch_df()
+        opdf = con.execute(spec.oracle).fetch_df()
     report = compare(key, sdf, opdf)
     assert report.ok, str(report)
     assert report.spark_rows > 0
 
 
 def test_r8_keys_registered_with_correct_builders():
-    """Round 8 flipped the staged keys live: every STAGED key must be
-    in the registry, bound to the SAME builder and oracle the proofs
-    above ran (the decorating-the-wrong-function failure mode breaks
-    the driver contract silently), and the catalog is 379 (368 + the
-    eleven round-13 registrations)."""
+    """Every key here is registered with the builder of the same name
+    that its domain module defines (the decorating-the-wrong-function
+    failure mode breaks `__spark_entry__.queries()` silently), and the catalog
+    is 379."""
     specs = all_queries()
     assert len(specs) == 379
-    for key, (fn, oracle) in STAGED.items():
-        assert key in specs, key
-        assert specs[key].build is fn, key
-        assert specs[key].oracle == oracle, key
+    for key, module in KEYS.items():
+        assert specs[key].build.__name__ == key, key
+        assert specs[key].build.__module__ == f"datapipeline_scripts_spark.{module}", key

@@ -1,40 +1,48 @@
-"""Oracle proofs for the round-9 keys (sources/staged_r9.py).
+"""Oracle proofs for the 8 keys registered in round 9.
 
-These keys staged through round 8 (held to the registration bar — the
-driver's own `oracle.compare` hash gate at both fixture SFs — without
-touching the registry) and were REGISTERED in round 9; the proofs
-keep running against the STAGED dict, and the registration test pins
-the registry to the same builder/oracle pair the proofs ran."""
+Each key lives and registers in its domain module; this file runs every
+builder against its DuckDB oracle at both fixture SFs (the
+`oracle.compare` hash gate) and pins where each builder is defined."""
 
 from __future__ import annotations
 
 import pytest
 
 from datapipeline_scripts_spark.oracle import compare, duck_connection
-from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.sources.staged_r9 import STAGED
+from datapipeline_scripts_spark.registry import all_queries, get
+
+# key -> the package module that defines and registers its builder
+KEYS = {
+    "jsonl_zst_roundtrip": "sources.format_queries",
+    "multimodal_real_gif": "extensions.multimodal",
+    "multimodal_real_jpeg": "extensions.multimodal",
+    "multimodal_real_tiff": "extensions.multimodal",
+    "multimodal_real_video": "extensions.multimodal",
+    "multimodal_real_wav": "extensions.multimodal",
+    "warc_roundtrip": "sources.format_queries",
+    "webdataset_roundtrip": "sources.format_queries",
+}
 
 
-@pytest.mark.parametrize("key", sorted(STAGED))
+@pytest.mark.parametrize("key", sorted(KEYS))
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
 def test_staged_key_matches_oracle(spark, key, sf_dir):
-    build, oracle = STAGED[key]
-    sdf = build(spark, sf_dir)
+    spec = get(key)
+    sdf = spec.build(spark, sf_dir)
     with duck_connection(sf_dir) as con:
-        opdf = con.execute(oracle).fetch_df()
+        opdf = con.execute(spec.oracle).fetch_df()
     report = compare(key, sdf, opdf)
     assert report.ok, str(report)
     assert report.spark_rows > 0
 
 
 def test_r9_keys_registered_with_correct_builders():
-    """Round 9 flipped the staged keys live: every STAGED key must be
-    in the registry, bound to the SAME builder and oracle the proofs
-    above ran (the decorating-the-wrong-function failure mode breaks
-    the driver contract silently), and the catalog is 379."""
+    """Every key here is registered with the builder of the same name
+    that its domain module defines (the decorating-the-wrong-function
+    failure mode breaks `__spark_entry__.queries()` silently), and the catalog
+    is 379."""
     specs = all_queries()
     assert len(specs) == 379
-    for key, (fn, oracle) in STAGED.items():
-        assert key in specs, key
-        assert specs[key].build is fn, key
-        assert specs[key].oracle == oracle, key
+    for key, module in KEYS.items():
+        assert specs[key].build.__name__ == key, key
+        assert specs[key].build.__module__ == f"datapipeline_scripts_spark.{module}", key
