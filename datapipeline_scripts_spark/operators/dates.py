@@ -274,14 +274,16 @@ def time_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     inline-daily form re-ran the corpus-sized aggregate 60 times
     (measured 11.0 s at sf0.1 → 0.8 s); the checkpointed series is
     |days| rows. Same recursion template (_holt_recursion_sql),
-    oracle-proven identical."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events_holt_v")
+    oracle-proven identical. Both frames are passed to ``spark.sql`` as
+    arguments, whose views are dropped once the query is analyzed: a
+    fixed-name view kept the checkpoint persisted for the rest of the
+    session."""
     daily = spark.sql(
-        f"WITH mn AS (SELECT min(CAST(ts AS DATE)) AS d0 FROM events_holt_v)\n"
-        f"{_holt_daily_body('events_holt_v', _HOLT_DAY_SPARK)}"
+        f"WITH mn AS (SELECT min(CAST(ts AS DATE)) AS d0 FROM {{events}})\n"
+        f"{_holt_daily_body('{events}', _HOLT_DAY_SPARK)}",
+        events=load_table(spark, sf_dir, "events"),
     ).localCheckpoint(eager=True)
-    daily.createOrReplaceTempView("holt_daily_v")
-    return spark.sql("WITH RECURSIVE " + _holt_recursion_sql("holt_daily_v", "div"))
+    return spark.sql("WITH RECURSIVE " + _holt_recursion_sql("{daily}", "div"), daily=daily)
 
 
 _AGING_ORACLE = """

@@ -42,6 +42,22 @@ Settings chosen for DuckDB-oracle parity and scale-readiness:
   exited with status 0: a JVM that maps a torn archive dies of SIGBUS.
   The CDS flags go before the caller's ``spark.driver.extraJavaOptions``,
   which are kept.
+- C2 compiles only code that proves hot (``JIT_OPTIONS``): the four
+  tier-4 thresholds are ten times HotSpot's defaults. The engine runs
+  as a fresh process per nightly job, and from a cold JVM C2 took about
+  two thirds of a ``corpus_build`` run's CPU, mostly on methods a pass
+  calls a few thousand times (planning, task serialization, Janino, the
+  closure cleaner); those now stay at C1, and code hot enough to matter
+  at scale still reaches C2 (docs/BENCH_NOTES.md, "The cold JVM's JIT
+  budget"). A fixed constant, not an option, like the codegen cache:
+  the thresholds follow the engine's code, not the deployment.
+  ``scripts/check_all.py`` prints the threshold in force. The flags go
+  after the CDS flags and before the caller's
+  ``spark.driver.extraJavaOptions``; HotSpot keeps the last occurrence
+  of a flag, so a caller's ``-XX:Tier4InvocationThreshold=5000`` wins.
+  They apply only to a driver JVM this process launches: a session
+  that attaches to a running JVM, or executor JVMs on a cluster, keep
+  the flags they started with.
 """
 
 from __future__ import annotations
@@ -56,6 +72,12 @@ from . import cds
 
 # compiled-class cache entries; the largest measured working set is 225
 CODEGEN_CACHE_ENTRIES = 1000
+# HotSpot's tier-4 (C2) thresholds, ten times the defaults of 5000, 600,
+# 15000 and 40000
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def default_parallelism() -> int:
@@ -101,9 +123,11 @@ def get_spark(app_name: str = "datapipeline_scripts_spark", **extra_conf: str) -
     # a running JVM keeps the flags it started with: getOrCreate only
     # attaches to it
     plan = cds.plan(extra_conf) if SparkContext._gateway is None else None
-    if plan is not None and plan.java_options:
+    if plan is not None:
         caller = extra_conf.get("spark.driver.extraJavaOptions", "")
-        extra_conf["spark.driver.extraJavaOptions"] = f"{plan.java_options} {caller}".strip()
+        extra_conf["spark.driver.extraJavaOptions"] = " ".join(
+            o for o in (plan.java_options, JIT_OPTIONS, caller) if o
+        )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate() if plan is None else cds.launch(builder, plan)
@@ -120,3 +144,18 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float]:
     metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
     generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     return int(metrics.METRIC_COMPILATION_TIME().getCount()), generator.compileTime() / 1e9
+
+
+def vm_option(spark: SparkSession, name: str) -> str:
+    """The value of HotSpot flag ``name`` in the driver JVM."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return bean.getVMOption(name).getValue()
+
+
+def jit_compile_s(spark: SparkSession) -> float:
+    """Seconds the driver JVM's JIT compilers have spent since it started."""
+    bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return bean.getTotalCompilationTime() / 1e3

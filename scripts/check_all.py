@@ -8,7 +8,8 @@ budget (VERDICT r04 item 2). Doubles compare at 1e-6 quantization in
 this mode; the default row-collect mode stays the exact-repr gate.
 
 The summary ends with the session's generated-code compile count and
-Janino compile time, the number of persistent RDDs the session
+Janino compile time, the driver JVM's JIT compile time and the C2
+invocation threshold in force, the number of persistent RDDs the session
 still holds after a forced Python and JVM garbage collection (a builder
 that never releases its cached or checkpointed frames shows up there),
 and the class-data archive the driver JVM
@@ -27,7 +28,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from datapipeline_scripts_spark import cds
 from datapipeline_scripts_spark.oracle import agg_hash_check, check_query
 from datapipeline_scripts_spark.registry import all_queries
-from datapipeline_scripts_spark.session import CODEGEN_CACHE_ENTRIES, codegen_stats, get_spark
+from datapipeline_scripts_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    codegen_stats,
+    get_spark,
+    jit_compile_s,
+    vm_option,
+)
 
 
 def settled_persistent_rdds(spark, timeout_s: float = 30.0, poll_s: float = 0.5) -> int:
@@ -87,6 +94,11 @@ def main() -> int:
     print(
         f"codegen: {compiles} classes compiled, {compile_s:.1f}s in Janino"
         f" (cache holds {CODEGEN_CACHE_ENTRIES})",
+        flush=True,
+    )
+    print(
+        f"jit: {jit_compile_s(spark):.1f}s compiling"
+        f" (Tier4InvocationThreshold={vm_option(spark, 'Tier4InvocationThreshold')})",
         flush=True,
     )
     print(f"persistent RDDs held: {settled_persistent_rdds(spark)}", flush=True)

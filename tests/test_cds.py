@@ -1,5 +1,7 @@
-"""The driver JVM's class-data archive: the first session records it,
-the next maps it, and a session that cannot use it starts as before.
+"""The driver JVM's launch flags. Its class-data archive: the first
+session records it, the next maps it, and a session that cannot use it
+starts as before. Its C2 thresholds: in force beside the archive, and a
+caller's own value wins.
 
 Every case runs its sessions in subprocesses with their own
 ``XDG_CACHE_HOME``, so the machine's archive is never touched."""
@@ -26,7 +28,7 @@ SCRIPT = textwrap.dedent(
     from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
     from datapipeline_scripts_spark import cds
-    from datapipeline_scripts_spark.session import get_spark
+    from datapipeline_scripts_spark.session import get_spark, vm_option
 
     conf, exit_code = json.loads(sys.argv[1]), json.loads(sys.argv[2])
     spark = get_spark("cds_probe", **conf)
@@ -38,6 +40,11 @@ SCRIPT = textwrap.dedent(
         "status": cds.status(),
         "pid": os.getpid(),
         "cache": sorted(os.listdir(cache)) if os.path.isdir(cache) else None,
+        "tier4": {
+            name: vm_option(spark, name)
+            for name in ("Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
+                         "Tier4CompileThreshold", "Tier4BackEdgeThreshold")
+        },
     }
     if exit_code is not None:
         # the JVM exits with this status, writing its archive first
@@ -159,6 +166,29 @@ def test_torn_temp_file_is_removed_and_a_failed_recorder_publishes_nothing(recor
     assert f"{key}.{result['pid']}.jsa" in result["cache"]
     assert result["jvm_exit"] == 3 and result["temp_bytes"] > 1 << 20
     assert archives(tmp_path) == []
+
+
+TIER4 = {
+    "Tier4InvocationThreshold": "50000",
+    "Tier4MinInvocationThreshold": "6000",
+    "Tier4CompileThreshold": "150000",
+    "Tier4BackEdgeThreshold": "400000",
+}
+
+
+def test_c2_thresholds_are_in_force_beside_the_archive(recorded, mapped):
+    for result in (recorded[1], mapped[0]):
+        assert result["tier4"] == TIER4
+    assert mapped[0]["status"].startswith("mapped "), mapped[0]["status"]
+    args = mapped[0]["args"]
+    assert args.index("-Xms2g") > args.index("-XX:Tier4InvocationThreshold=50000")
+
+
+def test_a_callers_c2_threshold_wins(recorded):
+    home, _, _ = recorded
+    result, _ = run_session(home, "-XX:Tier4InvocationThreshold=5000")
+    assert result["tier4"] == {**TIER4, "Tier4InvocationThreshold": "5000"}
+    assert result["status"].startswith("mapped "), result["status"]
 
 
 @pytest.mark.parametrize("case", ["conf_dir", "unwritable_cache"])

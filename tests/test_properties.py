@@ -248,6 +248,23 @@ def test_holt_materialized_daily_matches_inline_recursion(spark, sf_dir):
     assert got, "holt recursion returned nothing"
 
 
+def test_holt_build_leaves_no_view_and_keeps_the_daily_series_pinned(spark, sf_dir):
+    """time_holt_linear hands its frames to ``spark.sql`` as arguments: a
+    view left in the catalog holds the checkpointed daily series, and
+    with it a persisted RDD, for the rest of the session. The recursion
+    still reads the checkpoint, never the corpus-sized aggregate."""
+    from datapipeline_scripts_spark.registry import get
+
+    before = {t.name for t in spark.catalog.listTables()}
+    df = get("time_holt_linear").build(spark, sf_dir)
+    assert _rows(df)
+    after = {t.name for t in spark.catalog.listTables()}
+    assert not after & {"events_holt_v", "holt_daily_v"}
+    assert not after - before, f"views left behind: {sorted(after - before)}"
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in optimized, optimized
+
+
 def test_late_r3_stats_are_partition_invariant(spark, sf_dir):
     """Round-4 widening of the partition-invariance contract to the
     late-round-3 statistics: Spearman's histogram-derived ranks, the
