@@ -2561,8 +2561,10 @@ def stats_linreg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adding features grows the normal-equation matrix quadratically but
     the one-pass-then-solve shape is exactly how distributed OLS runs
     at 100 TB (the solve never distributes)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_ols_v")
-    return spark.sql(_linreg_sql("lineitem_ols_v", "DECIMAL(38,0)", "div"))
+    return spark.sql(
+        _linreg_sql("{lineitem}", "DECIMAL(38,0)", "div"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    )
 
 
 @query(

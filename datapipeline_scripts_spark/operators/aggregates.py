@@ -211,17 +211,16 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (per-flag and per-status marginals in one
     pass — one scan, one expanded shuffle, vs two separate queries)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """
         SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
                coalesce(l_linestatus, 'ALL') AS linestatus,
                count(*) AS n,
                round(sum(l_extendedprice), 2) AS sum_price
-        FROM lineitem_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -599,8 +598,6 @@ def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     differently-filtered aggregates in one scan + one shuffle. The
     quantity average is exact (integer-valued doubles sum exactly);
     the money sum accumulates in DECIMAL."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem_filtered")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -611,9 +608,10 @@ def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(avg(l_quantity) FILTER (WHERE l_linestatus = 'O'), 4)
                  AS avg_open_qty,
                count(*) AS n
-        FROM lineitem_filtered
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

@@ -514,8 +514,10 @@ def stats_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     that 1-row table — O(1) regardless of input size. More features
     grow the matrix quadratically but the pattern holds (PCA of the
     feature-correlation screen before regression weighting)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_pca_v")
-    return spark.sql(_pca_sql("lineitem_pca_v", "DECIMAL(38,0)", "div"))
+    return spark.sql(
+        _pca_sql("{lineitem}", "DECIMAL(38,0)", "div"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    )
 
 
 _SCD2_CUTOVER = "2024-01-25 00:00:00"  # ~80/20 split of the fixture event range

@@ -1,4 +1,4 @@
-"""The raw SQL entry path: `spark.sql` over registered temp views.
+"""The raw SQL entry path: `spark.sql` over DataFrames bound by name.
 
 The reference's query capability is delegated to full SQL engines its
 users address in SQL (psql/sqlcmd, /root/reference/backup.sh:118-121,
@@ -20,7 +20,7 @@ WITH seg AS (
   SELECT c.c_mktsegment AS segment,
          o.o_totalprice AS price,
          o.o_orderpriority AS priority
-  FROM orders_v o JOIN customer_v c ON o.o_custkey = c.c_custkey
+  FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
 )
 SELECT segment,
        priority,
@@ -53,27 +53,30 @@ GROUP BY segment, priority
     """,
 )
 def sql_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI SQL in, DataFrame out: register the fixture tables as temp
-    views and run a CTE + join + filtered aggregation as SQL text —
+    """ANSI SQL in, DataFrame out: bind the fixture tables by name and
+    run a CTE + join + filtered aggregation as SQL text —
     the engine's psql/sqlcmd-equivalent front door. The IN filter
     pushes into the scan and the join/aggregation plan is identical
     to the DSL form (same Catalyst pipeline)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(_SQL)
+    return spark.sql(
+        _SQL,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # BFS over the nation trade graph: identical SQL text runs on BOTH
-# engines (only the view suffix differs) — Spark 4's recursive CTE and
-# DuckDB's agree on UNION ALL + bounded-depth semantics, and hop counts
-# are exact integers, so the hash match is a pure SQL-parity proof.
+# engines (Spark binds each table placeholder to a DataFrame, DuckDB to
+# the bare table name). Spark 4's recursive CTE and DuckDB's agree on
+# UNION ALL + bounded-depth semantics, and hop counts are exact
+# integers, so the hash match is a pure SQL-parity proof.
 _RECURSIVE_SQL = """
 WITH RECURSIVE edges AS (
   SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
-  FROM lineitem{sfx} l
-  JOIN orders{sfx} o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer{sfx} c ON o.o_custkey = c.c_custkey
-  JOIN supplier{sfx} s ON l.l_suppkey = s.s_suppkey
+  FROM {lineitem} l
+  JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+  JOIN {customer} c ON o.o_custkey = c.c_custkey
+  JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
   WHERE c.c_nationkey <> s.s_nationkey
 ),
 reach(dst, hops) AS (
@@ -84,12 +87,13 @@ reach(dst, hops) AS (
   WHERE r.hops < 3 AND e.dst <> 0
 )
 SELECT n.n_name AS nation, CAST(min(r.hops) AS INT) AS min_hops
-FROM reach r JOIN nation{sfx} n ON r.dst = n.n_nationkey
+FROM reach r JOIN {nation} n ON r.dst = n.n_nationkey
 GROUP BY n.n_name
 """
+_REACH_TABLES = ("lineitem", "orders", "customer", "supplier", "nation")
 
 
-@query("sql_recursive_reach", oracle=_RECURSIVE_SQL.format(sfx=""))
+@query("sql_recursive_reach", oracle=_RECURSIVE_SQL.format(**{t: t for t in _REACH_TABLES}))
 def sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4): breadth-first reachability from nation
     0 over the trade graph, bounded at 3 hops, reporting min hops per
@@ -101,17 +105,15 @@ def sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round joins the frontier (≤|V| rows) to the edge list;
     the depth bound caps total work at 3 edge-list scans. The same
     text runs on DuckDB — a literal cross-engine SQL-parity check."""
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_r")
-    return spark.sql(_RECURSIVE_SQL.format(sfx="_r"))
+    return spark.sql(_RECURSIVE_SQL, **{t: load_table(spark, sf_dir, t) for t in _REACH_TABLES})
 
 
 _LATERAL_SQL = """
 SELECT seg.segment, top.o_orderkey, top.o_totalprice
-FROM (SELECT DISTINCT c_mktsegment AS segment FROM customer{sfx}) seg,
+FROM (SELECT DISTINCT c_mktsegment AS segment FROM {customer}) seg,
 LATERAL (
   SELECT o.o_orderkey, o.o_totalprice
-  FROM orders{sfx} o JOIN customer{sfx} c ON o.o_custkey = c.c_custkey
+  FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
   WHERE c.c_mktsegment = seg.segment
   ORDER BY o.o_totalprice DESC, o.o_orderkey
   LIMIT 2
@@ -119,7 +121,7 @@ LATERAL (
 """
 
 
-@query("sql_lateral_topk", oracle=_LATERAL_SQL.format(sfx=""))
+@query("sql_lateral_topk", oracle=_LATERAL_SQL.format(orders="orders", customer="customer"))
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery: top-2 orders per market segment,
     deterministic tie-break on orderkey — the same SQL text runs on
@@ -127,9 +129,11 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over one join (DomainJoin rewrite), so the declarative
     correlated form costs the same as the hand-written window idiom
     (window_rank) at any scale."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_lat")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_lat")
-    return spark.sql(_LATERAL_SQL.format(sfx="_lat"))
+    return spark.sql(
+        _LATERAL_SQL,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 @query(
@@ -165,15 +169,15 @@ def sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CREATE OR REPLACE TEMPORARY FUNCTION adj_cents(x DOUBLE) RETURNS BIGINT "
         "RETURN CAST(round(x * 100) AS BIGINT) * 107 div 100"
     )
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_udf_v")
     return spark.sql(
         """
         SELECT bal_band(c_acctbal) AS band,
                count(*) AS n,
                sum(adj_cents(c_acctbal)) AS adj_cents
-        FROM customer_udf_v
+        FROM {customer}
         GROUP BY bal_band(c_acctbal)
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -202,10 +206,9 @@ def sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Revenue is per-row cents-quantized before the sum (house
     determinism contract: bigint accumulation, no double-sum drift)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_pipe_v")
     return spark.sql(
         """
-        FROM lineitem_pipe_v
+        FROM {lineitem}
         |> WHERE l_quantity >= 30
         |> EXTEND CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
              AS rev_cents
@@ -214,7 +217,8 @@ def sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
                      max(CAST(l_quantity AS BIGINT)) AS max_qty
              GROUP BY l_returnflag
         |> ORDER BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -243,7 +247,6 @@ def sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the expanded constants, proving the variable layer
     is pure binding, not semantics. Integer-cents sum keeps the hash
     order-independent."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_var_v")
     spark.sql("DECLARE OR REPLACE VARIABLE min_price DOUBLE DEFAULT 0.0")
     spark.sql("DECLARE OR REPLACE VARIABLE want_priority STRING DEFAULT ''")
     spark.sql("SET VAR min_price = 150000.0")
@@ -254,11 +257,12 @@ def sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
           'SELECT o_orderstatus,
                   count(*) AS n,
                   sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS sum_cents
-           FROM orders_var_v
+           FROM {orders}
            WHERE o_totalprice >= min_price AND o_orderpriority = ?
            GROUP BY o_orderstatus'
           USING want_priority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -290,21 +294,21 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     the search declaratively (generate_series of candidate cutoffs +
     ORDER BY/LIMIT), proving the procedural and set-based forms agree."""
     spark.conf.set("spark.sql.scripting.enabled", "true")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_script_v")
     return spark.sql(
         """
         BEGIN
           DECLARE t DOUBLE DEFAULT 0;
           DECLARE n BIGINT DEFAULT -1;
           DECLARE total BIGINT DEFAULT 0;
-          SET total = (SELECT count(*) FROM orders_script_v);
+          SET total = (SELECT count(*) FROM {orders});
           WHILE n < 0 OR n * 10 > total DO
             SET t = t + 50000;
-            SET n = (SELECT count(*) FROM orders_script_v WHERE o_totalprice > t);
+            SET n = (SELECT count(*) FROM {orders} WHERE o_totalprice > t);
           END WHILE;
           SELECT CAST(t AS BIGINT) AS threshold, n AS n_above, total AS n_total;
         END
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -314,13 +318,13 @@ SELECT l_returnflag,
        CAST(year(l_shipdate) AS INT) AS ship_year,
        count(*) AS n_rows,
        CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
-FROM lineitem{sfx}
+FROM {lineitem}
 GROUP BY ALL
 ORDER BY ALL
 """
 
 
-@query("sql_group_by_all", oracle=_GBALL_SQL.format(sfx=""))
+@query("sql_group_by_all", oracle=_GBALL_SQL.format(lineitem="lineitem"))
 def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL (Spark 3.4+/4, DuckDB): the modern
     analyst shorthand — every non-aggregate select item becomes a
@@ -332,5 +336,4 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan-wise this is an ordinary partial-aggregable hash aggregate;
     ORDER BY ALL adds one bounded sort over |flags|×|status|×|years|
     aggregated rows."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gba")
-    return spark.sql(_GBALL_SQL.format(sfx="_gba"))
+    return spark.sql(_GBALL_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))

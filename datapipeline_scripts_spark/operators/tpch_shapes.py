@@ -575,23 +575,22 @@ def tpch_q16_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key is nullable; plain broadcast LeftAnti here), and the
     count(DISTINCT) aggregates in two stages over the (brand, type,
     size, suppkey) expansion."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("part_q16")
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_q16")
-    li.createOrReplaceTempView("lineitem_q16")
     return spark.sql(
         """
         SELECT p_brand, p_type, p_size,
                count(DISTINCT l_suppkey) AS supplier_cnt
-        FROM lineitem_q16
-        JOIN part_q16 ON p_partkey = l_partkey
+        FROM {lineitem}
+        JOIN {part} ON p_partkey = l_partkey
         WHERE p_brand <> 'Brand#13'
           AND p_size IN (1, 5, 10, 15, 20, 25)
-          AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier_q16
+          AND l_suppkey NOT IN (SELECT s_suppkey FROM {supplier}
                                 WHERE s_acctbal < 0)
         GROUP BY 1, 2, 3
         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey"),
+        part=load_table(spark, sf_dir, "part"),
+        supplier=load_table(spark, sf_dir, "supplier"),
     )
 
 

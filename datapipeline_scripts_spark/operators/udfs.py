@@ -125,7 +125,6 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, source, w
 
     spark.udtf.register("tokenize_udtf", _Tokenize)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents_udtf")
     return spark.sql(
         """
         SELECT t.source,
@@ -133,10 +132,11 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS n_tokens,
                count(DISTINCT t.word) AS n_distinct,
                sum(CASE WHEN length(t.word) >= 5 THEN 1 ELSE 0 END) AS n_long
-        FROM documents_udtf d,
+        FROM {documents} d,
         LATERAL tokenize_udtf(d.doc_id, d.source, d.text) t
         GROUP BY t.source
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -1,7 +1,9 @@
 """Pure-Python Avro Object Container File reader as a Spark 4 Python
-DataSource — the in-container path for the repo's #1 environment gap
-(the external ``spark-avro`` connector jar is not baked into this
-image and cannot be fetched offline; VERDICT r05 "What's missing" #1).
+DataSource — the engine's one Avro path (`readers.read_avro` and
+`readers.write_avro` call straight into this module). The external
+``spark-avro`` connector jar is not baked into this image, so a JVM
+tier would never run here; it comes back only as its own change, with
+a workload that shows its gain.
 
 Format per the PUBLIC Avro 1.12 spec (Object Container Files): magic
 ``Obj\\x01`` | file-metadata map (``avro.schema`` JSON,
@@ -33,14 +35,11 @@ org.apache.avro DataFileReader decoding its output — encoder and
 decoder are each checked against the spec's reference implementation
 of the other direction, never only against themselves.
 
-Posture at scale: on a real cluster, PREFER the JVM connector
-(``--packages org.apache.spark:spark-avro_2.13:<ver>``) — columnar,
-codegen'd, splittable WITHIN files.  This source parallelizes
-per-file (one InputPartition per .avro file), decodes row-at-a-time
-in Python workers, and opens files with plain ``open()`` — right for
-sidecar/medium data on POSIX-visible storage, not for a 100 TB scan.
-``readers.read_avro`` tries the JVM connector first and falls back
-here, so the same call site does the right thing in both worlds.
+Posture at scale: this source parallelizes per-file (one
+InputPartition per .avro file), decodes row-at-a-time in Python
+workers, and opens files with plain ``open()`` — right for
+sidecar/medium data on POSIX-visible storage, not for a 100 TB scan,
+where a columnar reader splittable WITHIN files would be the lever.
 
 Worker-shipping note (the pysource.py lesson): everything the
 executor-side ``read()`` needs is built by the module-level
@@ -374,20 +373,13 @@ def _build_toolkit() -> dict:
             # out; pyarrow's CompressedInputStream streams the frame
             # without needing the size. pyarrow is a hard dependency of
             # this engine (Arrow UDF surface) and of the Python
-            # DataSource worker itself, so it is always importable here.
-            try:
-                import pyarrow as pa
-            except ImportError as exc:  # pragma: no cover
-                raise NotImplementedError(
-                    "Avro zstandard codec needs pyarrow; install it or use "
-                    "the spark-avro JVM connector"
-                ) from exc
+            # DataSource worker itself.
+            import pyarrow as pa
+
             return pa.CompressedInputStream(pa.BufferReader(payload), "zstd").read()
         raise NotImplementedError(
             f"Avro codec {codec!r} is not one this reader decodes; re-encode "
-            "with codec=null/deflate/snappy/bzip2/xz/zstandard, or use the "
-            "spark-avro JVM connector "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
+            "with codec=null/deflate/snappy/bzip2/xz/zstandard"
         )
 
     _AVRO_PRIM_NAMES = frozenset(
@@ -445,7 +437,7 @@ def _build_toolkit() -> dict:
         STRIP doc/aliases/defaults/extra attributes, FULLNAMES (done
         upstream), unwrap `{"type": X}` wrappers — EXTENDED to retain
         `logicalType`/`precision`/`scale`: logical types change the
-        DECODED value type (int→date, bytes→Decimal), so for this tier
+        DECODED value type (int→date, bytes→Decimal), so for this reader
         they are structural (ADVICE r07: the previous exact writer-JSON
         comparison refused legitimately homogeneous directories whose
         files differ only in doc/default/alias attributes emitted by
@@ -509,9 +501,8 @@ def _build_toolkit() -> dict:
             ):
                 raise ValueError(
                     f"{path}: writer schema differs from the directory's "
-                    "inferred schema — the pure-Python Avro tier has no "
-                    "reader-schema resolution; read the mismatched files "
-                    "separately or use the spark-avro connector"
+                    "inferred schema — this reader has no reader-schema "
+                    "resolution; read the mismatched files separately"
                 )
             codec = meta.get("avro.codec", b"null").decode("utf-8")
             rec = make_reader(schema, {})
@@ -929,16 +920,14 @@ _WTK = _build_writer_toolkit()
 
 
 def write_avro_py(df: DataFrame, path: str, codec: str = "deflate", mode: str = "error") -> list[str]:
-    """Write a DataFrame as Avro Object Container Files, pure-Python —
-    the in-container counterpart of `df.write.format("avro")` (which
-    needs the spark-avro jar). One part-file per partition, written by
-    the executors; `path` must be a POSIX directory visible to them
-    (true in local mode and on shared-FS clusters — on object stores
-    use the JVM connector). Codecs: null/deflate. Timestamp columns are
-    converted to unix micros JVM-side (exact, timezone-free) before
-    rows reach Python; nested-struct timestamps are refused loudly.
-    All four DataFrameWriter save modes apply (ADVICE r06 — the JVM
-    tier forwards `mode` verbatim, so the tiers must agree): `error`/
+    """Write a DataFrame as Avro Object Container Files, pure-Python.
+    One part-file per partition, written by the executors; `path` must
+    be a POSIX directory visible to them (true in local mode and on
+    shared-FS clusters; object stores are out of scope). Codecs:
+    null/deflate. Timestamp columns are converted to unix micros
+    JVM-side (exact, timezone-free) before rows reach Python;
+    nested-struct timestamps are refused loudly. All four
+    DataFrameWriter save modes apply (ADVICE r06): `error`/
     `errorifexists` refuse a non-empty target, `overwrite` replaces it,
     `ignore` silently returns [] when the target is non-empty, and
     `append` adds part-files under run-unique names."""
@@ -987,8 +976,7 @@ def write_avro_py(df: DataFrame, path: str, codec: str = "deflate", mode: str = 
             ):
                 raise NotImplementedError(
                     f"column {fld.name!r}: nested timestamps are not supported "
-                    "by the pure-Python Avro writer; flatten them or use the "
-                    "spark-avro JVM connector"
+                    "by the pure-Python Avro writer; flatten them first"
                 )
             cols.append(F.col(fld.name))
         schema["fields"].append(
@@ -1043,10 +1031,7 @@ def _walk_types(dt: T.DataType):
 
 def register_pyavro(spark: SparkSession) -> None:
     """Idempotently register the `pyavro` format with this session."""
-    try:
-        from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-    except ImportError as exc:  # pragma: no cover - Spark >= 4.0 everywhere here
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0") from exc
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     iter_file = _TK["iter_file"]  # closure → pickled by value with the partition
 

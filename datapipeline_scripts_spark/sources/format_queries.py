@@ -577,9 +577,8 @@ AVRO_ROUNDTRIP_ORACLE = """
 
 @query("avro_roundtrip", oracle=AVRO_ROUNDTRIP_ORACLE)
 def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders → Avro Object Container Files via the two-tier sink
-    (`readers.write_avro`: spark-avro when on the classpath, the pure
-    Python OCF writer here) → two-tier read-back → aggregate. The
+    """orders → Avro Object Container Files via `readers.write_avro`
+    (the pure-Python OCF writer) → `readers.read_avro` → aggregate. The
     oracle aggregates the original parquet, so a hash match certifies
     the Avro encode/decode is lossless end to end — this puts the
     round-6 codec work under the driver's own eye (VERDICT r6 item 2).
@@ -587,13 +586,11 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the write is one container file per partition
     (executor-side, no driver collect); the read is one task per file.
     The fixture parquet loads as ONE partition, which would serialize
-    the Python tier — the explicit repartition spreads the encode
-    across cores (and models the real layout: at scale the source has
-    many partitions already and the repartition is a no-op to drop).
-    On a cluster the JVM connector takes both sides — columnar and
-    splittable within files. The %3 slice keeps the Python-tier byte
-    cost bench-shaped; losslessness is per-row, so the slice proves
-    the same property as the full table."""
+    the Python encode — the explicit repartition spreads it across
+    cores (and models the real layout: at scale the source has many
+    partitions already and the repartition is a no-op to drop). The
+    %3 slice keeps the Python byte cost bench-shaped; losslessness is
+    per-row, so the slice proves the same property as the full table."""
     from datapipeline_scripts_spark.sources import readers
 
     src = (
@@ -696,14 +693,14 @@ PROTOBUF_ROUNDTRIP_ORACLE = """
 @query("protobuf_roundtrip", oracle=PROTOBUF_ROUNDTRIP_ORACLE)
 def protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → protobuf wire bytes (Arrow-batched encoder, public
-    wire format) → `readers.protobuf_decode` (spark-protobuf on a
-    cluster, the pure-Python wire tier here) → projected scalars. The
+    wire format) → `readers.protobuf_decode` (the pure-Python wire
+    decoder) → projected scalars. The
     oracle recomputes the same three fields from the parquet directly,
     so a hash match proves encode∘decode is the identity — the decoder
     is exercised against bytes it never produced (VERDICT r6 item 2).
 
     Scale shape: both stages are per-row Arrow batch work with no
-    shuffle; the decode becomes JVM-columnar under the connector."""
+    shuffle."""
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -839,7 +836,8 @@ AVRO_LOGICAL_ROUNDTRIP_ORACLE = """
 @query("avro_logical_roundtrip", oracle=AVRO_LOGICAL_ROUNDTRIP_ORACLE)
 def avro_logical_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem dates and decimals through the Avro LOGICAL types
-    (`int/date`, `bytes/decimal`) via the two-tier sink and source —
+    (`int/date`, `bytes/decimal`) via `readers.write_avro` and
+    `readers.read_avro` —
     the values that actually exercise the codec's logical-type clauses
     rather than plain scalars. Oracle recomputes from parquet, so a
     hash match proves date epoch-days and decimal unscaled-bytes

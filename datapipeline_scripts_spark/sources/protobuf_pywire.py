@@ -1,10 +1,9 @@
-"""Pure-Python protobuf wire-format decoder — the in-container tier
-for `readers.protobuf_decode` (the external ``spark-protobuf`` module
-is not baked into this image, and this image's ``google.protobuf``
-is broken, so BOTH canonical decode paths are out locally; on a real
-cluster submit with ``--packages
-org.apache.spark:spark-protobuf_2.13:<spark-version>`` and the JVM
-tier takes over unchanged — columnar, codegen'd: the 100 TB path).
+"""Pure-Python protobuf wire-format decoder — the engine's one
+protobuf decode path (`readers.protobuf_decode` calls straight into
+`decode_protobuf_py`). The external ``spark-protobuf`` module is not
+baked into this image and ``google.protobuf`` is not installed, so a
+JVM tier would never run here; it comes back only as its own change,
+with a workload that shows its gain.
 
 Everything here derives from the PUBLIC protobuf encoding spec
 (protobuf.dev/programming-guides/encoding) and the PUBLIC, frozen
@@ -29,7 +28,7 @@ Everything here derives from the PUBLIC protobuf encoding spec
   EnumValueDescriptorProto{name=1, number=2}.
 
 Value semantics mirror protobuf-java holders (what spark-protobuf
-emits), so a query moved between tiers sees identical values:
+emits), so a query ported to that module sees identical values:
 uint32/fixed32 wrap to two's-complement Integer, uint64/fixed64 wrap
 to two's-complement Long, enums render as their symbol names
 (unknown numbers as the decimal string — proto3 open enums), missing
@@ -46,8 +45,8 @@ float/double/bool/string/bytes → the obvious types, enum →
 StringType, message → StructType, repeated → ArrayType.
 
 Scale posture: decode runs as an Arrow-batched Python UDF over the
-binary column — right for sidecar/medium data in-container, not for
-a 100 TB scan (use the JVM connector there). The decoder compiles
+binary column — right for sidecar/medium data, not for a 100 TB
+scan. The decoder compiles
 once driver-side per message type and ships by value (cloudpickle),
 so executors need no descriptor file access.
 """
@@ -125,7 +124,7 @@ def iter_records(buf: bytes):
         else:  # 3/4: deprecated group encoding
             raise NotImplementedError(
                 "protobuf group wire types are deprecated and not decoded; "
-                "re-encode without groups or use the spark-protobuf connector"
+                "re-encode without groups"
             )
         yield fn, wt, v
 
@@ -529,7 +528,7 @@ def _c_unescape(s: str) -> bytes:
 
 def _parse_default(s: str, ftype: int):
     """proto2 declared default (descriptor text form) → the holder value
-    the JVM tier materializes for an absent field."""
+    protobuf-java materializes for an absent field."""
     if ftype == _T_STRING:
         return s
     if ftype == _T_BYTES:
@@ -578,8 +577,8 @@ def _qualify(message_name: str, registry: dict) -> str:
 def decode_protobuf_py(
     df: DataFrame, data_col: str, message_name: str, desc_path: str
 ) -> DataFrame:
-    """Pure-Python tier of `readers.protobuf_decode`: replace the binary
-    `data_col` with the decoded struct, same as `from_protobuf`. The
+    """`readers.protobuf_decode`: replace the binary `data_col` with
+    the decoded struct, in spark-protobuf's schema mapping. The
     descriptor file is read ONCE driver-side; the compiled decoder
     ships to executors by value inside an Arrow-batched UDF."""
     with open(desc_path, "rb") as fh:

@@ -44,10 +44,7 @@ _LEVELS = ("DEBUG", "INFO", "WARN", "ERROR", "FATAL")
 def register_logsynth(spark: SparkSession) -> None:
     """Idempotently register the source with this session. The classes
     are locals so they pickle by value (self-contained on workers)."""
-    try:
-        from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-    except ImportError as exc:  # pragma: no cover - Spark >= 4.0 everywhere here
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0") from exc
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     levels = _LEVELS  # close over plain tuples/ints only
 
@@ -139,14 +136,7 @@ def register_logsynth_stream(spark: SparkSession) -> None:
     checkpointed by the engine, so a restarted query resumes at the
     committed seq — the same exactly-once contract the file source
     gets from its log."""
-    try:
-        from pyspark.sql.datasource import (
-            DataSource,
-            DataSourceStreamReader,
-            InputPartition,
-        )
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError("Python DataSource API requires Spark >= 4.0") from exc
+    from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
     levels = _LEVELS
     total, step = _STREAM_ROWS, _STREAM_BATCH

@@ -16,6 +16,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from datapipeline_scripts_spark.sources.avro_pysource import (
+    read_avro_py,
+    spark_schema_for_path,
+    write_avro_py,
+)
+from datapipeline_scripts_spark.sources.protobuf_pywire import decode_protobuf_py
+
 
 def read_parquet(
     spark: SparkSession,
@@ -150,136 +157,36 @@ def read_binary_files(
     return reader.load(path)
 
 
-# Signatures that mean "the optional JVM connector is not on the
-# classpath" — the ONLY condition under which the two-tier readers
-# below fall back to their pure-Python tier (ADVICE r06: a bare
-# `except Exception` rerouted genuine failures — corrupt files, IO
-# errors, mid-job write aborts — to the slow tier and discarded the
-# real error; worst case write_avro(mode='overwrite') rmtree'ing JVM
-# partial output). Probed in-container: missing spark-avro raises
-# AnalysisException condition _LEGACY_ERROR_TEMP_1139 ("Failed to
-# find data source: avro"), missing spark-protobuf raises condition
-# PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE; the others cover the
-# documented Spark-version spellings of the same absence.
-_CONNECTOR_ABSENT_SIGNATURES = (
-    "Failed to find data source",
-    "Failed to find the data source",
-    "DATA_SOURCE_NOT_FOUND",
-    "_LEGACY_ERROR_TEMP_1139",
-    "PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE",
-    "CANNOT_LOAD_PROTOBUF_CLASS",
-)
-
-# A ClassNotFoundException only means "connector absent" when the class
-# it names IS the connector (ADVICE r07: a mid-job CNFE for an
-# unrelated class — codec shim, filesystem impl, UDF dependency — is a
-# deployment fault that must surface, not a cue to silently reroute to
-# the slow Python tier). The JVM spelling puts the missing class name
-# right after the exception class, so anchor on connector prefixes.
-_CONNECTOR_CLASS_PREFIXES = (
-    "org.apache.spark.sql.avro",
-    "org.apache.spark.sql.protobuf",
-    "org.apache.spark.sql.v2.avro",
-    "avro.AvroFileFormat",
-)
-
-
-def _connector_absent(exc: BaseException) -> bool:
-    """True iff `exc` is a missing-connector signature (fall back to the
-    Python tier); anything else is a genuine failure and must re-raise."""
-    if isinstance(exc, ImportError):  # pyspark.sql.protobuf wrapper absent
-        return True
-    parts = [str(exc)]
-    get_cond = getattr(exc, "getCondition", None)
-    if get_cond is not None:
-        try:
-            cond = get_cond()
-            if cond:
-                parts.append(cond)
-        except Exception:
-            pass
-    text = " ".join(parts)
-    if any(sig in text for sig in _CONNECTOR_ABSENT_SIGNATURES):
-        return True
-    if "ClassNotFoundException" in text:
-        return any(prefix in text for prefix in _CONNECTOR_CLASS_PREFIXES)
-    return False
-
-
 def read_avro(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """Avro source, two-tier (round 6 closes the former hard gate):
+    """Avro source: the pure-Python Object Container File DataSource
+    (`sources/avro_pysource.py`, partition-per-file, every spec-named
+    codec — null/deflate/snappy/bzip2/xz stdlib-only, zstandard via
+    pyarrow — and full union coverage via spark-avro's member-struct
+    convention).
 
-    1. The JVM `spark-avro` connector when on the classpath (a cluster
-       submitted with `--packages
-       org.apache.spark:spark-avro_2.13:<spark-version>`) — columnar,
-       codegen'd, splittable within files: the 100 TB path.
-    2. Otherwise the pure-Python Object Container File DataSource
-       (`sources/avro_pysource.py`, partition-per-file, every
-       spec-named codec — null/deflate/snappy/bzip2/xz stdlib-only,
-       zstandard via pyarrow — and full union coverage via spark-avro's
-       member-struct convention) — so Avro reads WORK in this container
-       instead of raising.
-
-    A caller-supplied `schema` applies as-is on the JVM tier; the
-    Python tier decodes by the file's writer schema, so there it must
-    match the inferred schema exactly (projection/cast belong in a
-    `.select` on the returned frame)."""
-    reader = spark.read
+    Rows decode by the file's writer schema, so a caller-supplied
+    `schema` must match the inferred schema exactly (projection/cast
+    belong in a `.select` on the returned frame)."""
     if schema is not None:
-        reader = reader.schema(schema)
-    try:
-        return reader.format("avro").load(path)
-    except Exception as exc:
-        if not _connector_absent(exc):
-            raise  # genuine failure (corrupt file, IO, perms) — never mask it
-        from datapipeline_scripts_spark.sources.avro_pysource import (
-            read_avro_py,
-            spark_schema_for_path,
-        )
-
-        if schema is not None and schema != spark_schema_for_path(path):
+        writer_schema = spark_schema_for_path(path)
+        if schema != writer_schema:
             raise NotImplementedError(
-                "the pure-Python Avro tier reads the file's writer schema; "
-                f"requested schema differs from {spark_schema_for_path(path).simpleString()} "
-                "— drop the schema argument (then .select/.cast), or use the "
-                "spark-avro connector (--packages "
-                "org.apache.spark:spark-avro_2.13:<spark-version>)"
-            ) from exc
-        return read_avro_py(spark, path)
+                "read_avro decodes by the file's writer schema; requested schema "
+                f"differs from {writer_schema.simpleString()} — drop the schema "
+                "argument, then .select/.cast the returned frame"
+            )
+    return read_avro_py(spark, path)
 
 
 def protobuf_decode(df: DataFrame, data_col: str, message_name: str, desc_path: str) -> DataFrame:
-    """Protobuf column decode, two-tier (round 6 closes the former hard
-    gate, mirroring read_avro):
-
-    1. `from_protobuf` when the external spark-protobuf module is on
-       the classpath (a cluster submitted with `--packages
-       org.apache.spark:spark-protobuf_2.13:<spark-version>`) —
-       columnar, codegen'd: the 100 TB path.
-    2. Otherwise the pure-Python wire-format tier
-       (`sources/protobuf_pywire.py`): the .desc FileDescriptorSet is
-       parsed driver-side by the same wire reader (descriptor.proto's
-       field numbers are public and frozen), the decoder compiles once
-       and runs as an Arrow-batched UDF — so protobuf decode WORKS in
-       this container instead of raising. Holder semantics match
-       protobuf-java (unsigned wrap, enum symbol names, proto3
-       defaults), so results are tier-independent."""
-    try:
-        from pyspark.sql.protobuf.functions import from_protobuf
-
-        out = df.withColumn(
-            data_col, from_protobuf(df[data_col], message_name, descFilePath=desc_path)
-        )
-        out.schema  # force analysis: missing connector surfaces here
-        return out
-    except Exception as exc:
-        if not _connector_absent(exc):
-            raise  # bad desc path / wrong message name / etc: both tiers fail
-        from datapipeline_scripts_spark.sources.protobuf_pywire import (
-            decode_protobuf_py,
-        )
-
-        return decode_protobuf_py(df, data_col, message_name, desc_path)
+    """Protobuf column decode by the pure-Python wire-format decoder
+    (`sources/protobuf_pywire.py`): the .desc FileDescriptorSet is
+    parsed driver-side by the same wire reader (descriptor.proto's
+    field numbers are public and frozen), the decoder compiles once
+    and runs as an Arrow-batched UDF. Holder semantics match
+    protobuf-java (unsigned wrap, enum symbol names, proto3
+    defaults)."""
+    return decode_protobuf_py(df, data_col, message_name, desc_path)
 
 
 READERS: dict[str, Callable[..., DataFrame]] = {
@@ -302,24 +209,10 @@ def read(spark: SparkSession, fmt: str, path: str, **kwargs) -> DataFrame:
 
 
 def write_avro(df: DataFrame, path: str, mode: str = "error", codec: str = "deflate") -> None:
-    """Avro sink, two-tier like read_avro: the JVM spark-avro connector
-    when on the classpath (columnar, any Hadoop filesystem — the 100 TB
-    path), else the pure-Python OCF writer (`avro_pysource.write_avro_py`:
+    """Avro sink: the pure-Python OCF writer (`avro_pysource.write_avro_py`:
     one part-file per partition on a POSIX-visible directory,
     null/deflate codecs)."""
-    try:
-        jvm_codec = "uncompressed" if codec == "null" else codec
-        writer = df.write.mode(mode).option("compression", jvm_codec)
-        writer.format("avro").save(path)
-    except Exception as exc:
-        if not _connector_absent(exc):
-            # mode='error' refusals, mid-job write failures, IO errors:
-            # re-raise — falling through would rmtree JVM partial output
-            # under mode='overwrite' and mask the real failure
-            raise
-        from datapipeline_scripts_spark.sources.avro_pysource import write_avro_py
-
-        write_avro_py(df, path, codec=codec, mode=mode)
+    write_avro_py(df, path, codec=codec, mode=mode)
 
 
 def write_parquet(

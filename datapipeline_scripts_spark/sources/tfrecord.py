@@ -77,35 +77,16 @@ def crc32c(data: bytes, crc: int = 0) -> int:
     """CRC32C of ``data`` (Castagnoli, as used by TFRecord/iSCSI/ext4).
     Pinned to the RFC 3720 check vectors in tests/test_tfrecord.py.
 
-    Throughput, measured honestly: ~7 MiB/s/core in CPython (a
-    slicing-by-8 variant was benchmarked SLOWER — big-int shifts eat
-    the table-fanout win — so the single-table loop stays). Per-shard
-    parallelism multiplies that by the core count, which covers the
-    fixture/proxy scales and modest shards; for 100 TB of 100 MB+
-    shards this is the tier-2 posture the Avro source established:
-    a native CRC32C (SSE4.2 instruction via a wheel like `crc32c`, or
-    the JVM connector) takes the hot path when available — see the
-    import-try below — and this pure-stdlib tier stays the
-    always-works fallback and the oracle the fast tier is checked
-    against."""
+    Throughput: ~7 MiB/s/core in CPython (a slicing-by-8 variant was
+    benchmarked SLOWER — big-int shifts eat the table-fanout win — so
+    the single-table loop stays). Per-shard parallelism multiplies
+    that by the core count, which covers the fixture/proxy scales and
+    modest shards. A native CRC32C for 100 MB+ shards at 100 TB comes
+    back only as its own change, with a workload that shows its gain."""
     crc ^= 0xFFFFFFFF
     for b in data:
         crc = _TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
     return crc ^ 0xFFFFFFFF
-
-
-_crc32c_py = crc32c
-try:  # tier-1: the SSE4.2-accelerated wheel, absent in this container
-    import crc32c as _crc32c_native  # type: ignore[import-not-found]
-
-    def crc32c(data: bytes, crc: int = 0) -> int:  # noqa: F811
-        """Native-accelerated CRC32C (same contract as `_crc32c_py`;
-        tests/test_tfrecord.py pins both tiers to the RFC 3720
-        vectors, so a wheel with wrong semantics fails loudly)."""
-        return _crc32c_native.crc32c(bytes(data), crc)
-
-except ImportError:  # expected here — the pure tier carries
-    pass
 
 
 _MASK_DELTA = 0xA282EAD8

@@ -76,6 +76,25 @@ def test_keys_live_in_domain_modules():
     assert staged == []
 
 
+def test_codecs_have_one_path():
+    """Each codec has one path, the one that runs in this image: no
+    package module reaches for the spark-avro or spark-protobuf JVM
+    connectors, the protobuf-backed ``transformWithStateInPandas``
+    worker, or a native CRC32C wheel. Such a tier comes back only as
+    its own change, with a workload that shows its gain."""
+    banned = ('format("avro")', "from_protobuf", "transformWithStateInPandas", "import crc32c")
+    pkg_dir = os.path.dirname(datapipeline_scripts_spark.__file__)
+    hits = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as fh:
+                    text = fh.read()
+                hits += [(os.path.relpath(path, pkg_dir), b) for b in banned if b in text]
+    assert hits == []
+
+
 def test_driver_order_ignores_registration_order():
     """Moving a key to another module changes the registry's insertion
     order; the order `__spark_entry__` exports must not move with it.

@@ -705,9 +705,9 @@ def test_avro_write_read_randomized_sweep(spark, tmp_path):
 
 
 def test_write_avro_two_tier_dispatch(spark, tmp_path):
-    """readers.write_avro lands on the pure-Python tier here (no
-    spark-avro jar) and mode='error' refuses an existing directory
-    without falling through to a double-write."""
+    """readers.write_avro writes through the pure-Python OCF writer
+    and mode='error' refuses an existing directory instead of
+    double-writing."""
     df = spark.range(5).selectExpr("id", "CONCAT('n-', id) AS name")
     out = str(tmp_path / "sink")
     readers.write_avro(df, out)
@@ -1128,44 +1128,9 @@ def test_protobuf_randomized_scalar_sweep(spark, tmp_path):
 # ---- ADVICE r06 closures (round 7) -----------------------------------------
 
 
-def test_connector_absent_classifier_narrows_fallback():
-    """The two-tier fallback in read_avro/protobuf_decode/write_avro
-    triggers ONLY on missing-connector signatures (ADVICE r06 medium):
-    genuine failures — IO errors, mid-job aborts, already-exists
-    refusals — classify as NOT absent and re-raise."""
-
-    class Cond(Exception):
-        def __init__(self, msg, cond=None):
-            super().__init__(msg)
-            self._c = cond
-
-        def getCondition(self):
-            return self._c
-
-    absent = [
-        Cond("Failed to find data source: avro. Avro is built-in but external"),
-        Cond("boom", "_LEGACY_ERROR_TEMP_1139"),
-        Cond("boom", "DATA_SOURCE_NOT_FOUND"),
-        Cond("cannot call FROM_PROTOBUF", "PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE"),
-        Cond("java.lang.ClassNotFoundException: org.apache.spark.sql.avro.AvroFileFormat"),
-        ImportError("No module named 'pyspark.sql.protobuf'"),
-    ]
-    genuine = [
-        Cond("Job aborted due to stage failure: disk quota exceeded"),
-        Cond("path file:/x/out already exists.", "PATH_ALREADY_EXISTS"),
-        FileNotFoundError("/tmp/nope.desc"),
-        Cond("Malformed records are detected in record parsing"),
-        PermissionError("denied"),
-    ]
-    for e in absent:
-        assert readers._connector_absent(e), e
-    for e in genuine:
-        assert not readers._connector_absent(e), e
-
-
 def test_protobuf_decode_missing_desc_is_loud(spark, tmp_path):
     """A bad desc path is a genuine failure: FileNotFoundError surfaces
-    instead of being silently rerouted through the Python tier."""
+    at the call, before any row is decoded."""
     df = spark.createDataFrame([(bytearray(b"\x08\x01"),)], "data binary")
     with pytest.raises(FileNotFoundError):
         readers.protobuf_decode(df, "data", "M", str(tmp_path / "nope.desc"))
@@ -1417,93 +1382,6 @@ def test_protobuf_proto2_declared_defaults(spark, tmp_path):
     assert rows[1] == (5, "hey", b"\x01\xff", -1.5, -294967296, "GREEN", True, 0)
 
 
-# ---- tier-1 / tier-2 equivalence (VERDICT r6 item 3) ------------------------
-#
-# The JVM spark-avro / spark-protobuf connectors are NOT on this
-# container's classpath, so these tests skip here — but on any cluster
-# (or future sandbox) where the jars ARE present, they pin that both
-# tiers decode the same files to identical (schema, values). Run with:
-#   pyspark --packages org.apache.spark:spark-avro_2.13:<ver>,\
-#                      org.apache.spark:spark-protobuf_2.13:<ver>
-
-
-def _spark_avro_present(spark) -> bool:
-    try:
-        spark.read.format("avro").schema("x int").load("/nonexistent-avro-probe")
-        return True  # unreachable: a present connector raises PATH_NOT_FOUND
-    except Exception as exc:  # noqa: BLE001 - classifying, not handling
-        return not readers._connector_absent(exc)
-
-
-def _spark_protobuf_present(spark, desc_path: str) -> bool:
-    try:
-        from pyspark.sql.protobuf.functions import from_protobuf
-    except ImportError:
-        return False
-    try:
-        df = spark.createDataFrame([(bytearray(b""),)], "data binary")
-        df.withColumn("data", from_protobuf(df["data"], "Rich", descFilePath=desc_path)).schema
-        return True
-    except Exception as exc:  # noqa: BLE001 - classifying, not handling
-        return not readers._connector_absent(exc)
-
-
-def _rows_canon(df):
-    """Collected rows → sorted list of plain-Python tuples (Row → dict
-    for structs, bytes normalized) so tier outputs compare exactly."""
-    def norm(v):
-        if isinstance(v, (bytes, bytearray)):
-            return bytes(v)
-        if isinstance(v, list):
-            return tuple(norm(x) for x in v)
-        if isinstance(v, dict):
-            return tuple(sorted((k, norm(x)) for k, x in v.items()))
-        if hasattr(v, "asDict"):  # Row
-            return tuple((f, norm(x)) for f, x in v.asDict().items())
-        return v
-    return sorted(repr(tuple(norm(v) for v in r)) for r in df.collect())
-
-
-def test_avro_tier_equivalence_when_connector_present(spark, tmp_path):
-    """spark-avro vs the pure-Python OCF tier on the SAME files (rich
-    schema incl. logical types + cross-namespace fullname refs): equal
-    schemas, equal values. Skips unless the connector is on the
-    classpath (VERDICT r6 item 3 — a union/logical-type divergence
-    would otherwise only surface on a real cluster)."""
-    if not _spark_avro_present(spark):
-        pytest.skip("spark-avro connector not on the classpath")
-    from datapipeline_scripts_spark.sources.avro_pysource import read_avro_py
-
-    rich = str(tmp_path / "rich.avro")
-    _write_avro_reference(spark, rich, 25, codec="deflate")
-    for path in (rich,):
-        jvm_df = spark.read.format("avro").load(path)
-        py_df = read_avro_py(spark, path)
-        assert py_df.schema == jvm_df.schema, (path, py_df.schema, jvm_df.schema)
-        assert _rows_canon(py_df) == _rows_canon(jvm_df), path
-
-
-def test_protobuf_tier_equivalence_when_connector_present(spark, tmp_path):
-    """from_protobuf vs the pure-Python wire tier on the SAME blobs
-    (every scalar type, enum, nested, packed repeated, maps, presence
-    tracking): equal schemas, equal values. Skips unless the
-    spark-protobuf module is on the classpath."""
-    desc_path, blobs = _encode_rich_fixture(spark, tmp_path)
-    if not _spark_protobuf_present(spark, desc_path):
-        pytest.skip("spark-protobuf module not on the classpath")
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    from datapipeline_scripts_spark.sources.protobuf_pywire import decode_protobuf_py
-
-    df = spark.createDataFrame(
-        [(i, bytearray(b)) for i, b in enumerate(blobs)], "id long, data binary"
-    )
-    jvm_df = df.withColumn("data", from_protobuf(df["data"], "Rich", descFilePath=desc_path))
-    py_df = decode_protobuf_py(df, "data", "Rich", desc_path)
-    assert py_df.schema == jvm_df.schema
-    assert _rows_canon(py_df) == _rows_canon(jvm_df)
-
-
 def test_avro_heterogeneous_directory_is_loud(spark, tmp_path):
     """Two container files with DIFFERENT writer schemas in one
     directory: each file decodes by its own schema, so without a guard
@@ -1537,31 +1415,6 @@ def test_avro_heterogeneous_directory_is_loud(spark, tmp_path):
 
 
 # ---- ADVICE r07 closures (round 8) -----------------------------------------
-
-
-def test_connector_absent_cnfe_anchored_to_connector_classes():
-    """ADVICE r07: a ClassNotFoundException only means connector-absent
-    when the missing class IS the connector. A mid-job CNFE for an
-    unrelated class (codec shim, filesystem impl, UDF dependency) is a
-    deployment fault and must re-raise, not reroute to the slow tier."""
-
-    class Cond(Exception):
-        pass
-
-    absent = [
-        Cond("java.lang.ClassNotFoundException: org.apache.spark.sql.avro.AvroFileFormat"),
-        Cond("java.lang.ClassNotFoundException: org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"),
-        Cond("java.lang.ClassNotFoundException: org.apache.spark.sql.v2.avro.AvroScan"),
-    ]
-    genuine = [
-        Cond("java.lang.ClassNotFoundException: com.hadoop.compression.lzo.LzoCodec"),
-        Cond("java.lang.ClassNotFoundException: org.apache.hadoop.fs.s3a.S3AFileSystem"),
-        Cond("Job aborted: java.lang.ClassNotFoundException: com.example.MyUdfDep"),
-    ]
-    for e in absent:
-        assert readers._connector_absent(e), e
-    for e in genuine:
-        assert not readers._connector_absent(e), e
 
 
 def _write_jvm_avro_simple(spark, path: str, schema_json: str, ids) -> None:

@@ -238,24 +238,6 @@ def test_cdc_merge_is_batch_split_invariant(spark, sf_dir, tmp_path):
     assert multi == single and len(multi) > 0
 
 
-def test_transform_with_state_is_gated_without_protobuf(spark, sf_dir):
-    """Spark 4's transformWithStateInPandas needs google.protobuf for
-    its state-server worker — absent in this container, so the wiring
-    must fail fast with remediation (same posture as the spark-avro
-    gate) instead of crashing the streaming query at runtime. If the
-    image ever ships protobuf, the gate opens and this test flips to
-    asserting the wiring constructs."""
-    from datapipeline_scripts_spark.streaming import tws
-    from datapipeline_scripts_spark.streaming.stream_jobs import _events_stream
-
-    if tws.tws_available():
-        df = tws.sessionize_stream_tws(_events_stream(spark, sf_dir))
-        assert df.isStreaming
-    else:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            tws.sessionize_stream_tws(_events_stream(spark, sf_dir))
-
-
 def test_foreach_batch_resumes_incrementally(spark, sf_dir, tmp_path):
     """Checkpoint resume under NEW data: drain half the source, add the
     second half as fresh files, drain again with the same checkpoint —

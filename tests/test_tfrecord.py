@@ -136,15 +136,6 @@ def test_expected_records_manifest_catches_boundary_truncation(spark, tmp_path):
         ).count()
 
 
-def test_pure_tier_always_pinned_even_with_native_wheel():
-    """Both CRC tiers must satisfy the canonical vectors — the pure
-    tier explicitly (it is the oracle the native tier is checked
-    against), and whichever tier `crc32c` currently names."""
-    assert tfr._crc32c_py(b"123456789") == 0xE3069283
-    assert tfr._crc32c_py(b"\x00" * 32) == 0x8A9136AA
-    assert tfr.crc32c(b"123456789") == 0xE3069283
-
-
 def test_gzip_magic_collision_with_raw_length_parses_raw():
     """ADVICE r09 (low): a valid UNCOMPRESSED shard whose first record
     length has low bytes 0x8B1F starts with the 2-byte gzip magic.
